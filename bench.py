@@ -210,6 +210,7 @@ def main() -> None:
     # shuffle, an interpreted hot loop) clears both on any query that
     # matters; uniform inflation of the tiny ones does not.
     regressions: list[str] = []
+    base: dict = {}
     baseline_path = os.path.join(repo_dir, "BENCH_BASELINE.json")
     if os.path.exists(baseline_path):
         with open(baseline_path) as f:

@@ -1571,6 +1571,66 @@ _SSJ_SAMPLE_MOD = 10  # sampled-pair self-check: ~1/10 docs, ~1/100 pairs
 _SSJ_SAMPLE_TARGET = 500
 
 
+def _elem_hash(shingle: Column) -> Column:
+    """The element key both prefix-filtered joins order and join on:
+    ``xxhash64`` of the shingle — 8 fixed bytes instead of the ~20-byte
+    3-word string, so shuffle keys and sorts are narrow. Exactness never
+    rests on it being collision-free: the prefix theorems hold under
+    ANY shared total order and a collision only adds candidates that
+    the exact ``array_intersect`` verify prunes (see
+    ``set_similarity_join``). One definition, so a test can shrink it
+    to a few bits and force collisions through both joins."""
+    return F.xxhash64(shingle)
+
+
+def _shingle_sets(spark: SparkSession, sf: str) -> DataFrame:
+    """``(doc_id, sh)``: each document's distinct 3-gram shingle set,
+    materialized ONCE with ``truncate_lineage`` — both joins read it
+    several times (element stream, verify joins, sample check).
+
+    Not ``persist()``: under AQE every scan of a not-yet-built
+    InMemoryRelation becomes its own ``TableCacheQueryStage`` (20 of
+    them in the set-similarity plan at 1,000 docs, with no exchange
+    reuse), and the entry stays in the session's CacheManager after
+    the call. The checkpointed
+    frame scans as an RDD, so repeated subtrees become
+    ``ReusedExchange`` and nothing is left in the cache."""
+    d = load_table(spark, "documents", sf)
+    return truncate_lineage(
+        d.select("doc_id", F.array_distinct(_shingles(F.col("text"))).alias("sh"))
+    )
+
+
+def _ranked_elements(sets: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The hashed element stream and each doc's elements sorted
+    rarest-first, shared by both prefix-filtered joins.
+
+    ``elems`` is ``(doc_id, n, el)`` with ``n = |sh|``; ``ordered`` is
+    ``(doc_id, n, sorted_el)``, sorted by the global total order
+    (document-frequency of the hash, hash) — a function of the element
+    alone, so every doc shares it. The document frequency rides in as a
+    count over the el partition: ONE exchange of the corpus-sized
+    element stream, where a groupBy(el) + join-back would shuffle it
+    twice. ``n`` counts hash entries, which equals ``|sh|`` even when
+    two shingles of one doc share a hash."""
+    elems = sets.select(
+        "doc_id",
+        F.size("sh").alias("n"),
+        F.explode(F.transform("sh", lambda s: _elem_hash(s))).alias("el"),
+    )
+    ordered = (
+        elems.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("el")))
+        .groupBy("doc_id")
+        .agg(F.sort_array(F.collect_list(F.struct("df", "el"))).alias("ranked"))
+        .select(
+            "doc_id",
+            F.size("ranked").alias("n"),
+            F.transform("ranked", lambda s: s["el"]).alias("sorted_el"),
+        )
+    )
+    return elems, ordered
+
+
 def set_similarity_join(
     spark: SparkSession, sf: str, sample_check: bool = True
 ) -> DataFrame:
@@ -1594,21 +1654,21 @@ def set_similarity_join(
     prune further before the exact verify, which runs only on
     survivors (−25% wall-clock at sf0.1 vs prefix+length alone).
 
-    Scale shape: one vocabulary aggregation (map-side combinable), one
+    Scale shape: one checkpointed shingle-set frame (`_shingle_sets`,
+    one job at call time, nothing left in the session cache) feeds
+    every branch; one df window over the hashed element stream, one
     bounded per-doc sort (doc shingle count), one equi-join on prefix
     elements, exact `array_intersect` verify on candidates only. The
     final threshold is integer-checked (``DEN*inter >= NUM*union``).
+    The sample check's modulus is a 1-row aggregate broadcast into the
+    plan, not a separate count job.
     """
-    d = load_table(spark, "documents", sf)
-    sets = d.select(
-        "doc_id", F.array_distinct(_shingles(F.col("text"))).alias("sh")
-    ).persist()
+    sets = _shingle_sets(spark, sf)
 
-    # The ordering/candidate path runs on xxhash64(shingle) — 8 fixed
-    # bytes — instead of the ~20-byte 3-word shingle string (guide
-    # §2.3, narrower shuffle keys): both corpus-sized exchanges below
-    # (df window by element, regroup by doc) and the candidate
-    # self-join carry longs, and the window/array sorts compare longs.
+    # The ordering/candidate path runs on _elem_hash(shingle), a long:
+    # both corpus-sized exchanges (df window by element, regroup by
+    # doc) and the candidate self-join carry longs, and the
+    # window/array sorts compare longs.
     # EXACTNESS IS PRESERVED, not assumed: the prefix theorem holds
     # under ANY shared total order, and (df-of-hash, hash) is a
     # consistent total order because it is a function of the element
@@ -1621,26 +1681,12 @@ def set_similarity_join(
     # qualifying pair's first shared REAL element yields a join row
     # whose bound is the valid one (extra collision rows only add
     # OR-branches). n = |distinct shingles| is computed on the true
-    # sets, unchanged.
-    elems = sets.select(
-        "doc_id", F.explode(F.transform("sh", lambda s: F.xxhash64(s))).alias("el")
-    )
-
-    # Per-doc elements sorted rarest-first; keep the prefix only. The
-    # document frequency rides in as a count over the el partition —
-    # ONE exchange of the corpus-sized element stream, where the r10
-    # groupBy(el)+join-back shape shuffled it twice (once into the df
-    # aggregate, once into the SMJ) and paid both join-side sorts.
-    ordered = (
-        elems.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("el")))
-        .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list(F.struct("df", "el"))).alias("ranked"))
-        .select(
-            "doc_id",
-            F.size("ranked").alias("n"),
-            F.transform("ranked", lambda s: s["el"]).alias("sorted_el"),
-        )
-    )
+    # sets, unchanged. Collisions INSIDE one doc are covered too: the
+    # colliding shingles sort adjacent under the shared order, so a
+    # pair's first shared hash still precedes all its real shared
+    # elements on both sides.
+    # Per-doc elements sorted rarest-first; keep the prefix only.
+    _, ordered = _ranked_elements(sets)
     # p = n - ceil(t*n) + 1, ceil via integer arithmetic.
     p = F.col("n") - F.floor((_SSJ_NUM * F.col("n") + _SSJ_DEN - 1) / _SSJ_DEN).cast("int") + 1
     prefixes = ordered.select(
@@ -1710,19 +1756,25 @@ def set_similarity_join(
     # ``pq_adc_search`` recall_ok pattern, `similarity.py`).
     # scale-adaptive modulus: floor at _SSJ_SAMPLE_MOD, grow with the
     # corpus so the sampled slice stays ~_SSJ_SAMPLE_TARGET docs (see
-    # the constant's comment; parquet-metadata count, one cheap job)
-    n_docs = d.count()
-    eff_mod = max(
-        _SSJ_SAMPLE_MOD, -(-n_docs // _SSJ_SAMPLE_TARGET)
+    # the constant's comment). Computed in the plan as a 1-row
+    # aggregate over the checkpointed sets, broadcast into the sample
+    # filter — no separate count job before the query.
+    eff_mod = sets.agg(
+        F.greatest(
+            F.lit(_SSJ_SAMPLE_MOD),
+            F.floor(
+                (F.count(F.lit(1)) + _SSJ_SAMPLE_TARGET - 1) / _SSJ_SAMPLE_TARGET
+            ),
+        ).cast("long").alias("_mod")
     )
     in_sample = (
         F.conv(
             F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
         ).cast("long")
-        % eff_mod
+        % F.col("_mod")
         == 0
     )
-    sample = sets.filter(in_sample)
+    sample = sets.crossJoin(F.broadcast(eff_mod)).filter(in_sample).drop("_mod")
     sa = sample.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     sb = sample.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     s_inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
@@ -2628,37 +2680,20 @@ def containment_join(spark: SparkSession, sf: str) -> DataFrame:
     (``DEN*nb >= NUM*na``, since the overlap can't exceed ``nb``)
     prunes before the exact ``array_intersect`` verify on candidates.
 
-    Scale shape: candidate join is Σ_el prefix-df(el)·df(el), bounded by
-    the rarest-first prefix (short postings on the A side), never
-    docs²; verification touches candidate pairs only.
+    Scale shape: one checkpointed shingle-set frame (`_shingle_sets`,
+    one job at call time, nothing left in the session cache) feeds the
+    element stream and both verify joins. The candidate join is
+    Σ_el prefix-df(el)·df(el), bounded by the rarest-first prefix
+    (short postings on the A side), never docs²; verification touches
+    candidate pairs only.
     """
-    d = load_table(spark, "documents", sf)
-    sets = d.select(
-        "doc_id", F.array_distinct(_shingles(F.col("text"))).alias("sh")
-    ).persist()
+    sets = _shingle_sets(spark, sf)
 
-    # Hash-keyed element stream, exactly as in set_similarity_join
-    # (guide §2.3): the ordering and the candidate join run on
-    # xxhash64(shingle); the prefix pigeonhole holds under any shared
-    # total order, collisions only add candidates, and the exact
-    # array_intersect verify prunes them — output unchanged.
-    elems = sets.select(
-        "doc_id",
-        F.size("sh").alias("n"),
-        F.explode(F.transform("sh", lambda s: F.xxhash64(s))).alias("el"),
-    )
-    # df as a window count over el: one exchange of the element stream
-    # instead of groupBy(el) + join-back (see set_similarity_join).
-    ordered = (
-        elems.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("el")))
-        .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list(F.struct("df", "el"))).alias("ranked"))
-        .select(
-            "doc_id",
-            F.size("ranked").alias("n"),
-            F.transform("ranked", lambda s: s["el"]).alias("sorted_el"),
-        )
-    )
+    # Hash-keyed element stream shared with set_similarity_join: the
+    # prefix pigeonhole holds under any shared total order, collisions
+    # only add candidates, and the exact array_intersect verify prunes
+    # them — output unchanged.
+    elems, ordered = _ranked_elements(sets)
     # prefix length p = n - ceil(t*n) + 1, ceil in integer arithmetic
     p = (
         F.col("n")

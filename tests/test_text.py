@@ -766,3 +766,53 @@ def test_set_similarity_sample_check_flips_on_lost_pair(spark, sf_dir, monkeypat
         .count()
     )
     assert bad == 1
+
+
+@pytest.mark.parametrize("bits", [8, 12])
+def test_prefix_joins_exact_under_forced_hash_collisions(spark, sf_dir, monkeypatch, bits):
+    """Exactness of both prefix-filtered joins does not rest on the
+    element hash being collision-free: with ``_elem_hash`` cut to
+    ``bits`` bits, distinct shingles collide across AND inside
+    documents, and both joins must still equal their brute-force
+    oracles."""
+    import multi_attribute_join_search_with_mapreduce_spark.operators.textops as t
+
+    from .conftest import assert_df_equals_duckdb
+
+    mask = (1 << bits) - 1
+    monkeypatch.setattr(t, "_elem_hash", lambda s: F.xxhash64(s).bitwiseAND(F.lit(mask)))
+
+    # not vacuous: some document holds two shingles with one hash
+    d = t.load_table(spark, "documents", sf_dir)
+    sh = F.array_distinct(t._shingles(F.col("text")))
+    n_colliding = d.filter(
+        F.size(F.array_distinct(F.transform(sh, t._elem_hash))) < F.size(sh)
+    ).count()
+    assert n_colliding > 0
+
+    assert_df_equals_duckdb(t.set_similarity_join(spark, sf_dir), t.SET_SIMILARITY_SQL, sf_dir)
+    assert_df_equals_duckdb(t.containment_join(spark, sf_dir), t.CONTAINMENT_SQL, sf_dir)
+
+
+def test_prefix_joins_leave_no_cache_behind(spark, sf_dir):
+    """Both joins read their shingle sets from one checkpointed frame:
+    the executed plan has no in-memory cache scan (under AQE each scan
+    of an unbuilt cache is its own query stage), the set-similarity
+    plan reuses exchanges across its branches, and a call adds nothing
+    to the session's CacheManager."""
+    from multi_attribute_join_search_with_mapreduce_spark.operators.textops import (
+        containment_join,
+        set_similarity_join,
+    )
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    for fn in (set_similarity_join, containment_join):
+        df = fn(spark, sf_dir)
+        assert df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" not in plan, fn.__name__
+        assert "TableCacheQueryStage" not in plan, fn.__name__
+        if fn is set_similarity_join:
+            assert "ReusedExchange" in plan
+    assert cache.numCachedEntries() == before

@@ -175,6 +175,9 @@ def main() -> None:
     args = ap.parse_args()
     if args.queries:
         want = {q.strip() for q in args.queries.split(",")}
+        unknown = sorted(want - {n for n, _ in HEAD_QUERIES})
+        if unknown:
+            ap.error(f"--queries names not in HEAD_QUERIES: {', '.join(unknown)}")
         HEAD_QUERIES[:] = [(n, r) for n, r in HEAD_QUERIES if n in want]
     if args.build:
         build(args.replicas)
