@@ -13,6 +13,12 @@ reference's ``Seq_Search.py:78-93`` and ``Par_Search.py:89-119``):
 
 Spark-first design — one lazy Catalyst DAG, zero driver collects:
 
+- one search core, :func:`_search_stages`, answers a *batch* of query
+  tables in one pass over the posting index; the single search is a
+  batch of one. Only the top-k tails differ: the single search's
+  ``orderBy().limit()`` plans as ``TakeOrderedAndProject``, the batch
+  ranks per ``qid`` with a window. The ``mapkey`` strategy is the
+  reference-literal rendition, kept as a differential twin;
 - the reference probes Vertica once per query column and collects key
   lists to the driver (``Par_Search.py:172``, ``handlers.py:69-71``);
   here the probe is a **broadcast semi-join** of the posting index
@@ -25,8 +31,7 @@ Spark-first design — one lazy Catalyst DAG, zero driver collects:
   input by orders of magnitude;
 - small sides (query keys, mappings) are explicitly ``broadcast()`` —
   a query table is thousands of rows against a 100 TB index;
-- aggregation is partial/final hash agg; top-k is
-  ``TakeOrderedAndProject`` via ``orderBy().limit()``.
+- aggregation is partial/final hash agg.
 
 Deterministic divergences from the reference (documented per SURVEY.md
 §2.11 "quirks to not replicate blindly"):
@@ -155,17 +160,25 @@ def _probe_index(postings: DataFrame, keys: DataFrame, hint) -> DataFrame:
     return postings.join(hint(keys), "key", "left_semi")
 
 
-def _query_mappings(query_df: DataFrame, attrs: list[str]) -> DataFrame:
-    """Normalize + dedup the query table; unpivot to (key, MapKey) pairs."""
+def _query_rows(query_df: DataFrame, attrs: list[str], dedup: bool) -> DataFrame:
+    """Normalize the query attributes into ``_a0.._a{n-1}``, drop rows
+    where any of them normalizes to empty, optionally dedup, and add the
+    row identity ``MapKey``. The normalizer's alphabet is ``[a-z0-9 ]``,
+    so the US-joined MapKey is injective over the normalized tuple."""
+    cols = [f"_a{i}" for i in range(len(attrs))]
     norm = query_df.select(
-        *[normalize_col(F.col(a)).alias(f"_a{i}") for i, a in enumerate(attrs)]
+        *[normalize_col(F.col(a)).alias(c) for a, c in zip(attrs, cols)]
     )
-    for i in range(len(attrs)):
-        norm = norm.filter(F.col(f"_a{i}") != "")
-    norm = norm.dropDuplicates()
-    norm = norm.withColumn(
-        "MapKey", F.concat_ws(MAPKEY_SEP, *[F.col(f"_a{i}") for i in range(len(attrs))])
-    )
+    for c in cols:
+        norm = norm.filter(F.col(c) != "")
+    if dedup:
+        norm = norm.dropDuplicates()
+    return norm.withColumn("MapKey", F.concat_ws(MAPKEY_SEP, *cols))
+
+
+def _query_mappings(query_df: DataFrame, attrs: list[str]) -> DataFrame:
+    """Normalized, deduped query rows unpivoted to (key, MapKey) pairs."""
+    norm = _query_rows(query_df, attrs, dedup=True)
     pairs = [
         norm.select(F.col(f"_a{i}").alias("key"), "MapKey") for i in range(len(attrs))
     ]
@@ -206,7 +219,8 @@ def multi_attribute_join_search(
     Strategies (identical results, differential-tested against each
     other and the oracle):
 
-    - ``"rare_key"`` (default): selectivity-ordered probing. Each query
+    - ``"rare_key"`` (default): selectivity-ordered probing through the
+      search core (:func:`_search_stages`) as a batch of one. Each query
       row joins postings on its globally *rarest* attribute value only;
       the remaining attributes are verified against a per-``(table,
       row)`` key set. Partial matches (row hits one common attribute
@@ -233,7 +247,7 @@ def multi_attribute_join_search(
     """
     _validate_top_n(top_n)
     if strategy in ("rare_key", "row", "cell"):
-        st = _rare_key_stages(postings, query_df, attrs, k, broadcast_probe, top_n)
+        st = search_stages(postings, query_df, attrs, k, broadcast_probe, top_n)
         return st.tables, st.columns
     if strategy != "mapkey":
         raise ValueError(f"unknown strategy: {strategy!r}")
@@ -287,13 +301,19 @@ def multi_attribute_join_search(
         .filter(F.col("_rn") <= rank_n)
         .drop("_rn")
     )
+    return _top_k(top_cols, k)
+
+
+def _top_k(top_cols: DataFrame, k: int) -> tuple[DataFrame, DataFrame]:
+    """The single search's tail: top-k tables and top-2k columns as
+    ``orderBy().limit()``, which plans as ``TakeOrderedAndProject``."""
     table_scores = (
         top_cols.groupBy("table")
         .agg(F.sum("join_score").alias("join_score"))
         .orderBy(F.desc("join_score"), F.asc("table"))
         .limit(k)
     )
-    column_scores = top_cols.orderBy(
+    column_scores = top_cols.select("table", "column", "join_score").orderBy(
         F.desc("join_score"), F.asc("table"), F.asc("column")
     ).limit(2 * k)
     return table_scores, column_scores
@@ -307,65 +327,102 @@ def search_stages(
     broadcast_probe: bool | None = None,
     top_n: int | None = None,
 ) -> SearchStages:
-    """Public phase-exposing variant of the default (rare_key) search —
+    """Public phase-exposing form of the default (rare_key) search —
     used by ``bench.py`` for the reference's 4-phase wall-clock
-    breakdown (``log_runtime``, ``Par_Search.py:16-32``)."""
-    _validate_top_n(top_n)
-    return _rare_key_stages(postings, query_df, attrs, k, broadcast_probe, top_n)
+    breakdown (``log_runtime``, ``Par_Search.py:16-32``). It runs the
+    search core as a batch of one."""
+    if broadcast_probe is None:
+        # Decide from the raw query table, not from the core's derived
+        # query rows (see _probe_broadcastable).
+        broadcast_probe = _probe_broadcastable(query_df)
+    mappings, probed, matched, top_cols = _search_stages(
+        postings, [("", query_df, attrs)], broadcast_probe, top_n
+    )
+    tables, columns = _top_k(top_cols, k)
+    return SearchStages(
+        mappings=mappings,
+        probed=probed,
+        matched=matched.select("table", "column"),
+        tables=tables,
+        columns=columns,
+    )
 
 
-def _rare_key_stages(
+def _search_stages(
     postings: DataFrame,
-    query_df: DataFrame,
-    attrs: list[str],
-    k: int = DEFAULT_TOP_K,
-    broadcast_probe: bool | None = None,
-    top_n: int | None = None,
-) -> SearchStages:
-    """Selectivity-ordered probe (see :func:`multi_attribute_join_search`).
+    entries: list[tuple],
+    broadcast_probe: bool | None,
+    top_n: int | None,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The search core: the selectivity-ordered (rare-key) pipeline for
+    a batch of ``(qid, query_df, attrs[, top_n])`` entries, one lazy DAG.
 
-    Pipeline, one lazy DAG:
+    Returns ``(mappings, probed, matched, top_cols)``: the unpivoted
+    query rows, the deduped probed postings, one row per matched column
+    attribution, and the per-``(qid, table)`` rank-filtered column
+    scores that the callers' top-k tails consume.
 
-    1. normalize+dedup query rows; broadcast-semi-join probe of the
-       (persisted) posting index;
-    2. ``freq``: frequency of each probed key, computed straight off the
+    1. query rows ``(qid, MapKey, _attrs, _n, _rank_n)`` from every
+       entry, unioned and deduplicated once; attributes travel as an
+       ``array<string>`` so queries of different widths share one DAG;
+    2. broadcast-semi-join probe of the posting index with the union
+       key set — index-side work depends only on that union, so it is
+       paid once per batch, not once per query;
+    3. ``freq``: frequency of each probed key, computed straight off the
        cheap pre-dedup probe (the rarest-attribute choice is a
        selectivity heuristic — any consistent frequency source yields
        identical results because verification enforces the semantics);
-    3. each query row picks its lowest-frequency attribute as
+    4. each ``(qid, MapKey)`` picks its lowest-frequency attribute as
        ``probe_key`` (ties break on key text) — rows with any
        zero-frequency attribute are dropped (they cannot match);
-    4. ``kc``: ONE ``(table,row)`` shuffle builds the per-row
-       key->column map AND applies the pre-join reduction as a
-       post-aggregation size filter (``size(_m) >= n`` — the thesis's
-       window trick, Par_Search.py:244-250, folded into the aggregate
-       so no separate window pass);
-    5. ``hits`` = kc exploded back to key granularity (fan-out ≤ the
-       table's indexed-column count, ≤3 here) ⨝ broadcast probe on
+    5. ``kc``: ONE ``(table,row)`` shuffle builds the per-row
+       key->column map ``_m`` AND applies the pre-join reduction at the
+       batch's narrowest width as a post-aggregation size filter (the
+       thesis's window trick, Par_Search.py:244-250, folded into the
+       aggregate so no separate window pass);
+    6. ``hits`` = kc exploded back to key granularity (fan-out ≤ the
+       table's indexed-column count) ⨝ broadcast probe on
        ``key = probe_key``, carrying ``_m`` along — verification and
        column attribution are then native map lookups with NO
        (table,row) self-join. This matters for more than readability:
        a self-join re-aliases expression ids, defeating Spark's
        exchange-reuse rule, so the r1 shape recomputed the probe+dedup
-       subtree (and its shuffle) three times per query.
+       subtree (and its shuffle) three times per query;
+    7. verification rechecks the pre-join reduction at each query's own
+       width (``size(_m) >= _n``) and requires every attribute among
+       the map's keys; scoring ranks column scores per ``(qid, table)``
+       under each entry's bound ``_rank_n`` (entry ``top_n`` >
+       batch-wide ``top_n`` > attribute count).
     """
-    hint = _hinter(query_df, broadcast_probe)
-    n = len(attrs)
-    rank_n = n if top_n is None else top_n
-    norm = query_df.select(
-        *[normalize_col(F.col(a)).alias(f"_a{i}") for i, a in enumerate(attrs)]
-    )
-    for i in range(n):
-        norm = norm.filter(F.col(f"_a{i}") != "")
-    norm = norm.dropDuplicates()
-    norm = norm.withColumn(
-        "MapKey", F.concat_ws(MAPKEY_SEP, *[F.col(f"_a{i}") for i in range(n)])
-    )
-    attr_cols = [F.col(f"_a{i}") for i in range(n)]
-    melted = norm.select(
-        "MapKey", F.explode(F.array(*attr_cols)).alias("key")
-    )
+    _validate_top_n(top_n)
+    parts = []
+    for qid, query_df, attrs, *rest in entries:
+        entry_top_n = rest[0] if rest else None
+        _validate_top_n(entry_top_n)
+        eff_top_n = top_n if entry_top_n is None else entry_top_n
+        n = len(attrs)
+        rank_n = n if eff_top_n is None else eff_top_n
+        norm = _query_rows(query_df, attrs, dedup=False)
+        parts.append(
+            norm.select(
+                F.lit(qid).alias("qid"),
+                "MapKey",
+                F.array(*[f"_a{i}" for i in range(n)]).alias("_attrs"),
+                F.lit(n).alias("_n"),
+                F.lit(rank_n).alias("_rank_n"),
+            )
+        )
+    # ONE dedup over the union instead of one dropDuplicates() shuffle
+    # per entry. (qid, MapKey) determines every other column, so a
+    # full-row dedup keeps the same rows as a (qid, MapKey) subset dedup
+    # without the subset form's first() aggregates, which cost a batch
+    # of one extra Spark jobs.
+    qrows = reduce(DataFrame.unionByName, parts).dropDuplicates()
+    melted = qrows.select("qid", "MapKey", "_n", F.explode("_attrs").alias("key"))
     keys = melted.select("key").distinct()
+    # A fact-sized batch degrades to AQE-chosen strategies instead of a
+    # forced broadcast.
+    hint = _hinter(qrows, broadcast_probe)
 
     probed = _probe_index(postings, keys, hint)
 
@@ -374,90 +431,68 @@ def _rare_key_stages(
     # on key — it shares nothing heavy with the match pipeline below.
     freq = probed.groupBy("key").agg(F.count(F.lit(1)).alias("_freq"))
     with_freq = freq.join(hint(melted), "key")
-    w_rare = Window.partitionBy("MapKey").orderBy(F.asc("_freq"), F.asc("key"))
+    w_q = Window.partitionBy("qid", "MapKey")
     rarest = (
-        with_freq.withColumn("_rn", F.row_number().over(w_rare))
-        .withColumn("_n_present", F.count(F.lit(1)).over(Window.partitionBy("MapKey")))
-        # early drop: an attr instance with zero lake frequency means the
-        # row can never match (verification would drop it later anyway)
-        .filter((F.col("_rn") == 1) & (F.col("_n_present") == n))
-        .select("MapKey", F.col("key").alias("probe_key"))
+        with_freq.withColumn(
+            "_rn", F.row_number().over(w_q.orderBy(F.asc("_freq"), F.asc("key")))
+        )
+        .withColumn("_n_present", F.count(F.lit(1)).over(w_q))
+        .filter((F.col("_rn") == 1) & (F.col("_n_present") == F.col("_n")))
+        .select("qid", "MapKey", F.col("key").alias("probe_key"))
     )
-    probe = rarest.join(norm, "MapKey")
+    probe = rarest.join(qrows, ["qid", "MapKey"])
 
     # THE (table,row) shuffle — the only fact-sized exchange in the
-    # pipeline. Dedup (min column per key) and the per-row key/column
-    # set build both run on it (groupBy(table,row[,key]) clustering is
-    # satisfied by hashpartitioning(table,row)); the pre-join reduction
-    # is the size filter on the aggregated array.
+    # pipeline. Dedup (min column per key) and the per-row key->column
+    # map build both run on it (groupBy(table,row[,key]) clustering is
+    # satisfied by hashpartitioning(table,row)).
     deduped = (
         probed.repartition("table", "row")
         .groupBy("table", "row", "key")
         .agg(F.min("column").alias("column"))
     )
     # key->column MAP rather than an array of structs: membership tests
-    # and column attribution become GetMapValue — whole-stage-codegen
-    # expressions — where array filter/element_at higher-order functions
-    # are CodegenFallback (interpreted per hit; measured 2s of the 3s
-    # 3-attr search when the query table is the lake table itself and
-    # every row verifies). Keys are unique per (table,row) by the
-    # dedup aggregate, so the map is well-defined.
+    # and column attribution become GetMapValue / array_except —
+    # whole-stage-codegen expressions — where higher-order functions
+    # (filter, forall) are CodegenFallback, interpreted per hit
+    # (measured 2s of the 3s 3-attr search when the query table is the
+    # lake table itself and every row verifies). Keys are unique per
+    # (table,row) by the dedup aggregate, so the map is well-defined.
     kc = (
         deduped.groupBy("table", "row")
         .agg(
             F.map_from_entries(F.collect_list(F.struct("key", "column"))).alias("_m")
         )
-        .filter(F.size("_m") >= n)
+        .filter(F.size("_m") >= min(len(e[2]) for e in entries))
     )
 
-    # Back to key granularity (fan-out = keys per row ≤ indexed columns
-    # per table) and broadcast-join the probe; _m rides along so
-    # verification + column attribution are map lookups — no second
-    # pass over the postings, no (table,row) self-join.
     hits = kc.select(
         "table", "row", "_m", F.explode(F.map_keys("_m")).alias("key")
     ).join(hint(probe), F.col("key") == F.col("probe_key"))
-
-    verified = hits
-    for i in range(n):
-        verified = verified.filter(F.col("_m")[F.col(f"_a{i}")].isNotNull())
+    verified = hits.filter(
+        (F.size("_m") >= F.col("_n"))
+        & (F.size(F.array_except("_attrs", F.map_keys("_m"))) == 0)
+    )
 
     matched = verified.select(
-        "table",
-        "row",
-        "MapKey",
-        "_m",
-        F.explode(F.array(*[F.col(f"_a{i}") for i in range(n)])).alias("_mk"),
-    ).select(
-        "table",
-        F.col("_m")[F.col("_mk")].alias("column"),
-    )
+        "qid", "_rank_n", "table", "_m", F.explode("_attrs").alias("_mk")
+    ).select("qid", "_rank_n", "table", F.col("_m")[F.col("_mk")].alias("column"))
 
-    col_scores_all = matched.groupBy("table", "column").agg(
+    # _rank_n is constant per qid, so grouping on it adds no groups; in
+    # a batch of one it stays a literal, and the rank filter becomes a
+    # WindowGroupLimit that trims rows before the window's shuffle.
+    col_scores_all = matched.groupBy("qid", "_rank_n", "table", "column").agg(
         F.count(F.lit(1)).alias("join_score")
     )
-    w_rank = Window.partitionBy("table").orderBy(F.desc("join_score"), F.asc("column"))
+    w_rank = Window.partitionBy("qid", "table").orderBy(
+        F.desc("join_score"), F.asc("column")
+    )
     top_cols = (
         col_scores_all.withColumn("_rn", F.row_number().over(w_rank))
-        .filter(F.col("_rn") <= rank_n)
-        .drop("_rn")
+        .filter(F.col("_rn") <= F.col("_rank_n"))
+        .drop("_rn", "_rank_n")
     )
-    table_scores = (
-        top_cols.groupBy("table")
-        .agg(F.sum("join_score").alias("join_score"))
-        .orderBy(F.desc("join_score"), F.asc("table"))
-        .limit(k)
-    )
-    column_scores = top_cols.orderBy(
-        F.desc("join_score"), F.asc("table"), F.asc("column")
-    ).limit(2 * k)
-    return SearchStages(
-        mappings=melted,
-        probed=deduped,
-        matched=matched,
-        tables=table_scores,
-        columns=column_scores,
-    )
+    return melted, deduped, matched, top_cols
 
 
 def multi_attribute_join_search_batch(
@@ -483,133 +518,19 @@ def multi_attribute_join_search_batch(
     plan are CONSTANT in B (gated by ``tests/test_search_batch.py``);
     B sequential searches would pay the fact-sized shuffle B times.
 
-    Differences from :func:`_rare_key_stages` are representational:
-    attributes travel as an ``array<string>`` column (so queries with
-    different attribute counts share one DAG) and every per-query
-    stage keys on ``(qid, MapKey)`` instead of ``MapKey``.
+    The single search is this pipeline with one entry: both run the
+    search core :func:`_search_stages`. Only the top-k tail differs —
+    here a per-``qid`` window instead of ``orderBy().limit()``.
 
-    Heterogeneous dialects (VERDICT r8 task #7): each batch entry may
-    carry its own scoring rank bound as an optional 4th element —
+    Heterogeneous dialects: each batch entry may carry its own scoring
+    rank bound as an optional 4th element —
     ``(qid, query_df, attrs, entry_top_n)`` — so one batch can mix a
     Seq-dialect caller (``top_n=2``) with Par-default callers. The
     bound rides the broadcast query metadata as ``_rank_n`` (like
     ``_n``), so the shared index-side plan is unchanged. Precedence:
     entry ``top_n`` > batch-wide ``top_n`` > that entry's attr count.
     """
-    _validate_top_n(top_n)
-    qrows = None
-    for entry in batch:
-        qid, query_df, attrs = entry[0], entry[1], entry[2]
-        entry_top_n = entry[3] if len(entry) > 3 else None
-        _validate_top_n(entry_top_n)
-        eff_top_n = entry_top_n if entry_top_n is not None else top_n
-        n = len(attrs)
-        rank_n = eff_top_n if eff_top_n is not None else n
-        norm = query_df.select(
-            *[normalize_col(F.col(a)).alias(f"_a{i}") for i, a in enumerate(attrs)]
-        )
-        for i in range(n):
-            norm = norm.filter(F.col(f"_a{i}") != "")
-        q = norm.select(
-            F.lit(qid).alias("qid"),
-            F.concat_ws(MAPKEY_SEP, *[F.col(f"_a{i}") for i in range(n)]).alias(
-                "MapKey"
-            ),
-            F.array(*[F.col(f"_a{i}") for i in range(n)]).alias("_attrs"),
-            F.lit(n).alias("_n"),
-            F.lit(rank_n).alias("_rank_n"),
-        )
-        qrows = q if qrows is None else qrows.unionByName(q)
-    # ONE dedup exchange over the unioned query metadata instead of one
-    # dropDuplicates() shuffle per entry: the normalizer's alphabet is
-    # [a-z0-9 ], so the US-joined MapKey is injective over the
-    # normalized attribute tuple (within a qid, whose n is fixed) and
-    # (qid, MapKey) determines every other column — same rows as the
-    # per-entry dedup, B exchanges fewer per plan instantiation.
-    qrows = qrows.dropDuplicates(["qid", "MapKey"])
-
-    melted = qrows.select("qid", "MapKey", "_n", F.explode("_attrs").alias("key"))
-    keys = melted.select("key").distinct()
-    # Same hint discipline as the single-query form: the union of B
-    # query tables is still probe-side, so a fact-sized batch degrades
-    # to AQE-chosen strategies instead of a forced broadcast.
-    hint = _hinter(qrows, broadcast_probe)
-
-    probed = _probe_index(postings, keys, hint)
-
-    freq = probed.groupBy("key").agg(F.count(F.lit(1)).alias("_freq"))
-    with_freq = freq.join(hint(melted), "key")
-    w_rare = Window.partitionBy("qid", "MapKey").orderBy(F.asc("_freq"), F.asc("key"))
-    rarest = (
-        with_freq.withColumn("_rn", F.row_number().over(w_rare))
-        .withColumn(
-            "_n_present", F.count(F.lit(1)).over(Window.partitionBy("qid", "MapKey"))
-        )
-        .filter((F.col("_rn") == 1) & (F.col("_n_present") == F.col("_n")))
-        .select("qid", "MapKey", F.col("key").alias("probe_key"))
-    )
-    probe = rarest.join(qrows, ["qid", "MapKey"])
-
-    # Index-side heavy path — batch-invariant, built once over the
-    # union key set (same shape as the single-query plan).
-    deduped = (
-        probed.repartition("table", "row")
-        .groupBy("table", "row", "key")
-        .agg(F.min("column").alias("column"))
-    )
-    min_n = min(len(entry[2]) for entry in batch)
-    # key->column map for codegen-able verification — see the
-    # _rare_key_stages comment (array-of-struct higher-order lookups
-    # are interpreted per hit).
-    kc = (
-        deduped.groupBy("table", "row")
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("key", "column"))).alias("_m")
-        )
-        .filter(F.size("_m") >= min_n)
-    )
-
-    hits = kc.select(
-        "table",
-        "row",
-        "_m",
-        F.explode(F.map_keys("_m")).alias("key"),
-    ).join(hint(probe), F.col("key") == F.col("probe_key"))
-
-    # forall over the heterogeneous attr array: presence of every attr
-    # in the row's key map. The map lookup inside the lambda is still
-    # a GetMapValue over the single _m map — only the n_attrs-sized
-    # outer loop is a higher-order function.
-    verified = hits.filter(
-        F.forall("_attrs", lambda a: F.element_at(F.col("_m"), a).isNotNull())
-    )
-
-    matched = verified.select(
-        "qid",
-        "_rank_n",
-        "table",
-        F.explode("_attrs").alias("_mk"),
-        "_m",
-    ).select(
-        "qid",
-        "_rank_n",
-        "table",
-        F.col("_m")[F.col("_mk")].alias("column"),
-    )
-
-    col_scores_all = matched.groupBy("qid", "table", "column").agg(
-        F.count(F.lit(1)).alias("join_score"), F.min("_rank_n").alias("_rank_n")
-    )
-    w_rank = Window.partitionBy("qid", "table").orderBy(
-        F.desc("join_score"), F.asc("column")
-    )
-    # Per-query scoring dialect: _rank_n is each entry's resolved rank
-    # bound (entry top_n > batch top_n > attr count), constant per qid.
-    top_cols = (
-        col_scores_all.withColumn("_rn", F.row_number().over(w_rank))
-        .filter(F.col("_rn") <= F.col("_rank_n"))
-        .drop("_rn")
-    )
+    _, _, _, top_cols = _search_stages(postings, batch, broadcast_probe, top_n)
     w_tab = Window.partitionBy("qid").orderBy(F.desc("join_score"), F.asc("table"))
     table_scores = (
         top_cols.groupBy("qid", "table")
@@ -625,7 +546,7 @@ def multi_attribute_join_search_batch(
     column_scores = (
         top_cols.withColumn("_rn", F.row_number().over(w_col))
         .filter(F.col("_rn") <= 2 * k)
-        .drop("_rn", "_rank_n")
+        .drop("_rn")
         .orderBy("qid", F.desc("join_score"), F.asc("table"), F.asc("column"))
     )
     return table_scores, column_scores

@@ -61,7 +61,7 @@ def join_search_spark_sql_text(
     """One Spark SQL statement computing the §2.11 contract.
 
     Mirrors the DataFrame rare-key plan (``operators/search.py:
-    _rare_key_stages``): one (table,row) aggregation builds the per-row
+    _search_stages``): one (table,row) aggregation builds the per-row
     key/column set with the pre-join reduction as a size filter, the
     rarest query attribute probes it at key granularity, and
     verification/column attribution are native map lookups — the same

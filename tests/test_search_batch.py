@@ -276,3 +276,54 @@ def test_batch8_heterogeneous_index_work_constant(spark, sf_dir):
         t, _ = multi_attribute_join_search(postings, query_df, attrs)
         want |= {(qid, r.table, r.join_score) for r in t.collect()}
     assert got == want
+
+
+def test_mixed_width_batch_keeps_each_querys_own_reduction(spark):
+    """The pre-join reduction counts distinct probed keys per lake row
+    at each query's OWN width: the (k, k) query row needs two distinct
+    keys of its query in a lake row, so it matches nothing here — alone,
+    and beside a 1-attribute batch-mate whose narrower width must not
+    relax the 2-attribute query's check."""
+    postings = spark.createDataFrame(
+        [("k", 1, 0, 10), ("k", 1, 1, 11), ("z", 1, 1, 11)],
+        "key string, table int, column int, row bigint",
+    )
+    q = spark.createDataFrame([("k", "k")], "x string, y string")
+    single, _ = multi_attribute_join_search(postings, q, ["x", "y"])
+    assert single.collect() == []
+    one, _ = multi_attribute_join_search(postings, q, ["x"])
+    tables, _ = multi_attribute_join_search_batch(
+        postings, [("two", q, ["x", "y"]), ("one", q, ["x"])]
+    )
+    got = {(r.qid, r.table, r.join_score) for r in tables.collect()}
+    assert got == {("one", r.table, r.join_score) for r in one.collect()} != set()
+
+
+def test_verification_runs_under_whole_stage_codegen(spark, sf_dir):
+    """Verification is codegen'd map-key arithmetic — no ``forall``
+    higher-order function (CodegenFallback, interpreted per hit) — for
+    a single search and a 3-entry batch alike; and the single search's
+    outputs keep their exchange-free ``TakeOrderedAndProject`` top-k."""
+    import re
+
+    postings, batch = _batch(spark, sf_dir)
+    tables, columns = multi_attribute_join_search(postings, batch[0][1], ATTRS2)
+    b_tables, b_columns = multi_attribute_join_search_batch(postings, batch)
+    for name, df in [
+        ("tables", tables),
+        ("columns", columns),
+        ("batch tables", b_tables),
+        ("batch columns", b_columns),
+    ]:
+        df.collect()
+        executed = df._jdf.queryExecution().executedPlan().toString()
+        assert "forall(" not in executed, name
+        # AQE's final plan: its operator lines carry the *(n) codegen prefix
+        plan = executed.split("== Initial Plan ==")[0]
+        verify = [ln for ln in plan.splitlines() if "array_except" in ln]
+        assert verify, f"{name}: no array_except verification in plan"
+        for ln in verify:
+            assert re.match(r"\s*(:\s*)*\+- \*\(\d+\) ", ln), f"{name}: {ln.strip()}"
+        if not name.startswith("batch"):
+            root = r"== Final Plan ==\s+(ResultQueryStage \d+\s+\+- )?TakeOrderedAndProject"
+            assert re.search(root, plan), f"{name}: {plan[:400]}"
