@@ -191,9 +191,13 @@ def main(argv: list[str] | None = None) -> int:
         from multi_attribute_join_search_with_mapreduce_spark.index import fsck_floored_store
         from multi_attribute_join_search_with_mapreduce_spark.session import get_spark
 
-        report = fsck_floored_store(
-            get_spark("majs-cli"), args.fsck_store, repair=args.repair
-        )
+        try:
+            report = fsck_floored_store(
+                get_spark("majs-cli"), args.fsck_store, repair=args.repair
+            )
+        except ValueError as exc:
+            print(f"error: {exc}", file=sys.stderr)
+            return 2
         print(json.dumps(report, sort_keys=True))
         violations = (
             report["subfloor_in_index"]
@@ -300,26 +304,26 @@ def main(argv: list[str] | None = None) -> int:
             write_floored_index(
                 spark, sf_dir, args.floored_store, initial, args.min_key_freq
             )
-        else:
-            # Existing store: its own metadata is authoritative. A
-            # conflicting --min-key-freq would silently search under a
-            # different floor than the store was built with — reject.
+        try:
             meta = read_store_meta(spark, args.floored_store)
-            if meta is not None and meta["min_key_freq"] != args.min_key_freq:
-                print(
-                    f"error: store {args.floored_store} was written with "
-                    f"--min-key-freq {meta['min_key_freq']}; got "
-                    f"{args.min_key_freq}",
-                    file=sys.stderr,
-                )
-                return 2
+        except ValueError as exc:
+            print(f"error: {exc}", file=sys.stderr)
+            return 2
+        # The store's own metadata is authoritative. A conflicting
+        # --min-key-freq would silently search under a different floor
+        # than the store was built with — reject.
+        if meta["min_key_freq"] != args.min_key_freq:
+            print(
+                f"error: store {args.floored_store} was written with "
+                f"--min-key-freq {meta['min_key_freq']}; got "
+                f"{args.min_key_freq}",
+                file=sys.stderr,
+            )
+            return 2
         # Idempotent appends (ADVICE r9): tables already landed in the
         # store's metadata log are skipped with a notice, so re-running
         # the identical command cannot double-count postings.
-        meta = read_store_meta(spark, args.floored_store)
-        landed = (
-            {n for n, _tid in meta["landed_tables"]} if meta is not None else set()
-        )
+        landed = {n for n, _tid in meta["landed_tables"]}
         skipped = sorted(set(to_append) & landed)
         if skipped:
             print(

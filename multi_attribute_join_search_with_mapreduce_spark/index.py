@@ -21,10 +21,17 @@ Scale notes (100 TB design):
   and re-runs (the reference's ``rowid`` comes from its external
   tokenizer; SURVEY.md §2.11 calls for surrogate ids that survive
   re-partitioning).
+
+The append-maintained form is the floored store
+(:func:`write_floored_index`). Every mutation of it — a table append,
+a streaming trigger, the residual rewrite of ``fsck --repair`` — is a
+commit through one function, :func:`_commit`, and a crash at any point
+of one is resolved by :func:`recover_floored_store`.
 """
 
 from __future__ import annotations
 
+import json
 import weakref
 from dataclasses import dataclass
 from functools import reduce
@@ -32,6 +39,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multi_attribute_join_search_with_mapreduce_spark import fsio
 from multi_attribute_join_search_with_mapreduce_spark.functions.text import normalize_col, normalize_sql
 from multi_attribute_join_search_with_mapreduce_spark.sources.lake import load_table
 
@@ -267,8 +275,6 @@ def write_posting_index(
     # with LOCATION_ALREADY_EXISTS; drop both the catalog entry and any
     # stale location before writing.
     spark.sql(f"DROP TABLE IF EXISTS `{out_table}`")
-    from multi_attribute_join_search_with_mapreduce_spark import fsio
-
     fsio.delete(
         spark,
         f"{spark.conf.get('spark.sql.warehouse.dir').rstrip('/')}/"
@@ -327,15 +333,12 @@ def write_store_meta(spark: SparkSession, base_dir: str, meta: dict) -> None:
     crash mid-write, sees the old or the new complete metadata, never a
     torn file. Written LAST by :func:`write_floored_index` — the
     metadata doubles as the build's commit marker: a crash mid-build
-    leaves no metadata and :func:`append_floored_index` refuses the
-    store loudly rather than appending onto a torn half-build. For
-    appends the rename is the COMMIT POINT of the whole protocol: the
-    version bump, the landed-table entries, and (streaming) the
-    landed-batch marker all land in one atomic replace."""
-    import json
-
-    from multi_attribute_join_search_with_mapreduce_spark import fsio
-
+    leaves no metadata and :func:`read_store_meta` refuses the store
+    loudly rather than letting anything mutate a torn half-build. For
+    every later mutation the rename is the COMMIT POINT of the protocol
+    (:func:`_commit`): the version bump and the payload's log entries
+    (landed tables, or a streaming landed-batch marker) all land in one
+    atomic replace."""
     fsio.write_atomic(
         spark,
         f"{base_dir}/_store_meta.json",
@@ -343,23 +346,35 @@ def write_store_meta(spark: SparkSession, base_dir: str, meta: dict) -> None:
     )
 
 
-def read_store_meta(spark: SparkSession, base_dir: str) -> dict | None:
-    """Read a floored store's ``_store_meta.json``; None if absent
-    (a pre-metadata store, or a build that crashed before commit)."""
-    import json
+def read_store_meta(spark: SparkSession, base_dir: str) -> dict:
+    """Read a floored store's ``_store_meta.json``.
 
-    from multi_attribute_join_search_with_mapreduce_spark import fsio
-
+    Raises ``ValueError`` when the file is absent (a torn initial build,
+    or a store older than the metadata) or carries no commit
+    ``version`` (a store older than the commit protocol, whose flat
+    index the protocol's ``cv=`` partitions would corrupt). Appends,
+    streaming triggers, :func:`recover_floored_store` and
+    :func:`fsck_floored_store` all read the metadata here, so every one
+    of them refuses those stores with this one error; rebuild them with
+    :func:`write_floored_index`."""
     data = fsio.read_bytes(spark, f"{base_dir}/_store_meta.json")
-    return None if data is None else json.loads(data.decode())
+    meta = None if data is None else json.loads(data.decode())
+    if meta is None or "version" not in meta:
+        raise ValueError(
+            f"floored store {base_dir} has no _store_meta.json with a "
+            "commit version: a torn initial build, or a store layout "
+            "older than the commit protocol, which appends, recovery and "
+            "fsck refuse. Rebuild it with write_floored_index."
+        )
+    return meta
 
 
 class ConcurrentAppendError(RuntimeError):
-    """An append lost the store's optimistic-concurrency race (another
-    writer claimed the commit slot first) or found an unresolved
-    earlier commit (a concurrent writer mid-append, or a crash nothing
-    has recovered yet). The store itself is untouched by the loser;
-    resolve with :func:`recover_floored_store` (CLI:
+    """A store mutation lost the store's optimistic-concurrency race
+    (another writer claimed the commit slot first) or found an
+    unresolved earlier commit (a concurrent writer mid-commit, or a
+    crash nothing has recovered yet). The store itself is untouched by
+    the loser; resolve with :func:`recover_floored_store` (CLI:
     ``--fsck-store <dir> --repair``) and retry."""
 
 
@@ -382,16 +397,12 @@ def claim_commit(
     """Atomically claim commit slot ``version`` of a floored store
     (create-if-absent of ``_commits/v{version}.json`` —
     `fsio.create_exclusive`). Exactly one of any number of concurrent
-    claimants wins; the marker is the fence that makes
-    :func:`append_floored_index` safe under concurrency AND the
-    crash-evidence :func:`recover_floored_store` resolves: a marker
-    with ``version > meta["version"]`` is an append that claimed its
-    slot but never committed. Markers at or below the metadata version
-    are the store's commit log and are kept."""
-    import json
-
-    from multi_attribute_join_search_with_mapreduce_spark import fsio
-
+    claimants wins; the marker is the fence that makes :func:`_commit`
+    safe under concurrency AND the crash-evidence
+    :func:`recover_floored_store` resolves: a marker with
+    ``version > meta["version"]`` is a commit that claimed its slot but
+    never finished. Markers at or below the metadata version are the
+    store's commit log and are kept."""
     return fsio.create_exclusive(
         spark,
         _commit_marker(base_dir, version),
@@ -401,16 +412,12 @@ def claim_commit(
 
 def pending_commit(spark: SparkSession, base_dir: str, meta: dict) -> dict | None:
     """The unresolved commit marker (version ``meta["version"] + 1``)
-    if one exists, else None. Appends refuse to start while one is
-    pending, so at most one commit can ever be in flight — which is
-    what makes recovery's state analysis sound. A torn/unparseable
-    marker (crash mid-claim) still counts as pending; recovery rolls
-    it back without needing its content."""
-    import json
-
-    from multi_attribute_join_search_with_mapreduce_spark import fsio
-
-    version = int(meta.get("version", 0)) + 1
+    if one exists, else None. While one is pending the next slot is
+    taken, so no other commit can start — at most one commit is ever
+    in flight, which is what makes recovery's state analysis sound. A
+    torn/unparseable marker (crash mid-claim) still counts as pending;
+    recovery rolls it back without needing its content."""
+    version = int(meta["version"]) + 1
     data = fsio.read_bytes(spark, _commit_marker(base_dir, version))
     if data is None:
         return None
@@ -550,8 +557,7 @@ def write_floored_index(
 def read_floored_index(spark: SparkSession, base_dir: str) -> DataFrame:
     """The queryable half of a floored store, with the commit-version
     bookkeeping column dropped — what searches should read."""
-    df = spark.read.parquet(f"{base_dir}/index")
-    return df.drop("cv") if "cv" in df.columns else df
+    return spark.read.parquet(f"{base_dir}/index").drop("cv")
 
 
 def append_floored_index(
@@ -571,8 +577,8 @@ def append_floored_index(
     Work is bounded by O(new postings + residual postings of touched
     buckets + one pruned probe of the index's key set) — the existing
     index is appended to, never rewritten, and the residual store is
-    rewritten only in the hash buckets the new keys touch (dynamic
-    partition overwrite). Cases per new key:
+    rewritten only in the hash buckets the new keys touch. Cases per
+    new key:
 
     - already in ``index`` (lake freq was >= N): its new postings
       append directly — the floor can only hold harder;
@@ -581,213 +587,105 @@ def append_floored_index(
       leave ``residual``; below N it stays residual.
 
     Callers own spec disjointness (same contract as
-    :func:`append_posting_index`) and, on a metadata-carrying store,
-    the engine ENFORCES it: a table id/name already in the store's
-    landed log raises instead of silently double-counting its postings
-    toward the floor. Layout parameters (``min_key_freq``,
-    ``residual_buckets``, ``hashed_keys``) are read from the store's
-    own metadata; caller-supplied values are validated against it and
-    a conflict raises — an append under a different bucket modulus
-    would delete the wrong ``kb=`` directories (ADVICE r9). Pass None
-    (the default) to just use the store's parameters. Pre-metadata
-    stores fall back to the caller's values (both then required).
+    :func:`append_posting_index`) and the engine ENFORCES it: a table
+    id/name already in the store's landed log raises instead of
+    silently double-counting its postings toward the floor. Layout
+    parameters (``min_key_freq``, ``residual_buckets``,
+    ``hashed_keys``) are read from the store's own metadata;
+    caller-supplied values are validated against it and a conflict
+    raises — an append under a different bucket modulus would delete
+    the wrong ``kb=`` directories (ADVICE r9). Pass None (the default)
+    to just use the store's parameters. A store without a committed
+    metadata version is refused (:func:`read_store_meta`).
 
-    Concurrency + crash contract (metadata-carrying stores): each
-    append runs under the store's COMMIT PROTOCOL. It first checks for
-    an unresolved earlier commit (refusing with
-    :class:`ConcurrentAppendError` — retrying into a torn store is
-    exactly how postings used to double-land, ADVICE r10), then
-    atomically claims the next commit slot (``_commits/v{N+1}.json``
-    via create-if-absent): of any number of concurrent appenders,
-    exactly one proceeds and the losers raise with the store untouched.
-    The mutation lands its index postings under ``cv={N+1}`` and stages
-    its residual rewrite on disk before swapping, so a crash at ANY
-    point is recoverable by :func:`recover_floored_store` — roll
-    forward once the staged rewrite is durable, bytewise roll back
-    before that — and the final metadata rename (version + landed
-    tables in one atomic replace) is the commit point. Queries stay
-    correct throughout: they read only ``index``, whose committed
-    ``cv=`` directories are never touched by an in-flight append.
+    The append is one commit of the store's protocol (:func:`_commit`,
+    payload: the landed tables): of any number of concurrent appenders
+    exactly one proceeds and the losers raise
+    :class:`ConcurrentAppendError` with the store untouched, an
+    unresolved earlier commit fences every append, and a crash at ANY
+    point is recoverable by :func:`recover_floored_store`.
     """
     meta = read_store_meta(spark, base_dir)
-    if meta is not None:
-        for name, given in (
-            ("min_key_freq", min_key_freq),
-            ("residual_buckets", residual_buckets),
-        ):
-            if given is not None and given != meta[name]:
-                raise ValueError(
-                    f"append_floored_index: {name}={given} conflicts with "
-                    f"the store's written {name}={meta[name]} ({base_dir})"
-                )
-        min_key_freq = meta["min_key_freq"]
-        residual_buckets = meta["residual_buckets"]
-        landed_ids = {tid for _n, tid in meta["landed_tables"]}
-        landed_names = {n for n, _tid in meta["landed_tables"]}
-        dup = sorted(
-            s.name for s in new_specs
-            if s.table_id in landed_ids or s.name in landed_names
-        )
-        if dup:
+    for name, given in (
+        ("min_key_freq", min_key_freq),
+        ("residual_buckets", residual_buckets),
+    ):
+        if given is not None and given != meta[name]:
             raise ValueError(
-                f"append_floored_index: tables already landed in the "
-                f"store: {dup} — re-appending would double-count their "
-                f"postings toward the floor ({base_dir})"
+                f"append_floored_index: {name}={given} conflicts with "
+                f"the store's written {name}={meta[name]} ({base_dir})"
             )
-        if "version" not in meta:
-            # r9/r10-era store: metadata but FLAT index layout and no
-            # commit version. Writing cv= partitions into a flat
-            # directory would corrupt it for every subsequent read
-            # ("conflicting directory structures"), so these stores
-            # keep the legacy unfenced append path exactly as shipped
-            # (landed-table log still enforced above). Rebuild with
-            # write_floored_index to adopt the commit protocol.
-            append_floored_postings(
-                spark,
-                build_posting_index(spark, sf_dir, new_specs),
-                base_dir,
-                min_key_freq,
-                residual_buckets,
-                hashed=meta["hashed_keys"],
-            )
-            meta["landed_tables"] = sorted(
-                meta["landed_tables"]
-                + [[s.name, s.table_id] for s in new_specs]
-            )
-            write_store_meta(spark, base_dir, meta)
-            return
-        version = int(meta["version"])
-        pend = pending_commit(spark, base_dir, meta)
-        if pend is not None:
-            raise ConcurrentAppendError(
-                f"append_floored_index: store {base_dir} has an "
-                f"unresolved commit v{pend['version']} "
-                f"(tables={pend.get('tables')}, "
-                f"batch_id={pend.get('batch_id')}): either a concurrent "
-                "appender is mid-commit, or a previous append crashed. "
-                "Run recover_floored_store (CLI: --fsck-store <dir> "
-                "--repair) before retrying — retrying blindly is what "
-                "used to double-land postings."
-            )
-    else:
-        if min_key_freq is None:
-            raise ValueError(
-                "append_floored_index: store has no _store_meta.json "
-                "(pre-metadata store or torn build); min_key_freq must "
-                "be supplied explicitly"
-            )
-        if residual_buckets is None:
-            residual_buckets = 32
-    new_p = build_posting_index(spark, sf_dir, new_specs)
-    if meta is None:
-        # Pre-metadata store: no fencing is possible (nothing to CAS
-        # against) — legacy single-writer contract, unchanged.
-        append_floored_postings(
-            spark, new_p, base_dir, min_key_freq, residual_buckets, hashed=None
-        )
-        return
-    tables = sorted([s.name, s.table_id] for s in new_specs)
-    next_v = version + 1
-    # Optimistic-concurrency claim (VERDICT r10 #1): of two appenders
-    # that both read version N and both passed the landed-tables check,
-    # exactly one creates _commits/v{N+1}.json; the loser raises with
-    # the store untouched. An appender holding a STALE meta (a winner
-    # committed N+1 meanwhile) also loses here — rereading fresh meta
-    # is the retry path, and the landed-tables check then catches any
-    # overlap.
-    if not claim_commit(spark, base_dir, next_v, {"tables": tables}):
-        raise ConcurrentAppendError(
-            f"append_floored_index: lost the commit race for v{next_v} "
-            f"on {base_dir} — a concurrent appender claimed the slot "
-            "first (or this appender's metadata is stale). Re-read the "
-            "store and retry."
-        )
-    append_floored_postings(
-        spark,
-        new_p,
-        base_dir,
-        min_key_freq,
-        residual_buckets,
-        hashed=meta["hashed_keys"],
-        commit_version=next_v,
-        commit_payload={"tables": tables},
+    landed_ids = {tid for _n, tid in meta["landed_tables"]}
+    landed_names = {n for n, _tid in meta["landed_tables"]}
+    dup = sorted(
+        s.name for s in new_specs
+        if s.table_id in landed_ids or s.name in landed_names
     )
-    _require_live_claim(spark, base_dir, next_v)
-    meta["version"] = next_v
-    meta["landed_tables"] = sorted(meta["landed_tables"] + tables)
-    # one atomic rename = the commit point (version + landed log together)
-    write_store_meta(spark, base_dir, meta)
-    from multi_attribute_join_search_with_mapreduce_spark import fsio
-
-    fsio.delete(spark, _commit_stage(base_dir, next_v))  # post-commit GC
-
-
-def _require_live_claim(spark: SparkSession, base_dir: str, version: int) -> None:
-    """Abort an in-flight append whose claim marker has vanished —
-    i.e. `recover_floored_store` was run against this commit while the
-    appender was still alive (the marker cannot distinguish a crashed
-    claimant from a slow one, so recovery's contract is "run it only
-    when the claimant is known dead"; this check turns the operator
-    error of running it early into a LOUD abort instead of a silent
-    lost-update). Checked at the two points of no return: before the
-    residual-bucket swap (the first store mutation the rollback cannot
-    undo) and before the metadata commit. The recovery already rolled
-    the store back; the aborting appender just stops committing on top
-    of it."""
-    from multi_attribute_join_search_with_mapreduce_spark import fsio
-
-    if not fsio.exists(spark, _commit_marker(base_dir, version)):
-        raise ConcurrentAppendError(
-            f"append v{version} on {base_dir}: the commit claim was "
-            "revoked mid-append (recover_floored_store ran while this "
-            "appender was live — it must only run when the claimant is "
-            "known dead). The recovery rolled the store back; this "
-            "append is aborted WITHOUT committing. Clean up any "
-            f"re-created cv={version} index directory via fsck --repair "
-            "and re-run the append."
+    if dup:
+        raise ValueError(
+            f"append_floored_index: tables already landed in the "
+            f"store: {dup} — re-appending would double-count their "
+            f"postings toward the floor ({base_dir})"
         )
+    new_p = build_posting_index(spark, sf_dir, new_specs)
+    _commit(
+        spark,
+        base_dir,
+        meta,
+        {"tables": sorted([s.name, s.table_id] for s in new_specs)},
+        lambda: _plan_postings(spark, new_p, base_dir, meta),
+    )
 
 
 def append_floored_postings(
-    spark: SparkSession,
-    new_postings: DataFrame,
-    base_dir: str,
-    min_key_freq: int,
-    residual_buckets: int,
-    hashed: bool | None = None,
-    commit_version: int | None = None,
-    commit_payload: dict | None = None,
+    spark: SparkSession, new_postings: DataFrame, base_dir: str, batch_id: int
 ) -> None:
-    """The posting-level core of :func:`append_floored_index`: land an
-    arbitrary batch of (key, table, column, row) postings into the
-    index+residual store, keeping the lake-wide floor exact. Callers
-    own batch disjointness (the table-level wrapper enforces it via the
-    landed-table log; the streaming path via per-batch replay markers).
-    ``hashed=None`` detects the layout from the index's columns.
+    """Land one streaming trigger's batch of (key, table, column, row)
+    postings into the index+residual store as one commit
+    (:func:`_commit`, payload: ``batch_id``), keeping the lake-wide
+    floor exact. Callers own disjointness across batch ids.
 
-    ``commit_version`` (the slot the caller claimed via
-    :func:`claim_commit`) makes the mutation RECOVERABLE: the index
-    postings land under ``cv={version}`` so a torn append rolls back
-    with one directory delete, and the residual rewrite is staged under
-    ``_stage/v{version}`` where :func:`recover_floored_store` can find
-    it. ``commit_payload`` (tables / batch_id) rides inside the stage's
-    ``_COMPLETE`` flag so roll-forward can finalize the metadata even
-    if the claim marker itself tore. Without a commit version (legacy
-    pre-metadata stores) the rewrite is still staged on disk before any
-    old bucket is deleted — ADVICE r10: executor-memory staging would
-    lose the carried-over rows of untouched keys on any failure after
-    the deletes — but a crash then leaves the flat-layout store to the
-    NEXT append's self-repair anti-join instead of exact recovery."""
+    Exactly-once EFFECT on an at-least-once substrate: foreachBatch
+    replays batches after failures, so idempotence is manufactured, not
+    assumed. A commit a previous incarnation left unfinished is
+    resolved first — roll forward if the crashed trigger's staged
+    rewrite was durable (its payload carries the batch id, so
+    ``landed_batches`` records it as the crashed trigger would have),
+    bytewise roll back otherwise — THEN ``landed_batches`` decides: a
+    replayed batch that committed is a no-op, one that rolled back
+    re-lands. The version bump and the batch marker commit in ONE
+    atomic metadata rename."""
+    meta = read_store_meta(spark, base_dir)
+    if pending_commit(spark, base_dir, meta) is not None:
+        recover_floored_store(spark, base_dir)
+        meta = read_store_meta(spark, base_dir)
+    if batch_id in meta.get("landed_batches", []):
+        return
+    _commit(
+        spark,
+        base_dir,
+        meta,
+        {"batch_id": int(batch_id)},
+        lambda: _plan_postings(spark, new_postings, base_dir, meta),
+    )
+
+
+def _plan_postings(
+    spark: SparkSession, new_postings: DataFrame, base_dir: str, meta: dict
+) -> tuple[DataFrame, DataFrame, list[int]]:
+    """What landing ``new_postings`` writes, as :func:`_commit`'s plan:
+    the postings the index gains, the rewritten rows of the touched
+    residual buckets, and those buckets' ids."""
     from pyspark.sql import Window
 
-    index_dir, residual_dir = f"{base_dir}/index", f"{base_dir}/residual"
+    min_key_freq, residual_buckets = meta["min_key_freq"], meta["residual_buckets"]
     new_p = truncate_lineage(new_postings)
-    index = _read_parquet_or_none(spark, index_dir)
+    index = _read_parquet_or_none(spark, f"{base_dir}/index")
     if index is None:
         # an initial build where EVERY key sat below the floor writes a
         # row-less index (schema uninferable); treat as the empty index.
         index = spark.createDataFrame([], new_p.schema)
-    residual = _read_parquet_or_none(spark, residual_dir)
+    residual = _read_parquet_or_none(spark, f"{base_dir}/residual")
     if residual is None or "kb" not in residual.columns:
         # an all-above-floor initial build writes an empty residual
         # (no kb= partition dirs): treat as the empty store
@@ -809,10 +707,9 @@ def append_floored_postings(
     # candidates: the new sub-probe postings plus the touched keys'
     # residual rows — lake-wide frequency for these keys is exactly
     # count(candidates) by the store invariant. The anti-join against
-    # idx_keys is the self-repair path for the partial-failure mode
-    # documented above: a key left in BOTH halves by an interrupted
-    # append contributes its index rows only (no double count), and
-    # the bucket rewrite below drops its stale residual rows.
+    # idx_keys keeps a key left in BOTH halves (external damage that
+    # fsck reports) from double counting: its index rows win, and the
+    # bucket rewrite below drops its stale residual rows.
     res_touched = (
         residual.join(F.broadcast(touched), "key", "left_semi")
         .join(F.broadcast(idx_keys), "key", "left_anti")
@@ -824,33 +721,8 @@ def append_floored_postings(
     crossing = cands.filter(F.col("_f") >= min_key_freq).drop("_f")
     staying = cands.filter(F.col("_f") < min_key_freq).drop("_f")
 
-    to_index = new_to_index.unionByName(crossing)
-    if hashed is None:
-        hashed = "key_h" in index.columns
-    if hashed:  # hashed-layout store: keep it uniform
-        to_index = to_index.withColumn("key_h", F.xxhash64("key"))
-    if "cv" in index.columns and commit_version is None:
-        raise ValueError(
-            "append_floored_postings: store has the commit-versioned "
-            "index layout (cv= partitions); appends must go through the "
-            "commit protocol (claim_commit + commit_version) — a flat "
-            "append would corrupt the layout"
-        )
-    if commit_version is not None:
-        to_index = to_index.withColumn("cv", F.lit(int(commit_version)))
-        to_index.write.partitionBy("cv").mode("append").parquet(index_dir)
-    else:
-        to_index.write.mode("append").parquet(index_dir)
-
     # rewrite ONLY the residual buckets the touched keys hash to; rows
-    # of untouched keys sharing those buckets are carried over. The
-    # rewrite is staged TO DISK under _stage/ before any old bucket is
-    # deleted (ADVICE r10 — memory-staged blocks would lose carried
-    # rows on executor failure after the deletes), then swapped in per
-    # bucket. Touched buckets whose every key crossed the floor have no
-    # staged output and are delete-only — dynamic partition overwrite
-    # could not express that (it only replaces partitions PRESENT in
-    # the output) and would break the disjointness invariant.
+    # of untouched keys sharing those buckets are carried over.
     touched_kb = touched.select(
         F.pmod(F.xxhash64("key"), F.lit(residual_buckets)).alias("kb")
     ).distinct()
@@ -863,74 +735,132 @@ def append_floored_postings(
         "kb", F.pmod(F.xxhash64("key"), F.lit(residual_buckets))
     )
     kb_list = [int(r["kb"]) for r in touched_kb.collect()]  # bounded by B
-    import uuid as _uuid
+    return new_to_index.unionByName(crossing), rewrite, kb_list
 
-    stage = (
-        _commit_stage(base_dir, commit_version)
-        if commit_version is not None
-        else f"{base_dir}/_stage/tmp-{_uuid.uuid4().hex}"
-    )
-    _stage_residual_rewrite(
-        spark,
-        base_dir,
-        stage,
-        rewrite,
-        kb_list,
-        commit_payload,
-        cleanup=commit_version is None,
-        commit_version=commit_version,
-    )
+
+def _committed_meta(meta: dict, version: int, payload: dict) -> dict:
+    """The metadata a commit of ``payload`` at ``version`` leaves
+    behind — one definition for the committing writer and for
+    :func:`recover_floored_store`'s roll-forward. ``tables`` adds to
+    ``landed_tables``; ``batch_id`` adds to ``landed_batches``."""
+    out = dict(meta, version=version)
+    if payload.get("tables"):
+        out["landed_tables"] = sorted(
+            meta["landed_tables"] + [list(t) for t in payload["tables"]]
+        )
+    if payload.get("batch_id") is not None:
+        out["landed_batches"] = sorted(
+            set(meta.get("landed_batches", [])) | {int(payload["batch_id"])}
+        )
+    return out
+
+
+def _commit(spark: SparkSession, base_dir: str, meta: dict, payload: dict, plan) -> None:
+    """The ONE commit path of the floored store: a table append, a
+    streaming trigger and fsck's residual repair all mutate the store
+    through here. ``payload`` (an append's ``tables``, a trigger's
+    ``batch_id``, or nothing for a repair) rides in the claim marker
+    and the ``_COMPLETE`` flag. ``plan()`` runs once the slot is
+    claimed and returns ``(to_index, rewrite, kb_list)``: the postings
+    the index gains (or None), and the new rows of the residual buckets
+    ``kb_list`` names. In order:
+
+    1. claim ``version + 1`` (:func:`claim_commit`): of any number of
+       concurrent writers exactly one proceeds and the losers raise
+       :class:`ConcurrentAppendError` with the store untouched; a
+       pending earlier commit holds the slot, so it fences everyone;
+    2. land the index postings under ``cv={version + 1}`` — a rollback
+       is one directory delete, and queries stay correct throughout
+       because committed ``cv=`` directories are never touched;
+    3. stage the residual rewrite ON DISK under ``_stage/`` before any
+       bucket is deleted (ADVICE r10: executor-memory staging would
+       lose the carried-over rows of untouched keys on a failure after
+       the deletes);
+    4. check the claim is still live (:func:`_require_live_claim`),
+       flag the stage ``_COMPLETE`` — with the kb swap lists and the
+       payload, so roll-forward is self-describing even if the claim
+       marker tore — swap the staged buckets in, and check the claim
+       again;
+    5. write the metadata (:func:`_committed_meta`) in one atomic
+       rename: the commit point;
+    6. delete the stage. It must outlive the swap until the rename
+       commits: the ``_COMPLETE`` flag is the roll-FORWARD evidence,
+       and deleting it earlier would make a crash in the
+       swap-done→rename window look like a pre-stage crash, whose
+       rollback cannot restore the already-swapped buckets.
+
+    A crash at any point is resolved by :func:`recover_floored_store`:
+    roll forward once ``_COMPLETE`` exists, bytewise roll back before.
+    """
+    version = int(meta["version"]) + 1
+    if not claim_commit(spark, base_dir, version, payload):
+        raise ConcurrentAppendError(
+            f"floored store {base_dir}: commit slot v{version} is taken "
+            "by an unresolved commit — a concurrent writer is "
+            "mid-commit, a previous one crashed, or this writer's "
+            "metadata is stale. Once no writer is live, run "
+            "recover_floored_store (CLI: --fsck-store <dir> --repair); "
+            "then re-read the store and retry."
+        )
+    to_index, rewrite, kb_list = plan()
+    if to_index is not None:
+        if meta["hashed_keys"]:  # hashed-layout store: keep it uniform
+            to_index = to_index.withColumn("key_h", F.xxhash64("key"))
+        to_index.withColumn("cv", F.lit(version)).write.partitionBy("cv").mode(
+            "append"
+        ).parquet(f"{base_dir}/index")
+    stage = _commit_stage(base_dir, version)
+    flag = dict(payload, **_stage_residual_rewrite(spark, stage, rewrite, kb_list))
+    _require_live_claim(spark, base_dir, version)
+    fsio.write_atomic(spark, f"{stage}/_COMPLETE", json.dumps(flag).encode())
+    _finish_residual_swap(spark, base_dir, stage, flag)
+    _require_live_claim(spark, base_dir, version)
+    write_store_meta(spark, base_dir, _committed_meta(meta, version, payload))
+    fsio.delete(spark, stage)
+
+
+def _require_live_claim(spark: SparkSession, base_dir: str, version: int) -> None:
+    """Abort an in-flight commit whose claim marker has vanished —
+    i.e. `recover_floored_store` was run against this commit while the
+    writer was still alive (the marker cannot distinguish a crashed
+    claimant from a slow one, so recovery's contract is "run it only
+    when the claimant is known dead"; this check turns the operator
+    error of running it early into a LOUD abort instead of a silent
+    lost-update). Checked at the two points of no return: before the
+    residual-bucket swap (the first store mutation the rollback cannot
+    undo) and before the metadata commit. The recovery already rolled
+    the store back; the aborting writer just stops committing on top
+    of it."""
+    if not fsio.exists(spark, _commit_marker(base_dir, version)):
+        raise ConcurrentAppendError(
+            f"append v{version} on {base_dir}: the commit claim was "
+            "revoked mid-append (recover_floored_store ran while this "
+            "appender was live — it must only run when the claimant is "
+            "known dead). The recovery rolled the store back; this "
+            "append is aborted WITHOUT committing. Clean up any "
+            f"re-created cv={version} index directory via fsck --repair "
+            "and re-run the append."
+        )
 
 
 def _stage_residual_rewrite(
-    spark: SparkSession,
-    base_dir: str,
-    stage: str,
-    rewrite: DataFrame,
-    kb_list: list[int],
-    commit_payload: dict | None = None,
-    cleanup: bool = True,
-    commit_version: int | None = None,
-) -> None:
-    """Materialize the residual-bucket rewrite under ``stage``, flag it
-    complete (with the kb swap-lists + the commit payload, so recovery
-    is self-describing even if the claim marker tore), and swap the
-    staged buckets into place. Each step is idempotent / resumable —
-    :func:`recover_floored_store` re-enters at the swap.
-
-    ``cleanup=False`` (the commit-protocol path) leaves the stage on
-    disk: the ``_COMPLETE`` flag is the roll-FORWARD evidence, and it
-    must survive until the metadata rename commits — deleting it
-    earlier would make a crash in the swap-done→finalize window look
-    like a pre-stage crash, and rolling that back cannot restore the
-    already-swapped residual buckets (postings of crossing keys would
-    vanish from both halves). The committing caller deletes the stage
-    AFTER its metadata rename; fsck garbage-collects stages of
-    already-committed versions that a crash right after the rename
-    left behind."""
-    import json
-
-    from multi_attribute_join_search_with_mapreduce_spark import fsio
-
+    spark: SparkSession, stage: str, rewrite: DataFrame, kb_list: list[int]
+) -> dict:
+    """Materialize the residual-bucket rewrite under ``stage`` and
+    return the swap lists: ``kb_replace`` (buckets with staged rows)
+    and ``kb_delete`` (touched buckets whose every key left — dynamic
+    partition overwrite could not express those, it only replaces
+    partitions PRESENT in the output)."""
     rewrite.write.partitionBy("kb").mode("error").parquet(f"{stage}/residual")
     staged = {
         int(name.split("=", 1)[1])
         for name in fsio.listdir(spark, f"{stage}/residual")
         if name.startswith("kb=")
     }
-    flag = dict(commit_payload or {})
-    flag["kb_replace"] = sorted(staged)
-    flag["kb_delete"] = sorted(set(kb_list) - staged)
-    if commit_version is not None:
-        # point of no return: past here the residual swap mutates
-        # shared state a rollback cannot restore — abort now if the
-        # claim was revoked by a mid-flight recovery (see
-        # _require_live_claim)
-        _require_live_claim(spark, base_dir, commit_version)
-    fsio.write_atomic(spark, f"{stage}/_COMPLETE", json.dumps(flag).encode())
-    _finish_residual_swap(spark, base_dir, stage, flag)
-    if cleanup:
-        fsio.delete(spark, stage)
+    return {
+        "kb_replace": sorted(staged),
+        "kb_delete": sorted(set(kb_list) - staged),
+    }
 
 
 def _finish_residual_swap(
@@ -940,8 +870,6 @@ def _finish_residual_swap(
     buckets re-delete (no-op), replace buckets are skipped once their
     staged directory is gone (i.e. already swapped) — so a crash at any
     point mid-swap is finished by running this again."""
-    from multi_attribute_join_search_with_mapreduce_spark import fsio
-
     residual_dir = f"{base_dir}/residual"
     fsio.mkdirs(spark, residual_dir)
     for kb in flag.get("kb_delete", []):
@@ -958,44 +886,35 @@ def _finish_residual_swap(
 
 
 def recover_floored_store(spark: SparkSession, base_dir: str) -> dict:
-    """Resolve an interrupted append on a commit-protocol floored store
-    (the pending marker :func:`pending_commit` reports), restoring the
-    store to a committed, invariant-clean state. Decision rule, from
-    the durable evidence the protocol leaves behind:
+    """Resolve an interrupted commit on a floored store (the pending
+    marker :func:`pending_commit` reports), restoring the store to a
+    committed, invariant-clean state. Decision rule, from the durable
+    evidence :func:`_commit` leaves behind:
 
     - stage ``_COMPLETE`` flag present → the index append finished and
       the residual rewrite is fully materialized on disk: **roll
-      forward** — finish the (resumable) bucket swap, finalize the
-      metadata from the payload the flag carries (landed tables /
-      batch id + version), exactly as the crashed appender would have.
-    - no ``_COMPLETE`` flag → the append died before its rewrite was
+      forward** — finish the (resumable) bucket swap, then write the
+      metadata the flag's payload leaves behind
+      (:func:`_committed_meta`), exactly as the crashed writer would
+      have.
+    - no ``_COMPLETE`` flag → the commit died before its rewrite was
       durable: **roll back** — delete the partial stage and the torn
-      append's ``cv={version}`` index directory (every posting the
-      append landed, including the re-filed residual copies of
-      crossing keys, lives there and nowhere else; the residual half
-      is untouched before the swap starts), then release the claim
-      marker so a retry can re-claim the slot. The store is bytewise
-      back to its pre-append state.
+      commit's ``cv={version}`` index directory (every posting it
+      landed, including the re-filed residual copies of crossing keys,
+      lives there and nowhere else; the residual half is untouched
+      before the swap starts), then release the claim marker so a
+      retry can re-claim the slot. The store is bytewise back to its
+      pre-commit state.
 
     Idempotent and itself crash-safe: every step re-runs cleanly, and
     re-invoking on a healthy store is a no-op (``action: "none"``).
     Returns ``{"action": "none" | "rolled_forward" | "rolled_back",
     "version": ...}``.
     """
-    import json
-
-    from multi_attribute_join_search_with_mapreduce_spark import fsio
-
     meta = read_store_meta(spark, base_dir)
-    if meta is None:
-        raise ValueError(
-            f"recover_floored_store: {base_dir} has no _store_meta.json "
-            "(pre-metadata store or torn initial build — nothing to "
-            "recover; rebuild with write_floored_index)"
-        )
     pend = pending_commit(spark, base_dir, meta)
     if pend is None:
-        return {"action": "none", "version": int(meta.get("version", 0))}
+        return {"action": "none", "version": meta["version"]}
     v = pend["version"]
     stage = _commit_stage(base_dir, v)
     flag_raw = fsio.read_bytes(spark, f"{stage}/_COMPLETE")
@@ -1010,44 +929,34 @@ def recover_floored_store(spark: SparkSession, base_dir: str) -> dict:
         # stage is deleted only AFTER the metadata rename below: the
         # _COMPLETE flag is the roll-forward evidence, and a crash
         # inside this very recovery must still roll forward on retry.
-        if flag.get("tables"):
-            meta["landed_tables"] = sorted(
-                meta["landed_tables"] + [list(t) for t in flag["tables"]]
-            )
-        if flag.get("batch_id") is not None:
-            meta["landed_batches"] = sorted(
-                set(meta.get("landed_batches", [])) | {int(flag["batch_id"])}
-            )
-        meta["version"] = v
-        write_store_meta(spark, base_dir, meta)
+        write_store_meta(spark, base_dir, _committed_meta(meta, v, flag))
         fsio.delete(spark, stage)
         return {"action": "rolled_forward", "version": v}
-    # roll back: the cv= directory holds exactly the torn append's rows
+    # roll back: the cv= directory holds exactly the torn commit's rows
     fsio.delete(spark, f"{base_dir}/index/cv={v}")
     fsio.delete(spark, f"{base_dir}/index/_temporary")  # aborted-job debris
     fsio.delete(spark, stage)
     fsio.delete(spark, _commit_marker(base_dir, v))
-    return {"action": "rolled_back", "version": int(meta.get("version", 0))}
+    return {"action": "rolled_back", "version": meta["version"]}
 
 
 def fsck_floored_store(
     spark: SparkSession, base_dir: str, repair: bool = False
 ) -> dict:
-    """Invariant check (and optional repair) for a floored store — the
-    fsck completing the partial-failure contract `append_floored_index`
-    documents: an append interrupted between its index write and its
-    residual rewrite leaves crossing keys in BOTH halves. Queries stay
-    correct (index is authoritative and complete), the NEXT append that
-    touches such a key repairs it for free, and this tool repairs the
-    ones nothing touches.
+    """Invariant check (and optional repair) for a floored store.
+    Queries stay correct whatever these checks find (the index half is
+    authoritative), and a store no code outside this module has
+    touched reports all zeros.
 
     Checks, each O(store) with key-level aggregates:
 
     - ``double_represented_keys`` — keys present in both halves
-      (disjointness violation; the known crash artifact). With
-      ``repair=True`` their residual rows are dropped — the index side
-      is authoritative by the append ordering — rewriting ONLY the
-      residual buckets those keys hash to.
+      (disjointness violation). With ``repair=True`` their residual
+      rows are dropped — the index side is authoritative — rewriting
+      ONLY the residual buckets those keys hash to. The repair is a
+      commit like any append (:func:`_commit`): fenced against
+      concurrent writers, staged on disk, and recoverable by
+      :func:`recover_floored_store` if it crashes mid-swap.
     - ``subfloor_in_index`` / ``overfloor_in_residual`` — keys whose
       own-half frequency contradicts the floor. Unreachable from this
       module's code paths (reported, never auto-repaired: they imply
@@ -1062,7 +971,7 @@ def fsck_floored_store(
       ``recover_floored_store`` is the sanctioned path for torn
       commits, and external double-lands need operator judgment.
     - ``pending_commit`` — an unresolved claim marker (crash or
-      in-flight concurrent appender). With ``repair=True`` it is
+      in-flight concurrent writer). With ``repair=True`` it is
       resolved FIRST via :func:`recover_floored_store` (roll forward
       if the staged rewrite completed, else roll back), and the
       remaining checks run on the recovered store.
@@ -1071,11 +980,6 @@ def fsck_floored_store(
     and ``recovery`` (the recovery report, when one ran).
     """
     meta = read_store_meta(spark, base_dir)
-    if meta is None:
-        raise ValueError(
-            f"fsck_floored_store: {base_dir} has no _store_meta.json "
-            "(pre-metadata store or torn build)"
-        )
     out = {
         "double_represented_keys": 0,
         "subfloor_in_index": 0,
@@ -1093,29 +997,11 @@ def fsck_floored_store(
             out["pending_commit"] = None
             meta = read_store_meta(spark, base_dir)
     if repair:
-        # GC stages of already-committed versions: a crash after the
-        # metadata rename but before the appender's post-commit cleanup
-        # leaves the (now-redundant) stage behind. Never touches the
-        # pending version's stage — recovery above owns that.
-        from multi_attribute_join_search_with_mapreduce_spark import fsio
-
-        committed = int(meta.get("version", 0))
+        # No commit is pending now, so every stage is crash debris: a
+        # committed version's stage that a crash after the metadata
+        # rename left behind, or one an aborted writer re-created.
         for name in fsio.listdir(spark, f"{base_dir}/_stage"):
-            if name.startswith("v"):
-                try:
-                    k = int(name[1:])
-                except ValueError:
-                    continue
-                if k <= committed:
-                    fsio.delete(spark, f"{base_dir}/_stage/{name}")
-            elif name.startswith(("tmp-", "fsck-")):
-                # legacy (uncommitted) append / fsck-repair stages are
-                # deleted on success; a surviving one is crash debris.
-                # Safe to GC under --repair: fsck on a store with a
-                # LIVE legacy writer is already outside the protocol
-                # (legacy appends have no fencing at all — that is
-                # what the commit protocol replaced).
-                fsio.delete(spark, f"{base_dir}/_stage/{name}")
+            fsio.delete(spark, f"{base_dir}/_stage/{name}")
         # Commit-marker GC: markers at or below the committed version
         # are the commit log, but pending/claim checks only ever read
         # version+1 — an unboundedly maintained store (one marker per
@@ -1127,7 +1013,7 @@ def fsck_floored_store(
                     k = int(name[1:-5])
                 except ValueError:
                     continue
-                if k <= committed - _COMMIT_LOG_RETAIN:
+                if k <= meta["version"] - _COMMIT_LOG_RETAIN:
                     fsio.delete(spark, f"{base_dir}/_commits/{name}")
     index_dir, residual_dir = f"{base_dir}/index", f"{base_dir}/residual"
     index = _read_parquet_or_none(spark, index_dir)
@@ -1164,8 +1050,7 @@ def fsck_floored_store(
     if not repair or out["double_represented_keys"] == 0:
         return out
     # Drop the stale residual rows: rewrite only the buckets the
-    # double-represented keys hash to (same pruned-rewrite discipline
-    # as the append itself).
+    # double-represented keys hash to (same pruned rewrite as an append).
     buckets = meta["residual_buckets"]
     bad_kb = dup_keys.select(
         F.pmod(F.xxhash64("key"), F.lit(buckets)).alias("kb")
@@ -1176,21 +1061,18 @@ def fsck_floored_store(
     out["repaired_rows"] = (
         residual.join(F.broadcast(dup_keys), "key", "left_semi").count()
     )
-    kb_list = [int(r["kb"]) for r in bad_kb.collect()]  # bounded by B
-    import uuid as _uuid
-
-    # same staged-swap discipline as the append (ADVICE r10): the kept
-    # rows are durable on disk under _stage/ before any kb= directory
-    # is deleted, so a failure mid-repair cannot lose untouched
-    # sub-floor rows sharing those buckets.
-    _stage_residual_rewrite(
+    _commit(
         spark,
         base_dir,
-        f"{base_dir}/_stage/fsck-{_uuid.uuid4().hex}",
-        keep.drop("kb").withColumn(
-            "kb", F.pmod(F.xxhash64("key"), F.lit(buckets))
+        meta,
+        {},
+        lambda: (
+            None,
+            keep.drop("kb").withColumn(
+                "kb", F.pmod(F.xxhash64("key"), F.lit(buckets))
+            ),
+            [int(r["kb"]) for r in bad_kb.collect()],  # bounded by B
         ),
-        kb_list,
     )
     return out
 

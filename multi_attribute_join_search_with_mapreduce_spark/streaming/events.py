@@ -1172,69 +1172,17 @@ def _floored_ingest_batch(
     spark: SparkSession, store: str, spec, batch_df: DataFrame, batch_id: int
 ) -> None:
     """One micro-batch of the streaming floored-index maintenance:
-    unpivot the batch's rows into postings and land them through the
-    store's COMMIT PROTOCOL (`index.claim_commit` /
-    `index.recover_floored_store`).
-
-    Exactly-once EFFECT on an at-least-once substrate: foreachBatch
-    replays batches after failures, and the floored append mutates
-    shared store state (index append + residual bucket rewrite), so
-    idempotence is manufactured, not assumed. The batch first resolves
-    any commit a previous incarnation left unfinished — roll forward
-    if the crashed trigger's staged rewrite was durable (its payload
-    carries the batch id, so ``landed_batches`` is updated as the
-    crashed trigger would have), bytewise roll back otherwise — THEN
-    consults ``landed_batches``: a replayed batch that actually
-    committed is a no-op, one that rolled back re-lands cleanly. The
-    version bump and the batch marker commit in ONE atomic metadata
-    rename (ADVICE r10: the marker used to trail the mutation, leaving
-    a double-land window the old docstring could only apologize for).
-    Crash-injected drill: ``tests/test_floored_index.py``
+    unpivot the batch's rows into postings and land them as one commit
+    of the store, exactly once per ``batch_id``
+    (`index.append_floored_postings`). Crash-injected drill:
+    ``tests/test_floored_index.py``
     ``test_streaming_crash_between_append_and_marker``."""
     from multi_attribute_join_search_with_mapreduce_spark.index import (
-        ConcurrentAppendError,
         append_floored_postings,
-        claim_commit,
-        pending_commit,
         postings_from_df,
-        read_store_meta,
-        recover_floored_store,
-        write_store_meta,
     )
 
-    meta = read_store_meta(spark, store)
-    if pending_commit(spark, store, meta) is not None:
-        # a previous incarnation of this query died mid-commit
-        recover_floored_store(spark, store)
-        meta = read_store_meta(spark, store)
-    landed = set(meta.get("landed_batches", []))
-    if batch_id in landed:  # replay of a committed batch: no-op
-        return
-    next_v = int(meta.get("version", 0)) + 1
-    if not claim_commit(spark, store, next_v, {"batch_id": int(batch_id)}):
-        raise ConcurrentAppendError(
-            f"streaming floored ingest: lost the commit race for "
-            f"v{next_v} on {store} — two writers share this store "
-            "(foreachBatch is single-writer per query; a second query "
-            "or a batch appender is targeting the same directory)"
-        )
-    append_floored_postings(
-        spark,
-        postings_from_df(batch_df, spec),
-        store,
-        meta["min_key_freq"],
-        meta["residual_buckets"],
-        meta["hashed_keys"],
-        commit_version=next_v,
-        commit_payload={"batch_id": int(batch_id)},
-    )
-    meta["version"] = next_v
-    meta["landed_batches"] = sorted(landed | {int(batch_id)})
-    write_store_meta(spark, store, meta)
-    from multi_attribute_join_search_with_mapreduce_spark import fsio
-    from multi_attribute_join_search_with_mapreduce_spark.index import _commit_stage
-
-    fsio.delete(spark, _commit_stage(store, next_v))  # post-commit GC
+    append_floored_postings(spark, postings_from_df(batch_df, spec), store, batch_id)
 
 
 _STREAM_FLOORED_STORE_CACHE: dict = {}

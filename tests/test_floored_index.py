@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from multi_attribute_join_search_with_mapreduce_spark.index import (
@@ -733,43 +734,80 @@ def test_fsck_repair_gcs_stage_debris(spark):
     assert _os.listdir(f"{base}/_stage") == []
 
 
-def test_legacy_versionless_store_appends_flat(spark):
-    """An r9/r10-era store (metadata WITHOUT a commit version, flat
-    index layout) must keep the legacy append semantics — writing cv=
-    partitions into its flat directory would corrupt it for every
-    subsequent read. The landed-table log still extends."""
-    import os as _os
+def _store_files(base):
+    """{relative path: (size, mtime_ns)} of every file and directory
+    under ``base`` — a store a refusal must leave exactly as it was."""
+    out = {}
+    for root, dirs, files in os.walk(base):
+        for name in dirs + files:
+            st = os.stat(os.path.join(root, name))
+            out[os.path.relpath(os.path.join(root, name), base)] = (
+                st.st_size, st.st_mtime_ns,
+            )
+    return out
 
+
+def test_pre_protocol_stores_are_refused(spark, sf_dir, capsys):
+    """The two store layouts older than the commit protocol — metadata
+    without a commit version over a flat index, and no _store_meta.json
+    at all — are refused by every entry point with the one ValueError
+    that names the fix (rebuild with write_floored_index), and their
+    files are left exactly as they were. The CLI turns the refusal into
+    exit code 2 with an ``error:`` line."""
+    import shutil
+
+    from multi_attribute_join_search_with_mapreduce_spark.cli import main
     from multi_attribute_join_search_with_mapreduce_spark.index import (
+        fsck_floored_store,
         read_store_meta,
+        recover_floored_store,
         write_store_meta,
+    )
+    from multi_attribute_join_search_with_mapreduce_spark.streaming.events import (
+        _floored_ingest_batch,
     )
 
     lake, specs = _mini_lake(spark, "majs_ccr_legacy_")
-    base = os.path.join(scratch_dir("majs_ccr_legacy_"), "store")
-    # fabricate the legacy layout: flat index (no cv), residual, meta
-    # without "version" — what r10's write_floored_index produced
-    write_floored_index(spark, lake, base, specs[:1], FLOOR)
-    flat = read_floored_index(spark, base)
-    idx, schema = flat.collect(), flat.schema
-    import shutil as _shutil
-
-    _shutil.rmtree(f"{base}/index")
-    spark.createDataFrame(idx, schema).write.parquet(f"{base}/index")  # flat
-    meta = read_store_meta(spark, base)
-    del meta["version"]
-    write_store_meta(spark, base, meta)
-
-    append_floored_index(spark, lake, base, (specs[1],))
-    # layout stayed flat — no cv= directories appeared
-    assert not any(
-        d.startswith("cv=") for d in _os.listdir(f"{base}/index")
-    )
-    got = read_floored_index(spark, base)
-    want = build_posting_index(spark, lake, specs[:2], min_key_freq=FLOOR)
-    _assert_same_rows(got, want)
-    assert ["t1", 2] in read_store_meta(spark, base)["landed_tables"]
-    assert "version" not in read_store_meta(spark, base)
+    t1 = spark.read.parquet(f"{lake}/t1.parquet")
+    for layout in ("versionless", "no_meta"):
+        base = os.path.join(scratch_dir("majs_ccr_legacy_"), "store")
+        # fabricate the old layout: flat index (no cv), residual, and
+        # metadata without "version" — or no metadata at all
+        write_floored_index(spark, lake, base, specs[:1], FLOOR)
+        flat = read_floored_index(spark, base)
+        rows, schema = flat.collect(), flat.schema
+        shutil.rmtree(f"{base}/index")
+        spark.createDataFrame(rows, schema).write.parquet(f"{base}/index")
+        if layout == "versionless":
+            meta = read_store_meta(spark, base)
+            del meta["version"]
+            write_store_meta(spark, base, meta)
+        else:
+            os.remove(f"{base}/_store_meta.json")
+        before = _store_files(base)
+        for call in (
+            lambda: append_floored_index(spark, lake, base, (specs[1],)),
+            lambda: _floored_ingest_batch(spark, base, specs[1], t1, 0),
+            lambda: recover_floored_store(spark, base),
+            lambda: fsck_floored_store(spark, base, repair=True),
+        ):
+            with pytest.raises(
+                ValueError, match="no _store_meta.json with a commit version"
+            ) as exc_info:
+                call()
+            assert "Rebuild it with write_floored_index" in str(exc_info.value)
+            assert _store_files(base) == before, layout
+        capsys.readouterr()
+        for argv in (
+            ["--fsck-store", base, "--repair"],
+            ["--query-table", "documents", "--attrs", "lang,source",
+             "--sf-dir", sf_dir, "--floored-store", base,
+             "--min-key-freq", str(FLOOR)],
+        ):
+            assert main(argv) == 2, (layout, argv)
+            err = capsys.readouterr().err
+            assert "error: floored store" in err and "Traceback" not in err
+        assert _store_files(base) == before, layout
 
 
 def test_revoked_claim_aborts_instead_of_committing(spark):
@@ -791,19 +829,8 @@ def test_revoked_claim_aborts_instead_of_committing(spark):
     base = os.path.join(scratch_dir("majs_ccr_revoke_"), "store")
     write_floored_index(spark, lake, base, specs[:1], FLOOR)
 
-    orig = idx._finish_residual_swap
-
-    def revoke_then_swap(spark_, base_, stage_, flag_):
-        # the "mid-flight recovery" fires while the appender is alive:
-        # _COMPLETE is not yet durable at the pre-swap check, so this
-        # models recovery running just before it (rollback path)
-        recover_floored_store(spark_, base_)
-        orig(spark_, base_, stage_, flag_)
-
     # recovery between staging and the pre-swap claim check: the
     # appender must abort before mutating the residual store
-    idx._finish_residual_swap = orig  # (unused; revocation goes below)
-
     orig_complete = idx._require_live_claim
     calls = {"n": 0}
 
@@ -854,3 +881,108 @@ def test_fsck_repair_gcs_old_commit_markers(spark):
     left = sorted(_os.listdir(f"{base}/_commits"))
     assert len(left) == idx._COMMIT_LOG_RETAIN
     assert left[0] == f"v{100 - idx._COMMIT_LOG_RETAIN + 1:020d}.json"
+
+
+def test_fsck_repair_crash_mid_swap_rolls_forward(spark, monkeypatch):
+    """fsck --repair is a commit: a crash between a residual bucket's
+    delete and the rename of its staged replacement leaves those rows
+    only in the stage, and the next --repair must roll that commit
+    FORWARD — not garbage-collect the stage as debris — so no posting
+    is lost: index ∪ residual equals the unfloored rebuild."""
+    from multi_attribute_join_search_with_mapreduce_spark import fsio
+    from multi_attribute_join_search_with_mapreduce_spark.index import (
+        TableSpec,
+        fsck_floored_store,
+        read_store_meta,
+    )
+
+    buckets = 4
+    lake = os.path.join(scratch_dir("majs_fsck_crash_"), "lake")
+    os.makedirs(lake)
+    # 202 postings: "x" twice (index), 200 singletons (residual, every bucket)
+    rows = [(1, "x"), (2, "x")] + [(i, f"k{i}") for i in range(3, 203)]
+    spark.createDataFrame(rows, ["pk", "s0"]).write.parquet(f"{lake}/t0.parquet")
+    s0 = TableSpec("t0", 1, "pk", ("s0",))
+    base = os.path.join(scratch_dir("majs_fsck_crash_"), "store")
+    write_floored_index(spark, lake, base, (s0,), FLOOR, residual_buckets=buckets)
+    # plant the double-represented key: x's index rows re-filed into residual
+    (
+        read_floored_index(spark, base)
+        .filter(F.col("key") == "x")
+        .withColumn("kb", F.pmod(F.xxhash64("key"), F.lit(buckets)))
+        .write.partitionBy("kb")
+        .mode("append")
+        .parquet(f"{base}/residual")
+    )
+    orig_rename = fsio.rename
+    calls = {"n": 0}
+
+    def rename_fails_once(spark_, src, dst):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            raise IOError("injected crash between bucket delete and rename")
+        return orig_rename(spark_, src, dst)
+
+    monkeypatch.setattr(fsio, "rename", rename_fails_once)
+    with pytest.raises(IOError, match="injected crash"):
+        fsck_floored_store(spark, base, repair=True)
+    second = fsck_floored_store(spark, base, repair=True)
+    assert second["recovery"]["action"] == "rolled_forward"
+    assert second["double_represented_keys"] == 0
+    assert read_store_meta(spark, base)["version"] == 2
+    residual = spark.read.parquet(f"{base}/residual").drop("kb")
+    _assert_same_rows(
+        read_floored_index(spark, base).unionByName(residual),
+        build_posting_index(spark, lake, (s0,)),
+    )
+    assert fsck_floored_store(spark, base) == {
+        "double_represented_keys": 0,
+        "subfloor_in_index": 0,
+        "overfloor_in_residual": 0,
+        "duplicate_postings": 0,
+        "pending_commit": None,
+        "recovery": None,
+        "repaired_rows": 0,
+    }
+
+
+@pytest.mark.parametrize("writer", ["table_append", "stream_trigger"])
+def test_claim_revoked_before_complete_aborts(spark, monkeypatch, writer):
+    """A recovery run against a live writer just before its _COMPLETE
+    flag is written rolls the commit back; the writer must then abort
+    with ConcurrentAppendError at its pre-commit claim check and leave
+    the metadata as it was — for a streaming trigger as for a table
+    append (a trigger that committed here would record its batch as
+    landed while its postings were rolled back, and a replay would
+    skip it)."""
+    from multi_attribute_join_search_with_mapreduce_spark import fsio
+    from multi_attribute_join_search_with_mapreduce_spark.index import (
+        ConcurrentAppendError,
+        read_store_meta,
+        recover_floored_store,
+    )
+    from multi_attribute_join_search_with_mapreduce_spark.streaming.events import (
+        _floored_ingest_batch,
+    )
+
+    lake, specs = _mini_lake(spark, "majs_ccr_revoke2_")
+    base = os.path.join(scratch_dir("majs_ccr_revoke2_"), "store")
+    write_floored_index(spark, lake, base, specs[:1], FLOOR)
+    before = read_store_meta(spark, base)
+    orig_write = fsio.write_atomic
+    fired = []
+
+    def revoke_before_complete(spark_, path, data):
+        if path.endswith("/_COMPLETE") and not fired:
+            fired.append(recover_floored_store(spark_, base))
+        orig_write(spark_, path, data)
+
+    monkeypatch.setattr(fsio, "write_atomic", revoke_before_complete)
+    with pytest.raises(ConcurrentAppendError, match="revoked"):
+        if writer == "table_append":
+            append_floored_index(spark, lake, base, (specs[1],))
+        else:
+            t1 = spark.read.parquet(f"{lake}/t1.parquet")
+            _floored_ingest_batch(spark, base, specs[1], t1, 0)
+    assert fired == [{"action": "rolled_back", "version": 1}]
+    assert read_store_meta(spark, base) == before
