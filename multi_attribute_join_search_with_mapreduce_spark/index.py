@@ -431,33 +431,59 @@ def pending_commit(spark: SparkSession, base_dir: str, meta: dict) -> dict | Non
     return info
 
 
-def _read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    """``spark.read.parquet`` that treats ONLY path-missing /
-    schema-uninferable (row-less dir) as "no data yet" — corrupt files,
-    transient FS errors, and permission failures re-raise so an append
-    never silently proceeds as if the store were empty while the real
-    rows survive on disk (ADVICE r9)."""
-    from pyspark.errors import AnalysisException
+# The posting columns both store halves hold, in file order.
+_POSTING_SCHEMA = "key STRING, `table` INT, `column` INT, `row` BIGINT"
+_POSTING_COLS = ("key", "table", "column", "row")
 
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as exc:
-        cond = ""
-        for probe in ("getCondition", "getErrorClass"):
-            try:
-                cond = getattr(exc, probe)() or ""
-                break
-            except Exception:
-                continue
-        text = f"{cond} {exc}"
-        if (
-            "PATH_NOT_FOUND" in text
-            or "UNABLE_TO_INFER_SCHEMA" in text
-            or "Path does not exist" in text
-            or "Unable to infer schema" in text
-        ):
-            return None
-        raise
+
+def _read_store_half(
+    spark: SparkSession, base_dir: str, meta: dict, half: str
+) -> DataFrame:
+    """One half of a floored store (``"index"`` or ``"residual"``),
+    read with the schema its metadata fixes: the posting columns, plus
+    ``key_h`` on a hashed store's index, plus the partition column
+    (``cv`` or ``kb``). No job infers a schema, and a half with no rows
+    yet reads as empty; a corrupt file still raises when a job reads
+    it."""
+    if half == "index":
+        extra = (", key_h BIGINT" if meta["hashed_keys"] else "") + ", cv INT"
+    else:
+        extra = ", kb INT"
+    return spark.read.schema(_POSTING_SCHEMA + extra).parquet(f"{base_dir}/{half}")
+
+
+def _kb(buckets: int):
+    """The residual bucket of a posting's ``key``."""
+    return F.pmod(F.xxhash64("key"), F.lit(buckets))
+
+
+def _bucket_ids(keys: DataFrame, buckets: int) -> list[int]:
+    """The residual buckets ``keys`` hash to (at most ``buckets`` ids)."""
+    return [
+        int(r["kb"]) for r in keys.select(_kb(buckets).alias("kb")).distinct().collect()
+    ]
+
+
+def _bucketed(rows: DataFrame, buckets: int) -> DataFrame:
+    """``rows`` with their residual bucket ``kb = pmod(xxhash64(key),
+    buckets)``, hash-partitioned by it at the session's shuffle
+    parallelism. Every row of a bucket sits in one task, so a
+    ``partitionBy("kb")`` write leaves exactly one file per bucket.
+    Every residual writer takes its rows through here: the build, an
+    append or streaming trigger, and ``fsck --repair``."""
+    return rows.withColumn("kb", _kb(buckets)).repartition("kb")
+
+
+def _key_counts(rows: DataFrame, buckets: int) -> DataFrame:
+    """:func:`_bucketed` ``rows`` with ``_f``, each key's count among
+    them. The window partitions by ``(kb, key)``, which the ``kb``
+    exchange already satisfies, so bucketing and counting cost one
+    shuffle together."""
+    from pyspark.sql import Window
+
+    return _bucketed(rows, buckets).withColumn(
+        "_f", F.count(F.lit(1)).over(Window.partitionBy("kb", "key"))
+    )
 
 
 def write_floored_index(
@@ -481,9 +507,14 @@ def write_floored_index(
       queries read);
     - ``<base_dir>/residual`` — postings of keys still below the floor,
       hash-partitioned into ``residual_buckets`` directories by
-      ``kb = pmod(xxhash64(key), B)`` so an append rewrites only the
-      buckets its keys hash to (dynamic partition overwrite), never the
-      whole store.
+      ``kb = pmod(xxhash64(key), B)``, one parquet file per bucket
+      (:func:`_bucketed`), so an append rewrites only the buckets its
+      keys hash to, never the whole store.
+
+    The key count that decides each key's half runs over the bucket
+    shuffle (:func:`_key_counts`), so the build takes one exchange and
+    its parallelism is at most ``residual_buckets``: size the bucket
+    count to the cluster as well as to the data.
 
     Invariant: every key's postings live wholly in ``index`` (lake-wide
     freq >= N) or wholly in ``residual`` (freq < N); their union is the
@@ -499,12 +530,6 @@ def write_floored_index(
     layout measured ahead (SCALE.md §Round-9). The residual half stays
     plain: it is append-time bookkeeping probed by raw key only.
     """
-    from pyspark.sql import Window
-
-    raw = build_posting_index(spark, sf_dir, specs)
-    tagged = raw.withColumn(
-        "_f", F.count(F.lit(1)).over(Window.partitionBy("key"))
-    )
     # Two writers (index half + residual half) consume the tagged frame;
     # without the checkpoint each write re-runs the whole unpivot +
     # key-window shuffle (Spark reuses exchanges within one job, not
@@ -513,8 +538,10 @@ def write_floored_index(
     # checkpoint when a checkpoint dir is set (see its docstring) — or
     # skip the floor entirely at ingest and use append_floored_index's
     # incremental path, which is the production shape anyway.
-    tagged = truncate_lineage(tagged)
-    above = tagged.filter(F.col("_f") >= min_key_freq).drop("_f")
+    tagged = truncate_lineage(
+        _key_counts(build_posting_index(spark, sf_dir, specs), residual_buckets)
+    )
+    above = tagged.filter(F.col("_f") >= min_key_freq).drop("_f", "kb")
     if hashed_keys:
         above = above.withColumn("key_h", F.xxhash64("key"))
     # The index half is partitioned by COMMIT VERSION (`cv`): every
@@ -526,14 +553,9 @@ def write_floored_index(
     above.withColumn("cv", F.lit(1)).write.partitionBy("cv").mode(
         "error"
     ).parquet(f"{base_dir}/index")
-    (
-        tagged.filter(F.col("_f") < min_key_freq)
-        .drop("_f")
-        .withColumn("kb", F.pmod(F.xxhash64("key"), F.lit(residual_buckets)))
-        .write.partitionBy("kb")
-        .mode("error")
-        .parquet(f"{base_dir}/residual")
-    )
+    tagged.filter(F.col("_f") < min_key_freq).drop("_f").write.partitionBy(
+        "kb"
+    ).mode("error").parquet(f"{base_dir}/residual")
     # metadata LAST = the build's commit marker (see write_store_meta).
     # residual_buckets/hashed_keys persist so appends can never run
     # under a different modulus or layout than the store was written
@@ -555,9 +577,18 @@ def write_floored_index(
 
 
 def read_floored_index(spark: SparkSession, base_dir: str) -> DataFrame:
-    """The queryable half of a floored store, with the commit-version
-    bookkeeping column dropped — what searches should read."""
-    return spark.read.parquet(f"{base_dir}/index").drop("cv")
+    """The queryable half of a floored store as of its last commit,
+    with the commit-version bookkeeping column dropped — what searches
+    should read. Only ``cv=`` directories at or below the metadata's
+    ``version`` are read (partition-pruned), so a search that runs
+    while a commit is in flight, or after one crashed, never sees
+    postings a rollback would delete."""
+    meta = read_store_meta(spark, base_dir)
+    return (
+        _read_store_half(spark, base_dir, meta, "index")
+        .filter(F.col("cv") <= int(meta["version"]))
+        .drop("cv")
+    )
 
 
 def append_floored_index(
@@ -575,10 +606,11 @@ def append_floored_index(
     ``tests/test_floored_index.py``).
 
     Work is bounded by O(new postings + residual postings of touched
-    buckets + one pruned probe of the index's key set) — the existing
-    index is appended to, never rewritten, and the residual store is
-    rewritten only in the hash buckets the new keys touch. Cases per
-    new key:
+    buckets + one pruned probe of the index's key set), in one pass
+    (:func:`_plan_postings`): the touched buckets are scanned once and
+    shuffled once, the existing index is appended to, never rewritten,
+    and the residual store is rewritten only in the hash buckets the
+    new keys touch, one file per bucket. Cases per new key:
 
     - already in ``index`` (lake freq was >= N): its new postings
       append directly — the floor can only hold harder;
@@ -675,67 +707,50 @@ def _plan_postings(
 ) -> tuple[DataFrame, DataFrame, list[int]]:
     """What landing ``new_postings`` writes, as :func:`_commit`'s plan:
     the postings the index gains, the rewritten rows of the touched
-    residual buckets, and those buckets' ids."""
-    from pyspark.sql import Window
+    residual buckets, and those buckets' ids.
 
-    min_key_freq, residual_buckets = meta["min_key_freq"], meta["residual_buckets"]
+    One pass: a single frame holds the new postings plus every residual
+    row of the touched buckets (read with a static ``kb IN (...)``
+    prune), minus the keys the index already holds. It is shuffled once
+    by ``kb``, which also satisfies the ``(kb, key)`` frequency window,
+    and materialized once, so both writes scan it instead of recomputing
+    it. By the store invariant a touched key's count there is its
+    lake-wide frequency. A touched key at or above the floor moves to
+    the index; every other row — staying keys and the untouched keys
+    that share a bucket — is the bucket's rewrite, still partitioned by
+    ``kb``, so each bucket is staged as one file. Only a touched key can
+    move: an over-floor key the append did not touch (external damage
+    fsck reports) stays where it is. A key left in BOTH halves counts
+    its index rows only, and the rewrite drops its stale residual rows.
+    """
+    floor, buckets = meta["min_key_freq"], meta["residual_buckets"]
     new_p = truncate_lineage(new_postings)
-    index = _read_parquet_or_none(spark, f"{base_dir}/index")
-    if index is None:
-        # an initial build where EVERY key sat below the floor writes a
-        # row-less index (schema uninferable); treat as the empty index.
-        index = spark.createDataFrame([], new_p.schema)
-    residual = _read_parquet_or_none(spark, f"{base_dir}/residual")
-    if residual is None or "kb" not in residual.columns:
-        # an all-above-floor initial build writes an empty residual
-        # (no kb= partition dirs): treat as the empty store
-        residual = (
-            spark.createDataFrame([], new_p.schema)
-            .withColumn("kb", F.lit(0).cast("bigint"))
-        )
     touched = new_p.select("key").distinct()
-
+    kb_list = _bucket_ids(touched, buckets)
     # keys already at/above the floor: one broadcast-semi probe of the
-    # index's key set (bucket/partition-pruned on a bucketed layout)
-    idx_keys = (
-        index.join(F.broadcast(touched), "key", "left_semi").select("key").distinct()
+    # index's key set
+    idx_keys = truncate_lineage(
+        _read_store_half(spark, base_dir, meta, "index")
+        .join(F.broadcast(touched), "key", "left_semi")
+        .select("key")
+        .distinct()
     )
-    idx_keys = truncate_lineage(idx_keys)
-    new_to_index = new_p.join(F.broadcast(idx_keys), "key", "left_semi")
-    new_rest = new_p.join(F.broadcast(idx_keys), "key", "left_anti")
-
-    # candidates: the new sub-probe postings plus the touched keys'
-    # residual rows — lake-wide frequency for these keys is exactly
-    # count(candidates) by the store invariant. The anti-join against
-    # idx_keys keeps a key left in BOTH halves (external damage that
-    # fsck reports) from double counting: its index rows win, and the
-    # bucket rewrite below drops its stale residual rows.
-    res_touched = (
-        residual.join(F.broadcast(touched), "key", "left_semi")
-        .join(F.broadcast(idx_keys), "key", "left_anti")
-        .select(*new_p.columns)
+    residual = (
+        _read_store_half(spark, base_dir, meta, "residual")
+        .filter(F.col("kb").isin(kb_list))
+        .select(*_POSTING_COLS)
     )
-    cands = new_rest.unionByName(res_touched).withColumn(
-        "_f", F.count(F.lit(1)).over(Window.partitionBy("key"))
+    frame = truncate_lineage(
+        _key_counts(
+            new_p.unionByName(residual).join(F.broadcast(idx_keys), "key", "left_anti"),
+            buckets,
+        ).join(F.broadcast(touched.withColumn("_t", F.lit(True))), "key", "left")
     )
-    crossing = cands.filter(F.col("_f") >= min_key_freq).drop("_f")
-    staying = cands.filter(F.col("_f") < min_key_freq).drop("_f")
-
-    # rewrite ONLY the residual buckets the touched keys hash to; rows
-    # of untouched keys sharing those buckets are carried over.
-    touched_kb = touched.select(
-        F.pmod(F.xxhash64("key"), F.lit(residual_buckets)).alias("kb")
-    ).distinct()
-    keep = (
-        residual.join(F.broadcast(touched_kb), "kb", "left_semi")
-        .join(F.broadcast(touched), "key", "left_anti")
-        .select(*new_p.columns)
+    moves = F.col("_t").isNotNull() & (F.col("_f") >= floor)
+    to_index = new_p.join(F.broadcast(idx_keys), "key", "left_semi").unionByName(
+        frame.filter(moves).select(*_POSTING_COLS)
     )
-    rewrite = keep.unionByName(staying).withColumn(
-        "kb", F.pmod(F.xxhash64("key"), F.lit(residual_buckets))
-    )
-    kb_list = [int(r["kb"]) for r in touched_kb.collect()]  # bounded by B
-    return new_to_index.unionByName(crossing), rewrite, kb_list
+    return to_index, frame.filter(~moves).select(*_POSTING_COLS, "kb"), kb_list
 
 
 def _committed_meta(meta: dict, version: int, payload: dict) -> dict:
@@ -1015,32 +1030,27 @@ def fsck_floored_store(
                     continue
                 if k <= meta["version"] - _COMMIT_LOG_RETAIN:
                     fsio.delete(spark, f"{base_dir}/_commits/{name}")
-    index_dir, residual_dir = f"{base_dir}/index", f"{base_dir}/residual"
-    index = _read_parquet_or_none(spark, index_dir)
-    residual = _read_parquet_or_none(spark, residual_dir)
+    index = _read_store_half(spark, base_dir, meta, "index")
+    residual = _read_store_half(spark, base_dir, meta, "residual")
     floor = meta["min_key_freq"]
-    if index is not None:
-        out["duplicate_postings"] = (
-            index.groupBy("key", "table", "column", "row")
-            .agg(F.count(F.lit(1)).alias("_m"))
-            .filter(F.col("_m") > 1)
-            .count()
-        )
-        out["subfloor_in_index"] = (
-            index.groupBy("key")
-            .agg(F.count(F.lit(1)).alias("_f"))
-            .filter(F.col("_f") < floor)
-            .count()
-        )
-    if residual is not None and "kb" in residual.columns:
-        out["overfloor_in_residual"] = (
-            residual.groupBy("key")
-            .agg(F.count(F.lit(1)).alias("_f"))
-            .filter(F.col("_f") >= floor)
-            .count()
-        )
-    if index is None or residual is None or "kb" not in residual.columns:
-        return out
+    out["duplicate_postings"] = (
+        index.groupBy("key", "table", "column", "row")
+        .agg(F.count(F.lit(1)).alias("_m"))
+        .filter(F.col("_m") > 1)
+        .count()
+    )
+    out["subfloor_in_index"] = (
+        index.groupBy("key")
+        .agg(F.count(F.lit(1)).alias("_f"))
+        .filter(F.col("_f") < floor)
+        .count()
+    )
+    out["overfloor_in_residual"] = (
+        residual.groupBy("key")
+        .agg(F.count(F.lit(1)).alias("_f"))
+        .filter(F.col("_f") >= floor)
+        .count()
+    )
     dup_keys = truncate_lineage(
         residual.select("key").distinct().join(
             index.select("key").distinct(), "key", "left_semi"
@@ -1052,28 +1062,16 @@ def fsck_floored_store(
     # Drop the stale residual rows: rewrite only the buckets the
     # double-represented keys hash to (same pruned rewrite as an append).
     buckets = meta["residual_buckets"]
-    bad_kb = dup_keys.select(
-        F.pmod(F.xxhash64("key"), F.lit(buckets)).alias("kb")
-    ).distinct()
-    keep = residual.join(F.broadcast(bad_kb), "kb", "left_semi").join(
-        F.broadcast(dup_keys), "key", "left_anti"
+    bad_kb = _bucket_ids(dup_keys, buckets)
+    keep = (
+        residual.filter(F.col("kb").isin(bad_kb))
+        .join(F.broadcast(dup_keys), "key", "left_anti")
+        .drop("kb")
     )
     out["repaired_rows"] = (
         residual.join(F.broadcast(dup_keys), "key", "left_semi").count()
     )
-    _commit(
-        spark,
-        base_dir,
-        meta,
-        {},
-        lambda: (
-            None,
-            keep.drop("kb").withColumn(
-                "kb", F.pmod(F.xxhash64("key"), F.lit(buckets))
-            ),
-            [int(r["kb"]) for r in bad_kb.collect()],  # bounded by B
-        ),
-    )
+    _commit(spark, base_dir, meta, {}, lambda: (None, _bucketed(keep, buckets), bad_kb))
     return out
 
 

@@ -986,3 +986,117 @@ def test_claim_revoked_before_complete_aborts(spark, monkeypatch, writer):
             _floored_ingest_batch(spark, base, specs[1], t1, 0)
     assert fired == [{"action": "rolled_back", "version": 1}]
     assert read_store_meta(spark, base) == before
+
+
+def test_search_never_sees_uncommitted_postings(spark):
+    """A search that runs while a commit is in flight (or after it
+    crashed) reads the store as of its last commit: an append that dies
+    after its index write and before ``_COMPLETE`` leaves a ``cv=``
+    directory on disk, and read_floored_index must not return its
+    postings, which the rollback then deletes."""
+    import multi_attribute_join_search_with_mapreduce_spark.index as idx
+    from multi_attribute_join_search_with_mapreduce_spark.index import (
+        recover_floored_store,
+    )
+
+    lake, specs = _mini_lake(spark, "majs_ccr_visible_")
+    base = os.path.join(scratch_dir("majs_ccr_visible_"), "store")
+    write_floored_index(spark, lake, base, specs[:1], FLOOR)
+    pre = sorted(map(tuple, read_floored_index(spark, base).collect()))
+
+    def crash(*a, **k):
+        raise RuntimeError("injected crash before stage")
+
+    orig = idx._stage_residual_rewrite
+    idx._stage_residual_rewrite = crash
+    try:
+        with pytest.raises(RuntimeError, match="injected crash"):
+            append_floored_index(spark, lake, base, (specs[1],))
+    finally:
+        idx._stage_residual_rewrite = orig
+    assert os.path.isdir(f"{base}/index/cv=2"), "the torn commit wrote no postings"
+    assert sorted(map(tuple, read_floored_index(spark, base).collect())) == pre
+    assert recover_floored_store(spark, base)["action"] == "rolled_back"
+    assert sorted(map(tuple, read_floored_index(spark, base).collect())) == pre
+
+
+def test_append_never_moves_untouched_key(spark):
+    """Only a key the append touches can cross the floor. An over-floor
+    key planted in a bucket the append rewrites (external damage fsck
+    reports as ``overfloor_in_residual``) stays in the residual half,
+    carried over with its bucket, and fsck still reports it."""
+    from multi_attribute_join_search_with_mapreduce_spark.index import (
+        fsck_floored_store,
+    )
+
+    lake, specs = _mini_lake(spark, "majs_untouched_")
+    base = os.path.join(scratch_dir("majs_untouched_"), "store")
+    # one bucket: every append touches the planted key's bucket
+    write_floored_index(spark, lake, base, specs[:1], FLOOR, residual_buckets=1)
+    spark.createDataFrame(
+        [("planted", 9, 0, 1), ("planted", 9, 0, 2)],
+        "key STRING, `table` INT, `column` INT, `row` BIGINT",
+    ).withColumn("kb", F.lit(0)).write.partitionBy("kb").mode("append").parquet(
+        f"{base}/residual"
+    )
+    assert fsck_floored_store(spark, base)["overfloor_in_residual"] == 1
+    append_floored_index(spark, lake, base, (specs[1],))
+    assert read_floored_index(spark, base).filter(F.col("key") == "planted").count() == 0
+    residual = spark.read.parquet(f"{base}/residual")
+    assert residual.filter(F.col("key") == "planted").count() == 2
+    assert fsck_floored_store(spark, base)["overfloor_in_residual"] == 1
+    _assert_same_rows(
+        read_floored_index(spark, base),
+        build_posting_index(spark, lake, specs[:2], min_key_freq=FLOOR),
+    )
+
+
+def test_one_residual_file_per_bucket(spark):
+    """Every residual writer leaves one parquet file per bucket: the
+    build, an append (whose rewrite unions carried-over and new rows),
+    and the ``fsck --repair`` rewrite."""
+    from multi_attribute_join_search_with_mapreduce_spark.index import (
+        TableSpec,
+        fsck_floored_store,
+    )
+
+    buckets = 4
+    lake = os.path.join(scratch_dir("majs_one_file_"), "lake")
+    os.makedirs(lake)
+    # "x" twice (index) and singletons in every bucket (residual); t1
+    # repeats half of t0's singletons (they cross) and adds new ones
+    spark.createDataFrame(
+        [(1, "x"), (2, "x")] + [(i, f"k{i}") for i in range(3, 203)], ["pk", "s0"]
+    ).write.parquet(f"{lake}/t0.parquet")
+    spark.createDataFrame(
+        [(i, f"k{i}") for i in range(3, 103)] + [(i, f"n{i}") for i in range(103, 303)],
+        ["pk", "s0"],
+    ).write.parquet(f"{lake}/t1.parquet")
+    s0, s1 = TableSpec("t0", 1, "pk", ("s0",)), TableSpec("t1", 2, "pk", ("s0",))
+    base = os.path.join(scratch_dir("majs_one_file_"), "store")
+
+    def files_per_bucket():
+        root = f"{base}/residual"
+        return {
+            d: sum(1 for f in os.listdir(os.path.join(root, d))
+                   if f.endswith(".parquet") and not f.startswith("."))
+            for d in os.listdir(root) if d.startswith("kb=")
+        }
+
+    write_floored_index(spark, lake, base, (s0,), FLOOR, residual_buckets=buckets)
+    assert files_per_bucket() == {f"kb={kb}": 1 for kb in range(buckets)}
+    append_floored_index(spark, lake, base, (s1,))
+    assert files_per_bucket() == {f"kb={kb}": 1 for kb in range(buckets)}
+    _store_equals_rebuild(spark, lake, base, (s0, s1))
+    # plant a double-represented key; the repair rewrites its bucket
+    (
+        read_floored_index(spark, base)
+        .filter(F.col("key") == "x")
+        .withColumn("kb", F.pmod(F.xxhash64("key"), F.lit(buckets)))
+        .write.partitionBy("kb")
+        .mode("append")
+        .parquet(f"{base}/residual")
+    )
+    assert fsck_floored_store(spark, base, repair=True)["repaired_rows"] == 2
+    assert files_per_bucket() == {f"kb={kb}": 1 for kb in range(buckets)}
+    _store_equals_rebuild(spark, lake, base, (s0, s1))

@@ -13,7 +13,13 @@ volume (the same lake as `tools/sf1_probe_widekey.py`):
    append_floored_index(documents) — the append is the number that
    matters (the initial write is paid once);
 3. equality check: maintained index == full floored rebuild (row-set);
-4. touched-bucket fraction of the residual rewrite.
+4. touched-bucket fraction of the residual rewrite;
+5. ``residual_files``: parquet files in the maintained store's residual
+   half after the append (one per bucket when every writer partitions
+   its rows by bucket).
+
+Working stores live under the process's scratch directory
+(``scratch.scratch_dir``, under ``$TMPDIR``) and are removed at exit.
 
 Usage: python tools/sf1_probe_floored_append.py [sf_dir] [out_json]
 """
@@ -22,7 +28,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
 import time
 
@@ -59,9 +64,10 @@ def main() -> None:
 
     # ×10 documents lake (same construction as sf1_probe_widekey:
     # replica text perturbed so singleton text keys stay singletons)
-    lake = "/tmp/majs_floored_probe_lake"
-    if os.path.isdir(lake):
-        shutil.rmtree(lake)
+    from multi_attribute_join_search_with_mapreduce_spark.scratch import scratch_dir
+
+    work = scratch_dir("majs_floored_probe_")
+    lake = os.path.join(work, "lake")
     os.makedirs(lake)
     for name in ("region", "nation", "customer", "supplier", "part", "events",
                  "embeddings"):
@@ -82,15 +88,13 @@ def main() -> None:
     rest_specs = tuple(s for s in WIDE_LAKE_TABLES if s.name != "documents")
 
     # 1. full floored rebuild (what a landing would cost without the store)
-    full_dir = "/tmp/majs_floored_probe_full"
-    shutil.rmtree(full_dir, ignore_errors=True)
+    full_dir = os.path.join(work, "full")
     t0 = time.monotonic()
     write_floored_index(spark, lake, full_dir, WIDE_LAKE_TABLES, FLOOR, BUCKETS)
     results["full_rebuild_s"] = round(time.monotonic() - t0, 2)
 
     # 2. maintenance: initial store without documents, then append them
-    store = "/tmp/majs_floored_probe_store"
-    shutil.rmtree(store, ignore_errors=True)
+    store = os.path.join(work, "store")
     t0 = time.monotonic()
     write_floored_index(spark, lake, store, rest_specs, FLOOR, BUCKETS)
     results["initial_write_s"] = round(time.monotonic() - t0, 2)
@@ -125,6 +129,12 @@ def main() -> None:
     )
     results["touched_buckets"] = touched
     results["touched_bucket_fraction"] = round(touched / BUCKETS, 2)
+    results["residual_files"] = sum(
+        1
+        for _dirpath, _dirs, names in os.walk(f"{store}/residual")
+        for n in names
+        if n.endswith(".parquet") and not n.startswith(".")
+    )
 
     with open(out_json, "w") as f:
         json.dump(results, f, indent=2)
