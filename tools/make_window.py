@@ -18,7 +18,9 @@ Priority order (first 50 win):
 
 Usage: python tools/make_window.py --round N [--apply]
 Default is a dry run printing the JSON entry; --apply appends it to
-driver_window.json (refusing if round N already exists).
+driver_window.json (refusing if round N already exists). Either way,
+if the headroom check fails the entry and the report are printed and
+the run exits non-zero without appending.
 """
 
 from __future__ import annotations
@@ -155,11 +157,6 @@ def main() -> None:
     registry_names = list(entry_mod.queries())
     names, meta = compose(registry_names)
     hr = headroom(registry_names)
-    if not hr["fits"]:
-        raise SystemExit(
-            "window budget exceeded for the next two rounds: "
-            + json.dumps(hr)
-        )
     why = (
         f"auto (tools/make_window.py): red first ({meta['n_red']}), then "
         f"never-sampled ({meta['n_never']}), then stale<r{meta['cutoff']} "
@@ -168,6 +165,11 @@ def main() -> None:
     )
     entry = {"round": rnd, "why": why, "names": names}
     print(json.dumps({"entry": entry, **meta, "headroom": hr}, indent=1))
+    if not hr["fits"]:
+        raise SystemExit(
+            "window budget exceeded for the next two rounds: "
+            + json.dumps(hr)
+        )
     if not apply:
         return
     path = os.path.join(REPO, "driver_window.json")
