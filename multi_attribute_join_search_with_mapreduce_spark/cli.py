@@ -131,7 +131,7 @@ def build_parser() -> argparse.ArgumentParser:
         help="comma-separated wide-lake table names to land into "
         "--floored-store before searching (append_floored_index: keys "
         "cross the floor as tables combine; only touched residual "
-        "buckets are rewritten)",
+        "buckets get a new generation)",
     )
     p.add_argument(
         "--fsck-store",
@@ -143,11 +143,11 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--repair",
         action="store_true",
-        help="with --fsck-store: resolve an unresolved commit first "
-        "(roll the torn append forward if its staged rewrite is "
-        "durable, else roll it back bytewise), then drop stale "
-        "residual rows of double-represented keys (the legacy "
-        "interrupted-append artifact; the index side is authoritative)",
+        help="with --fsck-store: roll back an unresolved commit first "
+        "(delete the files it added; the committed store is never "
+        "touched before a commit point), delete residual generations "
+        "a later commit superseded, then drop stale residual rows of "
+        "double-represented keys (the index side is authoritative)",
     )
     p.add_argument(
         "--explain",
@@ -234,6 +234,15 @@ def main(argv: list[str] | None = None) -> int:
             return 2
     elif bool(args.query_csv) == bool(args.query_table):
         print("error: exactly one of --query-csv / --query-table is required", file=sys.stderr)
+        return 2
+    # The SQL strategy searches its own registered lake views, so an
+    # index to read or a probed intermediate to write would be ignored.
+    if args.strategy == "sql" and (args.read_index or args.write_probed):
+        print(
+            "error: --read-index and --write-probed support the dataframe "
+            "strategy only (the sql strategy would silently ignore them)",
+            file=sys.stderr,
+        )
         return 2
 
     from multi_attribute_join_search_with_mapreduce_spark.session import get_spark

@@ -32,11 +32,12 @@ of one is resolved by :func:`recover_floored_store`.
 from __future__ import annotations
 
 import json
+import uuid
 import weakref
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from multi_attribute_join_search_with_mapreduce_spark import fsio
@@ -134,8 +135,6 @@ def build_posting_index(
         normalize_col(F.col("value")).alias("key"), "table", "column", "row"
     ).filter(F.col("key") != "")
     if min_key_freq > 1:
-        from pyspark.sql import Window
-
         idx = (
             idx.withColumn(
                 "_f", F.count(F.lit(1)).over(Window.partitionBy("key"))
@@ -336,9 +335,9 @@ def write_store_meta(spark: SparkSession, base_dir: str, meta: dict) -> None:
     leaves no metadata and :func:`read_store_meta` refuses the store
     loudly rather than letting anything mutate a torn half-build. For
     every later mutation the rename is the COMMIT POINT of the protocol
-    (:func:`_commit`): the version bump and the payload's log entries
-    (landed tables, or a streaming landed-batch marker) all land in one
-    atomic replace."""
+    (:func:`_commit`): the version bump, the residual bucket
+    generations and the payload's log entries (landed tables, or a
+    streaming landed-batch marker) all land in one atomic replace."""
     fsio.write_atomic(
         spark,
         f"{base_dir}/_store_meta.json",
@@ -351,20 +350,21 @@ def read_store_meta(spark: SparkSession, base_dir: str) -> dict:
 
     Raises ``ValueError`` when the file is absent (a torn initial build,
     or a store older than the metadata) or carries no commit
-    ``version`` (a store older than the commit protocol, whose flat
-    index the protocol's ``cv=`` partitions would corrupt). Appends,
-    streaming triggers, :func:`recover_floored_store` and
-    :func:`fsck_floored_store` all read the metadata here, so every one
-    of them refuses those stores with this one error; rebuild them with
-    :func:`write_floored_index`."""
+    ``version`` or ``residual_gen`` (a layout older than the commit
+    protocol's ``cv=`` partitions or its residual generations, which
+    the protocol would corrupt). Appends, streaming triggers,
+    :func:`recover_floored_store` and :func:`fsck_floored_store` all
+    read the metadata here, so every one of them refuses those stores
+    with this one error; rebuild them with :func:`write_floored_index`."""
     data = fsio.read_bytes(spark, f"{base_dir}/_store_meta.json")
     meta = None if data is None else json.loads(data.decode())
-    if meta is None or "version" not in meta:
+    if meta is None or "version" not in meta or "residual_gen" not in meta:
         raise ValueError(
             f"floored store {base_dir} has no _store_meta.json with a "
-            "commit version: a torn initial build, or a store layout "
-            "older than the commit protocol, which appends, recovery and "
-            "fsck refuse. Rebuild it with write_floored_index."
+            "commit version and residual generations: a torn initial "
+            "build, or a store layout older than the commit protocol, "
+            "which appends, recovery and fsck refuse. Rebuild it with "
+            "write_floored_index."
         )
     return meta
 
@@ -387,10 +387,6 @@ def _commit_marker(base_dir: str, version: int) -> str:
     return f"{base_dir}/_commits/v{version:020d}.json"
 
 
-def _commit_stage(base_dir: str, version: int) -> str:
-    return f"{base_dir}/_stage/v{version:020d}"
-
-
 def claim_commit(
     spark: SparkSession, base_dir: str, version: int, payload: dict
 ) -> bool:
@@ -402,7 +398,9 @@ def claim_commit(
     :func:`recover_floored_store` resolves: a marker with
     ``version > meta["version"]`` is a commit that claimed its slot but
     never finished. Markers at or below the metadata version are the
-    store's commit log and are kept."""
+    store's commit log and are kept. :func:`_commit` puts a per-writer
+    ``token`` in ``payload``, so its claim check tells its own marker
+    from a later claimant's."""
     return fsio.create_exclusive(
         spark,
         _commit_marker(base_dir, version),
@@ -439,17 +437,25 @@ _POSTING_COLS = ("key", "table", "column", "row")
 def _read_store_half(
     spark: SparkSession, base_dir: str, meta: dict, half: str
 ) -> DataFrame:
-    """One half of a floored store (``"index"`` or ``"residual"``),
-    read with the schema its metadata fixes: the posting columns, plus
-    ``key_h`` on a hashed store's index, plus the partition column
-    (``cv`` or ``kb``). No job infers a schema, and a half with no rows
-    yet reads as empty; a corrupt file still raises when a job reads
-    it."""
+    """One half of a floored store (``"index"`` or ``"residual"``) as
+    of the commit ``meta`` records, read with the schema the metadata
+    fixes: the index's ``cv <= version`` directories, with ``key_h`` on
+    a hashed store and ``cv`` kept; the residual's live generations
+    (``residual/kb=B/cv=residual_gen[B]``, 1 when absent), with ``kb``
+    kept. Both filters are on partition columns only, so they prune
+    directories. No job infers a schema, and a half with no rows yet
+    reads as empty; a corrupt file still raises when a job reads it."""
     if half == "index":
-        extra = (", key_h BIGINT" if meta["hashed_keys"] else "") + ", cv INT"
+        schema = _POSTING_SCHEMA + (", key_h BIGINT" if meta["hashed_keys"] else "")
+        live = F.col("cv") <= int(meta["version"])
     else:
-        extra = ", kb INT"
-    return spark.read.schema(_POSTING_SCHEMA + extra).parquet(f"{base_dir}/{half}")
+        schema = _POSTING_SCHEMA + ", kb INT"
+        gens = " ".join(
+            f"WHEN {int(kb)} THEN {int(g)}" for kb, g in meta["residual_gen"].items()
+        )
+        live = F.expr(f"cv = CASE kb {gens} ELSE 1 END" if gens else "cv = 1")
+    df = spark.read.schema(schema + ", cv INT").parquet(f"{base_dir}/{half}").filter(live)
+    return df if half == "index" else df.drop("cv")
 
 
 def _kb(buckets: int):
@@ -479,8 +485,6 @@ def _key_counts(rows: DataFrame, buckets: int) -> DataFrame:
     them. The window partitions by ``(kb, key)``, which the ``kb``
     exchange already satisfies, so bucketing and counting cost one
     shuffle together."""
-    from pyspark.sql import Window
-
     return _bucketed(rows, buckets).withColumn(
         "_f", F.count(F.lit(1)).over(Window.partitionBy("kb", "key"))
     )
@@ -508,8 +512,11 @@ def write_floored_index(
     - ``<base_dir>/residual`` — postings of keys still below the floor,
       hash-partitioned into ``residual_buckets`` directories by
       ``kb = pmod(xxhash64(key), B)``, one parquet file per bucket
-      (:func:`_bucketed`), so an append rewrites only the buckets its
-      keys hash to, never the whole store.
+      (:func:`_bucketed`) in the bucket's generation directory
+      ``kb=B/cv=G`` (the build writes ``G=1``; the metadata's
+      ``residual_gen`` names each bucket's live one), so an append
+      writes new generations only of the buckets its keys hash to,
+      never the whole store.
 
     The key count that decides each key's half runs over the bucket
     shuffle (:func:`_key_counts`), so the build takes one exchange and
@@ -553,9 +560,9 @@ def write_floored_index(
     above.withColumn("cv", F.lit(1)).write.partitionBy("cv").mode(
         "error"
     ).parquet(f"{base_dir}/index")
-    tagged.filter(F.col("_f") < min_key_freq).drop("_f").write.partitionBy(
-        "kb"
-    ).mode("error").parquet(f"{base_dir}/residual")
+    tagged.filter(F.col("_f") < min_key_freq).drop("_f").withColumn(
+        "cv", F.lit(1)
+    ).write.partitionBy("kb", "cv").mode("error").parquet(f"{base_dir}/residual")
     # metadata LAST = the build's commit marker (see write_store_meta).
     # residual_buckets/hashed_keys persist so appends can never run
     # under a different modulus or layout than the store was written
@@ -569,6 +576,7 @@ def write_floored_index(
             "residual_buckets": residual_buckets,
             "hashed_keys": hashed_keys,
             "version": 1,
+            "residual_gen": {},
             "landed_tables": sorted(
                 [s.name, s.table_id] for s in specs
             ),
@@ -584,11 +592,7 @@ def read_floored_index(spark: SparkSession, base_dir: str) -> DataFrame:
     while a commit is in flight, or after one crashed, never sees
     postings a rollback would delete."""
     meta = read_store_meta(spark, base_dir)
-    return (
-        _read_store_half(spark, base_dir, meta, "index")
-        .filter(F.col("cv") <= int(meta["version"]))
-        .drop("cv")
-    )
+    return _read_store_half(spark, base_dir, meta, "index").drop("cv")
 
 
 def append_floored_index(
@@ -609,8 +613,8 @@ def append_floored_index(
     buckets + one pruned probe of the index's key set), in one pass
     (:func:`_plan_postings`): the touched buckets are scanned once and
     shuffled once, the existing index is appended to, never rewritten,
-    and the residual store is rewritten only in the hash buckets the
-    new keys touch, one file per bucket. Cases per new key:
+    and only the residual buckets the new keys hash to get a new
+    generation, one file per bucket. Cases per new key:
 
     - already in ``index`` (lake freq was >= N): its new postings
       append directly — the floor can only hold harder;
@@ -679,14 +683,11 @@ def append_floored_postings(
 
     Exactly-once EFFECT on an at-least-once substrate: foreachBatch
     replays batches after failures, so idempotence is manufactured, not
-    assumed. A commit a previous incarnation left unfinished is
-    resolved first — roll forward if the crashed trigger's staged
-    rewrite was durable (its payload carries the batch id, so
-    ``landed_batches`` records it as the crashed trigger would have),
-    bytewise roll back otherwise — THEN ``landed_batches`` decides: a
-    replayed batch that committed is a no-op, one that rolled back
-    re-lands. The version bump and the batch marker commit in ONE
-    atomic metadata rename."""
+    assumed. A commit a previous incarnation left unfinished is rolled
+    back first (:func:`recover_floored_store`), THEN ``landed_batches``
+    decides: a replayed batch whose commit reached the metadata rename
+    is a no-op, any other re-lands. The version bump and the batch
+    marker commit in ONE atomic metadata rename."""
     meta = read_store_meta(spark, base_dir)
     if pending_commit(spark, base_dir, meta) is not None:
         recover_floored_store(spark, base_dir)
@@ -706,22 +707,25 @@ def _plan_postings(
     spark: SparkSession, new_postings: DataFrame, base_dir: str, meta: dict
 ) -> tuple[DataFrame, DataFrame, list[int]]:
     """What landing ``new_postings`` writes, as :func:`_commit`'s plan:
-    the postings the index gains, the rewritten rows of the touched
-    residual buckets, and those buckets' ids.
+    the postings the index gains, the new generation's rows of the
+    touched residual buckets, and those buckets' ids.
 
-    One pass: a single frame holds the new postings plus every residual
-    row of the touched buckets (read with a static ``kb IN (...)``
-    prune), minus the keys the index already holds. It is shuffled once
-    by ``kb``, which also satisfies the ``(kb, key)`` frequency window,
-    and materialized once, so both writes scan it instead of recomputing
-    it. By the store invariant a touched key's count there is its
-    lake-wide frequency. A touched key at or above the floor moves to
-    the index; every other row — staying keys and the untouched keys
-    that share a bucket — is the bucket's rewrite, still partitioned by
-    ``kb``, so each bucket is staged as one file. Only a touched key can
-    move: an over-floor key the append did not touch (external damage
-    fsck reports) stays where it is. A key left in BOTH halves counts
-    its index rows only, and the rewrite drops its stale residual rows.
+    One pass: a single frame holds the new postings plus every live
+    residual row of the touched buckets (read with a static
+    ``kb IN (...)`` prune), minus the keys the index already holds. It
+    is shuffled once by ``kb``, which also satisfies the ``(kb, key)``
+    frequency window and the flag marking the keys with new postings,
+    and materialized once, so both writes scan it instead of
+    recomputing it. By the store invariant a touched key's count there
+    is its lake-wide frequency.
+    A touched key at or above the floor moves to the index; every other
+    row — staying keys and the untouched keys that share a bucket — is
+    the bucket's new generation, still partitioned by ``kb``, so each
+    bucket is written as one file. Only a touched key can move: an
+    over-floor key the append did not touch (external damage fsck
+    reports) stays where it is. A key left in BOTH halves counts its
+    index rows only, and the new generation drops its stale residual
+    rows.
     """
     floor, buckets = meta["min_key_freq"], meta["residual_buckets"]
     new_p = truncate_lineage(new_postings)
@@ -740,75 +744,74 @@ def _plan_postings(
         .filter(F.col("kb").isin(kb_list))
         .select(*_POSTING_COLS)
     )
+    # _t: the key has a new posting. It is taken over the count's
+    # (kb, key) window, so it needs no broadcast of the touched keys.
     frame = truncate_lineage(
         _key_counts(
-            new_p.unionByName(residual).join(F.broadcast(idx_keys), "key", "left_anti"),
+            new_p.withColumn("_n", F.lit(True))
+            .unionByName(residual.withColumn("_n", F.lit(False)))
+            .join(F.broadcast(idx_keys), "key", "left_anti"),
             buckets,
-        ).join(F.broadcast(touched.withColumn("_t", F.lit(True))), "key", "left")
+        ).withColumn("_t", F.max("_n").over(Window.partitionBy("kb", "key")))
     )
-    moves = F.col("_t").isNotNull() & (F.col("_f") >= floor)
+    moves = F.col("_t") & (F.col("_f") >= floor)
     to_index = new_p.join(F.broadcast(idx_keys), "key", "left_semi").unionByName(
         frame.filter(moves).select(*_POSTING_COLS)
     )
     return to_index, frame.filter(~moves).select(*_POSTING_COLS, "kb"), kb_list
 
 
-def _committed_meta(meta: dict, version: int, payload: dict) -> dict:
-    """The metadata a commit of ``payload`` at ``version`` leaves
-    behind — one definition for the committing writer and for
-    :func:`recover_floored_store`'s roll-forward. ``tables`` adds to
-    ``landed_tables``; ``batch_id`` adds to ``landed_batches``."""
-    out = dict(meta, version=version)
-    if payload.get("tables"):
-        out["landed_tables"] = sorted(
-            meta["landed_tables"] + [list(t) for t in payload["tables"]]
-        )
-    if payload.get("batch_id") is not None:
-        out["landed_batches"] = sorted(
-            set(meta.get("landed_batches", [])) | {int(payload["batch_id"])}
-        )
-    return out
+def _delete_version(spark: SparkSession, base_dir: str, version: int) -> None:
+    """Delete every file a commit of ``version`` writes — the index's
+    ``cv={version}`` directory and each bucket's ``cv={version}``
+    generation — plus the aborted-job ``_temporary`` debris of both
+    halves, which a later write would otherwise merge into its own
+    output. Only ever called for a version above the committed one, so
+    nothing the metadata refers to goes."""
+    fsio.delete(spark, f"{base_dir}/index/cv={version}")
+    fsio.delete(spark, f"{base_dir}/index/_temporary")
+    for kb in fsio.listdir(spark, f"{base_dir}/residual"):
+        if kb.startswith("kb="):
+            fsio.delete(spark, f"{base_dir}/residual/{kb}/cv={version}")
+    fsio.delete(spark, f"{base_dir}/residual/_temporary")
 
 
 def _commit(spark: SparkSession, base_dir: str, meta: dict, payload: dict, plan) -> None:
     """The ONE commit path of the floored store: a table append, a
     streaming trigger and fsck's residual repair all mutate the store
     through here. ``payload`` (an append's ``tables``, a trigger's
-    ``batch_id``, or nothing for a repair) rides in the claim marker
-    and the ``_COMPLETE`` flag. ``plan()`` runs once the slot is
-    claimed and returns ``(to_index, rewrite, kb_list)``: the postings
+    ``batch_id``, or nothing for a repair) rides in the claim marker.
+    ``plan()`` returns ``(to_index, rewrite, kb_list)``: the postings
     the index gains (or None), and the new rows of the residual buckets
-    ``kb_list`` names. In order:
+    ``kb_list`` names. A commit only adds files until its commit point.
+    In order, for ``v = version + 1``:
 
-    1. claim ``version + 1`` (:func:`claim_commit`): of any number of
-       concurrent writers exactly one proceeds and the losers raise
-       :class:`ConcurrentAppendError` with the store untouched; a
+    1. claim ``v`` (:func:`claim_commit`) with a fresh token: of any
+       number of concurrent writers exactly one proceeds and the losers
+       raise :class:`ConcurrentAppendError` with the store untouched; a
        pending earlier commit holds the slot, so it fences everyone;
-    2. land the index postings under ``cv={version + 1}`` — a rollback
-       is one directory delete, and queries stay correct throughout
-       because committed ``cv=`` directories are never touched;
-    3. stage the residual rewrite ON DISK under ``_stage/`` before any
-       bucket is deleted (ADVICE r10: executor-memory staging would
-       lose the carried-over rows of untouched keys on a failure after
-       the deletes);
-    4. check the claim is still live (:func:`_require_live_claim`),
-       flag the stage ``_COMPLETE`` — with the kb swap lists and the
-       payload, so roll-forward is self-describing even if the claim
-       marker tore — swap the staged buckets in, and check the claim
-       again;
-    5. write the metadata (:func:`_committed_meta`) in one atomic
-       rename: the commit point;
-    6. delete the stage. It must outlive the swap until the rename
-       commits: the ``_COMPLETE`` flag is the roll-FORWARD evidence,
-       and deleting it earlier would make a crash in the
-       swap-done→rename window look like a pre-stage crash, whose
-       rollback cannot restore the already-swapped buckets.
+    2. delete any ``cv=v`` debris an aborted writer left
+       (:func:`_delete_version`);
+    3. plan;
+    4. write the index postings under ``index/cv=v`` and each touched
+       bucket's new generation under ``residual/kb=B/cv=v`` (a bucket
+       whose every key left gets generation ``v`` with no directory);
+    5. check that the claim is still this writer's
+       (:func:`_require_live_claim`);
+    6. write the metadata — version, ``residual_gen`` and the payload's
+       log entry — in one atomic rename: the commit point;
+    7. delete the touched buckets' superseded generations.
 
-    A crash at any point is resolved by :func:`recover_floored_store`:
-    roll forward once ``_COMPLETE`` exists, bytewise roll back before.
+    No file the committed metadata refers to is deleted or renamed
+    before the commit point, and readers see only committed ``cv=``
+    directories, so a crash anywhere before it leaves the committed
+    store intact: :func:`recover_floored_store` rolls the commit back
+    by deleting ``cv=v``. A crash after it leaves only superseded
+    generations, which no reader sees and ``fsck --repair`` deletes.
     """
     version = int(meta["version"]) + 1
-    if not claim_commit(spark, base_dir, version, payload):
+    token = uuid.uuid4().hex
+    if not claim_commit(spark, base_dir, version, dict(payload, token=token)):
         raise ConcurrentAppendError(
             f"floored store {base_dir}: commit slot v{version} is taken "
             "by an unresolved commit — a concurrent writer is "
@@ -817,6 +820,7 @@ def _commit(spark: SparkSession, base_dir: str, meta: dict, payload: dict, plan)
             "recover_floored_store (CLI: --fsck-store <dir> --repair); "
             "then re-read the store and retry."
         )
+    _delete_version(spark, base_dir, version)
     to_index, rewrite, kb_list = plan()
     if to_index is not None:
         if meta["hashed_keys"]:  # hashed-layout store: keep it uniform
@@ -824,134 +828,77 @@ def _commit(spark: SparkSession, base_dir: str, meta: dict, payload: dict, plan)
         to_index.withColumn("cv", F.lit(version)).write.partitionBy("cv").mode(
             "append"
         ).parquet(f"{base_dir}/index")
-    stage = _commit_stage(base_dir, version)
-    flag = dict(payload, **_stage_residual_rewrite(spark, stage, rewrite, kb_list))
-    _require_live_claim(spark, base_dir, version)
-    fsio.write_atomic(spark, f"{stage}/_COMPLETE", json.dumps(flag).encode())
-    _finish_residual_swap(spark, base_dir, stage, flag)
-    _require_live_claim(spark, base_dir, version)
-    write_store_meta(spark, base_dir, _committed_meta(meta, version, payload))
-    fsio.delete(spark, stage)
+    rewrite.withColumn("cv", F.lit(version)).write.partitionBy("kb", "cv").mode(
+        "append"
+    ).parquet(f"{base_dir}/residual")
+    _require_live_claim(spark, base_dir, version, token)
+    old_gen = meta["residual_gen"]
+    out = dict(
+        meta,
+        version=version,
+        residual_gen=dict(old_gen, **{str(kb): version for kb in kb_list}),
+    )
+    if payload.get("tables"):
+        out["landed_tables"] = sorted(meta["landed_tables"] + payload["tables"])
+    if payload.get("batch_id") is not None:
+        out["landed_batches"] = sorted(
+            set(meta.get("landed_batches", [])) | {payload["batch_id"]}
+        )
+    write_store_meta(spark, base_dir, out)
+    for kb in kb_list:
+        fsio.delete(spark, f"{base_dir}/residual/kb={kb}/cv={old_gen.get(str(kb), 1)}")
 
 
-def _require_live_claim(spark: SparkSession, base_dir: str, version: int) -> None:
-    """Abort an in-flight commit whose claim marker has vanished —
-    i.e. `recover_floored_store` was run against this commit while the
-    writer was still alive (the marker cannot distinguish a crashed
-    claimant from a slow one, so recovery's contract is "run it only
-    when the claimant is known dead"; this check turns the operator
-    error of running it early into a LOUD abort instead of a silent
-    lost-update). Checked at the two points of no return: before the
-    residual-bucket swap (the first store mutation the rollback cannot
-    undo) and before the metadata commit. The recovery already rolled
-    the store back; the aborting writer just stops committing on top
-    of it."""
-    if not fsio.exists(spark, _commit_marker(base_dir, version)):
+def _require_live_claim(
+    spark: SparkSession, base_dir: str, version: int, token: str
+) -> None:
+    """Abort an in-flight commit whose claim is no longer its own: the
+    marker is gone, or holds another writer's token — i.e.
+    `recover_floored_store` ran against this commit while the writer
+    was still alive (the marker cannot tell a crashed claimant from a
+    slow one, so recovery's contract is "run it only when the claimant
+    is known dead"), and perhaps another writer has claimed the slot
+    since. Checked right before the commit point, so running recovery
+    early becomes a LOUD abort instead of a silent lost update; up to
+    that point this writer has only added files, so the store is as the
+    recovery left it."""
+    data = fsio.read_bytes(spark, _commit_marker(base_dir, version))
+    try:
+        live = json.loads(data or b"{}").get("token") == token
+    except (ValueError, AttributeError):  # torn marker: not this claim
+        live = False
+    if not live:
         raise ConcurrentAppendError(
             f"append v{version} on {base_dir}: the commit claim was "
             "revoked mid-append (recover_floored_store ran while this "
-            "appender was live — it must only run when the claimant is "
-            "known dead). The recovery rolled the store back; this "
-            "append is aborted WITHOUT committing. Clean up any "
-            f"re-created cv={version} index directory via fsck --repair "
-            "and re-run the append."
+            "writer was live — it must only run when the claimant is "
+            "known dead). The store is as the recovery left it; this "
+            f"commit is aborted WITHOUT committing, and its cv={version} "
+            "files are deleted by the next commit of that version. "
+            "Re-read the store and retry."
         )
 
 
-def _stage_residual_rewrite(
-    spark: SparkSession, stage: str, rewrite: DataFrame, kb_list: list[int]
-) -> dict:
-    """Materialize the residual-bucket rewrite under ``stage`` and
-    return the swap lists: ``kb_replace`` (buckets with staged rows)
-    and ``kb_delete`` (touched buckets whose every key left — dynamic
-    partition overwrite could not express those, it only replaces
-    partitions PRESENT in the output)."""
-    rewrite.write.partitionBy("kb").mode("error").parquet(f"{stage}/residual")
-    staged = {
-        int(name.split("=", 1)[1])
-        for name in fsio.listdir(spark, f"{stage}/residual")
-        if name.startswith("kb=")
-    }
-    return {
-        "kb_replace": sorted(staged),
-        "kb_delete": sorted(set(kb_list) - staged),
-    }
-
-
-def _finish_residual_swap(
-    spark: SparkSession, base_dir: str, stage: str, flag: dict
-) -> None:
-    """Swap staged residual buckets into place. Resumable: delete-only
-    buckets re-delete (no-op), replace buckets are skipped once their
-    staged directory is gone (i.e. already swapped) — so a crash at any
-    point mid-swap is finished by running this again."""
-    residual_dir = f"{base_dir}/residual"
-    fsio.mkdirs(spark, residual_dir)
-    for kb in flag.get("kb_delete", []):
-        fsio.delete(spark, f"{residual_dir}/kb={kb}")
-    for kb in flag.get("kb_replace", []):
-        src = f"{stage}/residual/kb={kb}"
-        if not fsio.exists(spark, src):
-            continue  # already swapped by a previous attempt
-        fsio.delete(spark, f"{residual_dir}/kb={kb}")
-        if not fsio.rename(spark, src, f"{residual_dir}/kb={kb}"):
-            raise IOError(
-                f"residual swap: rename {src} -> {residual_dir}/kb={kb} failed"
-            )
-
-
 def recover_floored_store(spark: SparkSession, base_dir: str) -> dict:
-    """Resolve an interrupted commit on a floored store (the pending
-    marker :func:`pending_commit` reports), restoring the store to a
-    committed, invariant-clean state. Decision rule, from the durable
-    evidence :func:`_commit` leaves behind:
-
-    - stage ``_COMPLETE`` flag present → the index append finished and
-      the residual rewrite is fully materialized on disk: **roll
-      forward** — finish the (resumable) bucket swap, then write the
-      metadata the flag's payload leaves behind
-      (:func:`_committed_meta`), exactly as the crashed writer would
-      have.
-    - no ``_COMPLETE`` flag → the commit died before its rewrite was
-      durable: **roll back** — delete the partial stage and the torn
-      commit's ``cv={version}`` index directory (every posting it
-      landed, including the re-filed residual copies of crossing keys,
-      lives there and nowhere else; the residual half is untouched
-      before the swap starts), then release the claim marker so a
-      retry can re-claim the slot. The store is bytewise back to its
-      pre-commit state.
+    """Roll back an interrupted commit on a floored store (the pending
+    marker :func:`pending_commit` reports): delete every ``cv={v}``
+    directory it may have written under ``index/`` and
+    ``residual/kb=*/`` (:func:`_delete_version`), then release the
+    claim marker so a retry can re-claim the slot. A commit adds files
+    only until its metadata rename, so this restores the committed
+    store exactly, whatever point the commit reached; a commit that
+    reached the rename is not pending.
 
     Idempotent and itself crash-safe: every step re-runs cleanly, and
     re-invoking on a healthy store is a no-op (``action: "none"``).
-    Returns ``{"action": "none" | "rolled_forward" | "rolled_back",
-    "version": ...}``.
+    Returns ``{"action": "none" | "rolled_back", "version": ...}``.
     """
     meta = read_store_meta(spark, base_dir)
     pend = pending_commit(spark, base_dir, meta)
     if pend is None:
         return {"action": "none", "version": meta["version"]}
-    v = pend["version"]
-    stage = _commit_stage(base_dir, v)
-    flag_raw = fsio.read_bytes(spark, f"{stage}/_COMPLETE")
-    flag = None
-    if flag_raw is not None:
-        try:
-            flag = json.loads(flag_raw.decode())
-        except ValueError:
-            flag = None  # torn flag: the stage is not trustworthy
-    if flag is not None:
-        _finish_residual_swap(spark, base_dir, stage, flag)
-        # stage is deleted only AFTER the metadata rename below: the
-        # _COMPLETE flag is the roll-forward evidence, and a crash
-        # inside this very recovery must still roll forward on retry.
-        write_store_meta(spark, base_dir, _committed_meta(meta, v, flag))
-        fsio.delete(spark, stage)
-        return {"action": "rolled_forward", "version": v}
-    # roll back: the cv= directory holds exactly the torn commit's rows
-    fsio.delete(spark, f"{base_dir}/index/cv={v}")
-    fsio.delete(spark, f"{base_dir}/index/_temporary")  # aborted-job debris
-    fsio.delete(spark, stage)
-    fsio.delete(spark, _commit_marker(base_dir, v))
+    _delete_version(spark, base_dir, pend["version"])
+    fsio.delete(spark, _commit_marker(base_dir, pend["version"]))
     return {"action": "rolled_back", "version": meta["version"]}
 
 
@@ -961,17 +908,19 @@ def fsck_floored_store(
     """Invariant check (and optional repair) for a floored store.
     Queries stay correct whatever these checks find (the index half is
     authoritative), and a store no code outside this module has
-    touched reports all zeros.
+    touched reports all zeros. Both halves are read as of the last
+    commit: the committed index directories and the live residual
+    generations.
 
     Checks, each O(store) with key-level aggregates:
 
     - ``double_represented_keys`` — keys present in both halves
       (disjointness violation). With ``repair=True`` their residual
-      rows are dropped — the index side is authoritative — rewriting
-      ONLY the residual buckets those keys hash to. The repair is a
-      commit like any append (:func:`_commit`): fenced against
-      concurrent writers, staged on disk, and recoverable by
-      :func:`recover_floored_store` if it crashes mid-swap.
+      rows are dropped — the index side is authoritative — by writing
+      new generations of ONLY the residual buckets those keys hash to.
+      The repair is a commit like any append (:func:`_commit`, with no
+      index postings): fenced against concurrent writers and rolled
+      back by :func:`recover_floored_store` if it crashes.
     - ``subfloor_in_index`` / ``overfloor_in_residual`` — keys whose
       own-half frequency contradicts the floor. Unreachable from this
       module's code paths (reported, never auto-repaired: they imply
@@ -986,10 +935,10 @@ def fsck_floored_store(
       ``recover_floored_store`` is the sanctioned path for torn
       commits, and external double-lands need operator judgment.
     - ``pending_commit`` — an unresolved claim marker (crash or
-      in-flight concurrent writer). With ``repair=True`` it is
-      resolved FIRST via :func:`recover_floored_store` (roll forward
-      if the staged rewrite completed, else roll back), and the
-      remaining checks run on the recovered store.
+      in-flight concurrent writer). With ``repair=True`` it is rolled
+      back FIRST via :func:`recover_floored_store`, superseded residual
+      generations a crash after a commit point left behind are
+      deleted, and the remaining checks run on the recovered store.
 
     Returns the counts plus ``repaired_rows`` (residual rows dropped)
     and ``recovery`` (the recovery report, when one ran).
@@ -1012,11 +961,19 @@ def fsck_floored_store(
             out["pending_commit"] = None
             meta = read_store_meta(spark, base_dir)
     if repair:
-        # No commit is pending now, so every stage is crash debris: a
-        # committed version's stage that a crash after the metadata
-        # rename left behind, or one an aborted writer re-created.
-        for name in fsio.listdir(spark, f"{base_dir}/_stage"):
-            fsio.delete(spark, f"{base_dir}/_stage/{name}")
+        # Generation GC: a committed generation that is not its bucket's
+        # live one was superseded by a commit that crashed before its
+        # own cleanup. Generations above the version belong to the next
+        # commit, which deletes any debris there itself.
+        gen = meta["residual_gen"]
+        for kb in fsio.listdir(spark, f"{base_dir}/residual"):
+            if not kb.startswith("kb="):
+                continue
+            live = gen.get(kb[3:], 1)
+            for cv in fsio.listdir(spark, f"{base_dir}/residual/{kb}"):
+                g = int(cv[3:]) if cv.startswith("cv=") else None
+                if g is not None and g != live and g <= meta["version"]:
+                    fsio.delete(spark, f"{base_dir}/residual/{kb}/{cv}")
         # Commit-marker GC: markers at or below the committed version
         # are the commit log, but pending/claim checks only ever read
         # version+1 — an unboundedly maintained store (one marker per
@@ -1059,8 +1016,8 @@ def fsck_floored_store(
     out["double_represented_keys"] = dup_keys.count()
     if not repair or out["double_represented_keys"] == 0:
         return out
-    # Drop the stale residual rows: rewrite only the buckets the
-    # double-represented keys hash to (same pruned rewrite as an append).
+    # Drop the stale residual rows: new generations of only the buckets
+    # the double-represented keys hash to (same pruned write as an append).
     buckets = meta["residual_buckets"]
     bad_kb = _bucket_ids(dup_keys, buckets)
     keep = (

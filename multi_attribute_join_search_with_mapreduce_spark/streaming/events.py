@@ -1174,8 +1174,10 @@ def _floored_ingest_batch(
     """One micro-batch of the streaming floored-index maintenance:
     unpivot the batch's rows into postings and land them as one commit
     of the store, exactly once per ``batch_id``
-    (`index.append_floored_postings`). Crash-injected drill:
-    ``tests/test_floored_index.py``
+    (`index.append_floored_postings`): a replay first rolls back any
+    commit a crashed trigger left unfinished, then re-lands the batch
+    unless its commit reached the metadata rename. Crash-injected
+    drill: ``tests/test_floored_index.py``
     ``test_streaming_crash_between_append_and_marker``."""
     from multi_attribute_join_search_with_mapreduce_spark.index import (
         append_floored_postings,
@@ -1248,8 +1250,8 @@ def stream_floored_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     `append_floored_postings` — keys cross the floor as batches
     accumulate (a key below the floor in every single batch still
     surfaces once its lake-wide frequency reaches it), only the touched
-    residual buckets rewrite per trigger, and the index is never
-    rebuilt or rescanned.
+    residual buckets get a new generation per trigger, and the index is
+    never rebuilt or rescanned.
 
     The gate is the strongest available: the lake-wide search over the
     STREAM-MAINTAINED index must hash-equal the search over a full

@@ -57,3 +57,23 @@ def assert_df_equals_duckdb(spark_df, duck_sql, sf_dir, sort_cols=None):
                 df_[c] = df_[c].where(pd.notna(df_[c]), np.nan)
 
     pd.testing.assert_frame_equal(a, e, check_dtype=False, check_exact=False, rtol=1e-9)
+
+
+def plant_residual_rows(spark, base, rows):
+    """Append posting ``rows`` to a floored store's residual half, each
+    into the live generation of the bucket its key hashes to
+    (``residual/kb=B/cv=G``) — the state external damage or an
+    interrupted older writer leaves, which appends and fsck must handle."""
+    from pyspark.sql import functions as F
+
+    from multi_attribute_join_search_with_mapreduce_spark.index import _kb, read_store_meta
+
+    meta = read_store_meta(spark, base)
+    rows = rows.select("key", "table", "column", "row").withColumn(
+        "kb", _kb(meta["residual_buckets"])
+    )
+    for kb in sorted({r["kb"] for r in rows.select("kb").distinct().collect()}):
+        gen = meta["residual_gen"].get(str(kb), 1)
+        rows.filter(F.col("kb") == kb).drop("kb").write.mode("append").parquet(
+            f"{base}/residual/kb={kb}/cv={gen}"
+        )

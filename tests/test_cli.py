@@ -303,6 +303,13 @@ def test_cli_probed_cache_roundtrip(spark, capsys, query_csv, tmp_path):
             ["--attrs", "brand,type", "--sf-dir", SF001, "--read-probed", cache, *extra],
         )
         assert rc == 2, f"expected rejection with {extra}"
+    # The SQL strategy searches the lake itself: an index to read or a
+    # probed intermediate to write would be silently ignored.
+    for extra in (["--read-index", str(tmp_path / "idx")], ["--write-probed", cache]):
+        rc = main(["--query-csv", query_csv, "--attrs", "brand,type", "--sf-dir", SF001,
+                   "--strategy", "sql", *extra])
+        assert rc == 2, f"expected rejection with {extra}"
+        assert "error:" in capsys.readouterr().err
 
 
 def test_cli_run_query_and_list(spark, sf_dir, capsys):
@@ -326,7 +333,7 @@ def test_cli_fsck_store(spark, capsys, tmp_path):
     double-represented key exits 1 report-only and 0 after --repair."""
     import json
 
-    from pyspark.sql import functions as F
+    from tests.conftest import plant_residual_rows
 
     store = str(tmp_path / "fsck_store")
     rc, _ = _run(
@@ -341,15 +348,7 @@ def test_cli_fsck_store(spark, capsys, tmp_path):
     assert json.loads(out)["double_represented_keys"] == 0
     # plant the interrupted-append artifact
     index = spark.read.parquet(f"{store}/index")
-    stale = index.limit(0).unionByName(
-        index.orderBy("key", "table", "column", "row").limit(1)
-    )
-    (
-        stale.withColumn("kb", F.pmod(F.xxhash64("key"), F.lit(32)))
-        .write.partitionBy("kb")
-        .mode("append")
-        .parquet(f"{store}/residual")
-    )
+    plant_residual_rows(spark, store, index.orderBy("key", "table", "column", "row").limit(1))
     rc, out = _run(capsys, ["--fsck-store", store])
     assert rc == 1 and json.loads(out)["double_represented_keys"] == 1
     rc, out = _run(capsys, ["--fsck-store", store, "--repair"])
@@ -378,19 +377,17 @@ def test_cli_crashed_append_fence_repair_retry(spark, capsys, tmp_path, monkeypa
             "--sf-dir", SF001, "--floored-store", store,
             "--append-tables", "documents", "--min-key-freq", "2"]
 
-    # crash the first append between its index write and residual swap
-    orig = idx._stage_residual_rewrite
+    # crash the first append after its writes, before its commit point
+    orig = idx._require_live_claim
 
     def crash(*a, **k):
         raise RuntimeError("injected crash during append")
 
-    monkeypatch.setattr(idx, "_stage_residual_rewrite", crash)
-    import pytest
-
+    monkeypatch.setattr(idx, "_require_live_claim", crash)
     with pytest.raises(RuntimeError, match="injected crash"):
         main(argv)
     capsys.readouterr()
-    monkeypatch.setattr(idx, "_stage_residual_rewrite", orig)
+    monkeypatch.setattr(idx, "_require_live_claim", orig)
 
     # blind retry is FENCED — no silent double-land
     rc = main(argv)

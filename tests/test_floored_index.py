@@ -16,12 +16,15 @@ from pyspark.sql import functions as F
 from multi_attribute_join_search_with_mapreduce_spark.index import (
     LAKE_TABLES,
     WIDE_LAKE_TABLES,
+    _read_store_half,
     append_floored_index,
     build_posting_index,
     read_floored_index,
+    read_store_meta,
     write_floored_index,
 )
 from multi_attribute_join_search_with_mapreduce_spark.scratch import scratch_dir
+from tests.conftest import plant_residual_rows
 
 FLOOR = 2
 
@@ -29,6 +32,12 @@ FLOOR = 2
 def _assert_same_rows(got, want):
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
+
+
+def _residual(spark, base):
+    """The residual half's live rows as of the store's last commit."""
+    meta = read_store_meta(spark, base)
+    return _read_store_half(spark, base, meta, "residual").drop("kb")
 
 
 def test_floored_append_equals_full_rebuild(spark, sf_dir):
@@ -49,7 +58,7 @@ def test_floored_append_equals_full_rebuild(spark, sf_dir):
     want = build_posting_index(spark, sf_dir, WIDE_LAKE_TABLES, min_key_freq=FLOOR)
     _assert_same_rows(got, want)
     # residual = unfloored minus floored; index/residual keys disjoint
-    residual = spark.read.parquet(f"{base}/residual").drop("kb")
+    residual = _residual(spark, base)
     unfloored = build_posting_index(spark, sf_dir, WIDE_LAKE_TABLES)
     _assert_same_rows(got.unionByName(residual), unfloored)
     assert (
@@ -128,11 +137,7 @@ def test_floored_append_randomized_lakes_equal_rebuild(spark):
             assert got.exceptAll(want).count() == 0, f"seed={seed}"
             assert want.exceptAll(got).count() == 0, f"seed={seed}"
             unfloored = build_posting_index(spark, lake, tuple(landed))
-            try:
-                residual = spark.read.parquet(f"{base}/residual").drop("kb")
-            except Exception:  # empty residual dir
-                residual = spark.createDataFrame([], unfloored.schema)
-            union = got.unionByName(residual)
+            union = got.unionByName(_residual(spark, base))
             assert union.exceptAll(unfloored).count() == 0, f"seed={seed}"
             assert unfloored.exceptAll(union).count() == 0, f"seed={seed}"
 
@@ -187,6 +192,7 @@ def test_store_meta_written_validated_and_updated(spark, sf_dir):
         "residual_buckets": 16,
         "hashed_keys": False,
         "version": 1,
+        "residual_gen": {},
         "landed_tables": sorted([s.name, s.table_id] for s in initial),
     }
     with pytest.raises(ValueError, match="residual_buckets=32 conflicts"):
@@ -238,18 +244,13 @@ def test_append_repairs_partial_failure_double_representation(spark, sf_dir):
     # append leaves behind.
     stale = index.filter(F.col("key") == "x")
     assert stale.count() > 0
-    (
-        stale.withColumn("kb", F.pmod(F.xxhash64("key"), F.lit(32)))
-        .write.partitionBy("kb")
-        .mode("append")
-        .parquet(f"{base}/residual")
-    )
+    plant_residual_rows(spark, base, stale)
     append_floored_index(spark, lake, base, (s1,))
     got = read_floored_index(spark, base)
     want = build_posting_index(spark, lake, (s0, s1), min_key_freq=FLOOR)
     _assert_same_rows(got, want)
     # the stale residual rows of touched keys were dropped, not re-filed
-    residual = spark.read.parquet(f"{base}/residual")
+    residual = _residual(spark, base)
     assert (
         got.select("key").join(residual.select("key"), "key", "left_semi").count()
         == 0
@@ -325,11 +326,12 @@ def test_residual_rewrite_touches_only_new_key_buckets(spark, sf_dir):
         for d in os.listdir(root):
             if not d.startswith("kb="):
                 continue
-            sub = os.path.join(root, d)
             out[d] = sorted(
-                (f, os.path.getsize(os.path.join(sub, f)),
-                 os.path.getmtime(os.path.join(sub, f)))
-                for f in os.listdir(sub)
+                (os.path.relpath(os.path.join(dirpath, f), root),
+                 os.path.getsize(os.path.join(dirpath, f)),
+                 os.path.getmtime(os.path.join(dirpath, f)))
+                for dirpath, _sub, names in os.walk(os.path.join(root, d))
+                for f in names
                 if not f.startswith(("_", "."))
             )
         return out
@@ -388,13 +390,7 @@ def test_fsck_floored_store_reports_and_repairs(spark):
     }
     # plant the crash artifact: index rows of "x" re-filed into residual
     index = read_floored_index(spark, base)
-    stale = index.filter(F.col("key") == "x")
-    (
-        stale.withColumn("kb", F.pmod(F.xxhash64("key"), F.lit(32)))
-        .write.partitionBy("kb")
-        .mode("append")
-        .parquet(f"{base}/residual")
-    )
+    plant_residual_rows(spark, base, index.filter(F.col("key") == "x"))
     report = fsck_floored_store(spark, base)
     assert report["double_represented_keys"] == 1
     assert report["repaired_rows"] == 0  # report-only by default
@@ -402,7 +398,7 @@ def test_fsck_floored_store_reports_and_repairs(spark):
     assert fixed["double_represented_keys"] == 1
     assert fixed["repaired_rows"] == 2  # the two stale "x" postings
     # disjointness restored; the sub-floor keys survived the rewrite
-    residual = spark.read.parquet(f"{base}/residual")
+    residual = _residual(spark, base)
     assert residual.filter(F.col("key") == "x").count() == 0
     assert {r["key"] for r in residual.select("key").distinct().collect()} == {
         "zz", "qq"
@@ -440,7 +436,7 @@ def _store_equals_rebuild(spark, lake, base, specs, floor=FLOOR):
     want = build_posting_index(spark, lake, specs, min_key_freq=floor)
     _assert_same_rows(got, want)
     unfloored = build_posting_index(spark, lake, specs)
-    residual = spark.read.parquet(f"{base}/residual").drop("kb")
+    residual = _residual(spark, base)
     _assert_same_rows(got.unionByName(residual), unfloored)
     assert (
         got.select("key").join(residual.select("key"), "key", "left_semi").count()
@@ -537,101 +533,162 @@ def test_stale_appender_rejected_and_pending_marker_fences(spark):
     _store_equals_rebuild(spark, lake, base, specs)
 
 
-def test_crash_before_stage_complete_rolls_back(spark):
-    """Crash after the index append but before the staged rewrite is
-    durable: recovery rolls the torn append back BYTEWISE (the cv=
-    directory holds exactly its rows; residual untouched), the retry
-    lands cleanly, and the result equals the full rebuild."""
-    import pytest
+def _rows(df):
+    return sorted(tuple(r) for r in df.select("key", "table", "column", "row").collect())
 
-    import multi_attribute_join_search_with_mapreduce_spark.index as idx
+
+def _store_rows(spark, base):
+    """(index rows, live residual rows) as of the store's last commit."""
+    return _rows(read_floored_index(spark, base)), _rows(_residual(spark, base))
+
+
+def _superseded(spark, base):
+    """Residual generation directories on disk that are not their
+    bucket's live generation."""
+    gen = read_store_meta(spark, base)["residual_gen"]
+    root = f"{base}/residual"
+    return [
+        f"{kb}/{cv}"
+        for kb in os.listdir(root) if kb.startswith("kb=")
+        for cv in os.listdir(os.path.join(root, kb))
+        if cv.startswith("cv=") and int(cv[3:]) != gen.get(kb[3:], 1)
+    ]
+
+
+_FSIO_MUTATIONS = ("create_exclusive", "delete", "write_atomic", "rename", "mkdirs")
+
+
+def _hook_writes(m, hook, marker=None):
+    """Call ``hook(kind, path)`` before every fsio mutation, every
+    parquet write and, given a ``marker`` path suffix, every fsio read
+    of that marker, for the life of the monkeypatch context ``m``."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from multi_attribute_join_search_with_mapreduce_spark import fsio
+
+    for name in _FSIO_MUTATIONS + (("exists", "read_bytes") if marker else ()):
+        def wrapped(spark_, path, *a, _orig=getattr(fsio, name), _name=name):
+            if _name in _FSIO_MUTATIONS or path.endswith(marker):
+                hook(_name, path)
+            return _orig(spark_, path, *a)
+
+        m.setattr(fsio, name, wrapped)
+    orig_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **k):
+        hook("parquet", path)
+        return orig_parquet(self, path, *a, **k)
+
+    m.setattr(DataFrameWriter, "parquet", parquet)
+
+
+def _at_call(monkeypatch, run, i, action, marker=None):
+    """Run ``run()`` with ``action()`` called just before the ``i``-th
+    hooked call after its commit claim (``i=None``: never), and return
+    the (kind, path) of every hooked call from the claim on. Calls the
+    action itself makes are not counted."""
+    calls, state = [], {"claimed": False, "acting": False}
+
+    def hook(kind, path):
+        if state["acting"]:
+            return
+        if not state["claimed"]:
+            state["claimed"] = kind == "create_exclusive"
+            return
+        if len(calls) == i:
+            state["acting"] = True
+            try:
+                action()
+            finally:
+                state["acting"] = False
+        calls.append((kind, path))
+
+    with monkeypatch.context() as m:
+        _hook_writes(m, hook, marker)
+        run()
+    return calls
+
+
+def _points(calls):
+    """Call indices to inject at: every parquet write, and the first of
+    each run of same-kind fsio calls (the rest of a run repeats one
+    step on other paths)."""
+    step = [c[1] if c[0] == "parquet" else c[0] for c in calls]
+    return [i for i in range(len(calls)) if i == 0 or step[i] != step[i - 1]]
+
+
+@pytest.mark.parametrize("writer", ["table_append", "fsck_repair"])
+def test_commit_crash_sweep_recovers(spark, monkeypatch, writer):
+    """Crash a commit just before each of its writes in turn — every
+    fsio mutation and parquet write after its claim, consecutive calls
+    of one kind counted once — for a table append and for the residual
+    repair of ``fsck --repair``. Before the commit point, a search
+    still reads the committed index; recover_floored_store rolls the
+    commit back so that index and live residual equal the pre-commit
+    store, and a retry equals the rebuild. After it, the store already
+    equals the rebuild, recovery has nothing to do, and ``fsck
+    --repair`` deletes the superseded generations left on disk."""
+    import shutil
+
     from multi_attribute_join_search_with_mapreduce_spark.index import (
         fsck_floored_store,
         recover_floored_store,
     )
 
-    lake, specs = _mini_lake(spark, "majs_ccr_rb_")
-    base = os.path.join(scratch_dir("majs_ccr_rb_"), "store")
-    write_floored_index(spark, lake, base, specs[:1], FLOOR)
-    pre_index = read_floored_index(spark, base).collect()
-
-    orig = idx._stage_residual_rewrite
-
-    def crash(*a, **k):
-        raise RuntimeError("injected crash before stage")
-
-    idx._stage_residual_rewrite = crash
-    try:
-        with pytest.raises(RuntimeError, match="injected crash"):
+    lake, specs = _mini_lake(spark, "majs_crash_sweep_")
+    root = scratch_dir("majs_crash_sweep_")
+    built = os.path.join(root, "built")
+    write_floored_index(spark, lake, built, specs[:1], FLOOR, residual_buckets=4)
+    if writer == "table_append":
+        def run(base):
             append_floored_index(spark, lake, base, (specs[1],))
-    finally:
-        idx._stage_residual_rewrite = orig
-
-    report = fsck_floored_store(spark, base)
-    assert report["pending_commit"] == 2
-    rec = recover_floored_store(spark, base)
-    assert rec["action"] == "rolled_back"
-    # bytewise back: same index rows, clean fsck, version unchanged
-    assert sorted(map(tuple, read_floored_index(spark, base).collect())) == sorted(
-        map(tuple, pre_index)
-    )
-    clean = fsck_floored_store(spark, base)
-    assert clean["pending_commit"] is None
-    assert clean["double_represented_keys"] == 0
-    append_floored_index(spark, lake, base, (specs[1],))
-    append_floored_index(spark, lake, base, (specs[2],))
-    _store_equals_rebuild(spark, lake, base, specs)
-
-
-def test_crash_mid_swap_rolls_forward(spark):
-    """Crash after the staged rewrite is durable, partway through the
-    bucket swap: recovery ROLLS FORWARD — finishes the (resumable)
-    swap and finalizes the metadata exactly as the crashed appender
-    would have. The maintained store equals the full rebuild."""
-    import pytest
-
-    import multi_attribute_join_search_with_mapreduce_spark.index as idx
-    from multi_attribute_join_search_with_mapreduce_spark.index import (
-        fsck_floored_store,
-        read_store_meta,
-        recover_floored_store,
-    )
-
-    lake, specs = _mini_lake(spark, "majs_ccr_rf_")
-    base = os.path.join(scratch_dir("majs_ccr_rf_"), "store")
-    write_floored_index(spark, lake, base, specs[:1], FLOOR)
-
-    orig = idx._finish_residual_swap
-
-    def partial_swap(spark_, base_, stage_, flag_):
-        # swap at most one replace-bucket, then die mid-window
-        first = dict(
-            flag_,
-            kb_replace=flag_.get("kb_replace", [])[:1],
-            kb_delete=[],
+        landed = specs[:2]
+    else:
+        plant_residual_rows(
+            spark, built, read_floored_index(spark, built).filter(F.col("key") == "x")
         )
-        orig(spark_, base_, stage_, first)
-        raise RuntimeError("injected crash mid-swap")
 
-    idx._finish_residual_swap = partial_swap
-    try:
-        with pytest.raises(RuntimeError, match="mid-swap"):
-            append_floored_index(spark, lake, base, (specs[1],))
-    finally:
-        idx._finish_residual_swap = orig
+        def run(base):
+            fsck_floored_store(spark, base, repair=True)
+        landed = specs[:1]
+    floored = build_posting_index(spark, lake, landed, min_key_freq=FLOOR)
+    want = _rows(floored), _rows(build_posting_index(spark, lake, landed).exceptAll(floored))
+    pre = _store_rows(spark, built)
 
-    rec = recover_floored_store(spark, base)
-    assert rec["action"] == "rolled_forward"
-    meta = read_store_meta(spark, base)
-    assert meta["version"] == 2
-    assert ["t1", 2] in meta["landed_tables"]
-    clean = fsck_floored_store(spark, base)
-    assert clean["double_represented_keys"] == 0
-    assert clean["overfloor_in_residual"] == 0
-    _store_equals_rebuild(spark, lake, base, specs[:2])
-    # and the NEXT append proceeds normally on the recovered store
-    append_floored_index(spark, lake, base, (specs[2],))
-    _store_equals_rebuild(spark, lake, base, specs)
+    def copy(name):
+        shutil.copytree(built, os.path.join(root, name))
+        return os.path.join(root, name)
+
+    def crash():
+        raise RuntimeError("injected crash")
+
+    def crash_and_recover(i, committed):
+        base = copy(f"crash{i}")
+        with pytest.raises(RuntimeError, match="injected crash"):
+            _at_call(monkeypatch, lambda: run(base), i, crash)
+        assert _rows(read_floored_index(spark, base)) == (want if committed else pre)[0], i
+        assert recover_floored_store(spark, base)["action"] == (
+            "none" if committed else "rolled_back"
+        )
+        assert _store_rows(spark, base) == (want if committed else pre), i
+        return base
+
+    # Crash before the commit's first write and retry it. Recovery
+    # leaves the same store wherever a commit crashed, so this retry
+    # stands for all, and its calls name the other crash points.
+    base = crash_and_recover(0, False)
+    calls = _at_call(monkeypatch, lambda: run(base), None, None)
+    assert _store_rows(spark, base) == want
+    commit = calls.index(("write_atomic", f"{base}/_store_meta.json"))
+    points = _points(calls)
+    assert {calls[i][0] for i in points} == {"delete", "parquet", "write_atomic"}
+    for i in points[1:]:
+        base = crash_and_recover(i, i > commit)
+        if i > commit:
+            assert _superseded(spark, base), i
+            fsck_floored_store(spark, base, repair=True)
+            assert not _superseded(spark, base), i
+            assert _store_rows(spark, base) == want, i
 
 
 def test_streaming_crash_between_append_and_marker(spark):
@@ -675,9 +732,9 @@ def test_streaming_crash_between_append_and_marker(spark):
     finally:
         idx.write_store_meta = orig
 
-    # replay after restart: auto-recovers (roll forward — the rewrite
-    # was durable), then sees the batch landed and no-ops; a second
-    # replay is also a no-op. No duplicate postings either way.
+    # replay after restart: rolls the torn commit back and re-lands
+    # the batch; a second replay sees it landed and no-ops. No
+    # duplicate postings either way.
     _floored_ingest_batch(spark, base, specs[2], t2, 1)
     _floored_ingest_batch(spark, base, specs[2], t2, 1)
     meta = read_store_meta(spark, base)
@@ -710,30 +767,6 @@ def test_fsck_detects_duplicate_postings(spark):
     assert fsck_floored_store(spark, base)["duplicate_postings"] == 1
 
 
-def test_fsck_repair_gcs_stage_debris(spark):
-    """Crash debris under _stage/ — a committed version's stage (crash
-    after the metadata rename but before post-commit cleanup) and a
-    legacy tmp- stage — is garbage-collected by fsck --repair; the
-    pending version's stage is owned by recovery, not the GC."""
-    import os as _os
-
-    from multi_attribute_join_search_with_mapreduce_spark.index import (
-        fsck_floored_store,
-    )
-
-    lake, specs = _mini_lake(spark, "majs_ccr_gc_")
-    base = os.path.join(scratch_dir("majs_ccr_gc_"), "store")
-    write_floored_index(spark, lake, base, specs, FLOOR)
-    _os.makedirs(f"{base}/_stage/v{1:020d}")  # committed version's stage
-    _os.makedirs(f"{base}/_stage/tmp-deadbeef")
-    fsck_floored_store(spark, base)  # report-only: leaves debris alone
-    assert sorted(_os.listdir(f"{base}/_stage")) == [
-        "tmp-deadbeef", f"v{1:020d}",
-    ]
-    fsck_floored_store(spark, base, repair=True)
-    assert _os.listdir(f"{base}/_stage") == []
-
-
 def _store_files(base):
     """{relative path: (size, mtime_ns)} of every file and directory
     under ``base`` — a store a refusal must leave exactly as it was."""
@@ -748,12 +781,14 @@ def _store_files(base):
 
 
 def test_pre_protocol_stores_are_refused(spark, sf_dir, capsys):
-    """The two store layouts older than the commit protocol — metadata
-    without a commit version over a flat index, and no _store_meta.json
-    at all — are refused by every entry point with the one ValueError
-    that names the fix (rebuild with write_floored_index), and their
-    files are left exactly as they were. The CLI turns the refusal into
-    exit code 2 with an ``error:`` line."""
+    """The three store layouts older than the current commit protocol
+    — metadata without a commit version over a flat index, no
+    _store_meta.json at all, and versioned metadata without
+    ``residual_gen`` over a residual with no ``cv=`` generations — are
+    refused by every entry point with the one ValueError that names the
+    fix (rebuild with write_floored_index), and their files are left
+    exactly as they were. The CLI turns the refusal into exit code 2
+    with an ``error:`` line."""
     import shutil
 
     from multi_attribute_join_search_with_mapreduce_spark.cli import main
@@ -769,20 +804,28 @@ def test_pre_protocol_stores_are_refused(spark, sf_dir, capsys):
 
     lake, specs = _mini_lake(spark, "majs_ccr_legacy_")
     t1 = spark.read.parquet(f"{lake}/t1.parquet")
-    for layout in ("versionless", "no_meta"):
+    for layout in ("versionless", "no_meta", "no_residual_gen"):
         base = os.path.join(scratch_dir("majs_ccr_legacy_"), "store")
-        # fabricate the old layout: flat index (no cv), residual, and
-        # metadata without "version" — or no metadata at all
+        # fabricate the old layout: a residual partitioned by kb alone,
+        # metadata without "residual_gen", and for the two oldest a flat
+        # index (no cv) under metadata without "version" or none at all
         write_floored_index(spark, lake, base, specs[:1], FLOOR)
-        flat = read_floored_index(spark, base)
-        rows, schema = flat.collect(), flat.schema
-        shutil.rmtree(f"{base}/index")
-        spark.createDataFrame(rows, schema).write.parquet(f"{base}/index")
-        if layout == "versionless":
-            meta = read_store_meta(spark, base)
+        meta = read_store_meta(spark, base)
+        residual = _read_store_half(spark, base, meta, "residual")
+        rows, schema = residual.collect(), residual.schema
+        shutil.rmtree(f"{base}/residual")
+        spark.createDataFrame(rows, schema).write.partitionBy("kb").parquet(
+            f"{base}/residual"
+        )
+        del meta["residual_gen"]
+        if layout != "no_residual_gen":
+            flat = read_floored_index(spark, base)
+            rows, schema = flat.collect(), flat.schema
+            shutil.rmtree(f"{base}/index")
+            spark.createDataFrame(rows, schema).write.parquet(f"{base}/index")
             del meta["version"]
-            write_store_meta(spark, base, meta)
-        else:
+        write_store_meta(spark, base, meta)
+        if layout == "no_meta":
             os.remove(f"{base}/_store_meta.json")
         before = _store_files(base)
         for call in (
@@ -829,16 +872,16 @@ def test_revoked_claim_aborts_instead_of_committing(spark):
     base = os.path.join(scratch_dir("majs_ccr_revoke_"), "store")
     write_floored_index(spark, lake, base, specs[:1], FLOOR)
 
-    # recovery between staging and the pre-swap claim check: the
-    # appender must abort before mutating the residual store
+    # recovery after the writes, before the claim check: the appender
+    # must abort before its commit point
     orig_complete = idx._require_live_claim
     calls = {"n": 0}
 
-    def revoke_before_first_check(spark_, base_, version_):
+    def revoke_before_first_check(spark_, base_, *a):
         if calls["n"] == 0:
             calls["n"] += 1
             recover_floored_store(spark_, base_)
-        orig_complete(spark_, base_, version_)
+        orig_complete(spark_, base_, *a)
 
     idx._require_live_claim = revoke_before_first_check
     try:
@@ -883,82 +926,22 @@ def test_fsck_repair_gcs_old_commit_markers(spark):
     assert left[0] == f"v{100 - idx._COMMIT_LOG_RETAIN + 1:020d}.json"
 
 
-def test_fsck_repair_crash_mid_swap_rolls_forward(spark, monkeypatch):
-    """fsck --repair is a commit: a crash between a residual bucket's
-    delete and the rename of its staged replacement leaves those rows
-    only in the stage, and the next --repair must roll that commit
-    FORWARD — not garbage-collect the stage as debris — so no posting
-    is lost: index ∪ residual equals the unfloored rebuild."""
-    from multi_attribute_join_search_with_mapreduce_spark import fsio
-    from multi_attribute_join_search_with_mapreduce_spark.index import (
-        TableSpec,
-        fsck_floored_store,
-        read_store_meta,
-    )
-
-    buckets = 4
-    lake = os.path.join(scratch_dir("majs_fsck_crash_"), "lake")
-    os.makedirs(lake)
-    # 202 postings: "x" twice (index), 200 singletons (residual, every bucket)
-    rows = [(1, "x"), (2, "x")] + [(i, f"k{i}") for i in range(3, 203)]
-    spark.createDataFrame(rows, ["pk", "s0"]).write.parquet(f"{lake}/t0.parquet")
-    s0 = TableSpec("t0", 1, "pk", ("s0",))
-    base = os.path.join(scratch_dir("majs_fsck_crash_"), "store")
-    write_floored_index(spark, lake, base, (s0,), FLOOR, residual_buckets=buckets)
-    # plant the double-represented key: x's index rows re-filed into residual
-    (
-        read_floored_index(spark, base)
-        .filter(F.col("key") == "x")
-        .withColumn("kb", F.pmod(F.xxhash64("key"), F.lit(buckets)))
-        .write.partitionBy("kb")
-        .mode("append")
-        .parquet(f"{base}/residual")
-    )
-    orig_rename = fsio.rename
-    calls = {"n": 0}
-
-    def rename_fails_once(spark_, src, dst):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise IOError("injected crash between bucket delete and rename")
-        return orig_rename(spark_, src, dst)
-
-    monkeypatch.setattr(fsio, "rename", rename_fails_once)
-    with pytest.raises(IOError, match="injected crash"):
-        fsck_floored_store(spark, base, repair=True)
-    second = fsck_floored_store(spark, base, repair=True)
-    assert second["recovery"]["action"] == "rolled_forward"
-    assert second["double_represented_keys"] == 0
-    assert read_store_meta(spark, base)["version"] == 2
-    residual = spark.read.parquet(f"{base}/residual").drop("kb")
-    _assert_same_rows(
-        read_floored_index(spark, base).unionByName(residual),
-        build_posting_index(spark, lake, (s0,)),
-    )
-    assert fsck_floored_store(spark, base) == {
-        "double_represented_keys": 0,
-        "subfloor_in_index": 0,
-        "overfloor_in_residual": 0,
-        "duplicate_postings": 0,
-        "pending_commit": None,
-        "recovery": None,
-        "repaired_rows": 0,
-    }
-
-
 @pytest.mark.parametrize("writer", ["table_append", "stream_trigger"])
 def test_claim_revoked_before_complete_aborts(spark, monkeypatch, writer):
-    """A recovery run against a live writer just before its _COMPLETE
-    flag is written rolls the commit back; the writer must then abort
-    with ConcurrentAppendError at its pre-commit claim check and leave
-    the metadata as it was — for a streaming trigger as for a table
+    """A recovery run against a live writer, just before any of its
+    store writes or claim checks from its claim up to its last check,
+    rolls the commit back. The writer must then abort with
+    ConcurrentAppendError, leave the metadata as it was and lose no
+    committed posting: index and live residual still equal the
+    pre-commit store. This holds for a streaming trigger as for a table
     append (a trigger that committed here would record its batch as
-    landed while its postings were rolled back, and a replay would
-    skip it)."""
-    from multi_attribute_join_search_with_mapreduce_spark import fsio
+    landed while its postings were rolled back, and a replay would skip
+    it). A retry over the files the first aborted writer left lands
+    cleanly."""
+    import shutil
+
     from multi_attribute_join_search_with_mapreduce_spark.index import (
         ConcurrentAppendError,
-        read_store_meta,
         recover_floored_store,
     )
     from multi_attribute_join_search_with_mapreduce_spark.streaming.events import (
@@ -966,34 +949,90 @@ def test_claim_revoked_before_complete_aborts(spark, monkeypatch, writer):
     )
 
     lake, specs = _mini_lake(spark, "majs_ccr_revoke2_")
-    base = os.path.join(scratch_dir("majs_ccr_revoke2_"), "store")
-    write_floored_index(spark, lake, base, specs[:1], FLOOR)
-    before = read_store_meta(spark, base)
-    orig_write = fsio.write_atomic
-    fired = []
+    root = scratch_dir("majs_ccr_revoke2_")
+    built = os.path.join(root, "built")
+    write_floored_index(spark, lake, built, specs[:1], FLOOR)
+    before, pre = read_store_meta(spark, built), _store_rows(spark, built)
+    t1 = spark.read.parquet(f"{lake}/t1.parquet")
 
-    def revoke_before_complete(spark_, path, data):
-        if path.endswith("/_COMPLETE") and not fired:
-            fired.append(recover_floored_store(spark_, base))
-        orig_write(spark_, path, data)
-
-    monkeypatch.setattr(fsio, "write_atomic", revoke_before_complete)
-    with pytest.raises(ConcurrentAppendError, match="revoked"):
+    def run(base):
         if writer == "table_append":
             append_floored_index(spark, lake, base, (specs[1],))
         else:
-            t1 = spark.read.parquet(f"{lake}/t1.parquet")
             _floored_ingest_batch(spark, base, specs[1], t1, 0)
+
+    def copy(name):
+        shutil.copytree(built, os.path.join(root, name))
+        return os.path.join(root, name)
+
+    marker = f"/_commits/v{2:020d}.json"
+
+    def revoke_at(i):
+        base = copy(f"revoke{i}")
+        fired = []
+        with pytest.raises(ConcurrentAppendError, match="revoked"):
+            _at_call(
+                monkeypatch, lambda: run(base), i,
+                lambda: fired.append(recover_floored_store(spark, base)), marker,
+            )
+        assert fired == [{"action": "rolled_back", "version": 1}], i
+        assert read_store_meta(spark, base) == before, i
+        assert _store_rows(spark, base) == pre, i
+        return base
+
+    # Revoked right after its claim, the writer writes everything after
+    # the recovery. A retry over those files lands cleanly, and its
+    # calls name the other points. A parquet write is left out as a
+    # point: a recovery just before it leaves the same store.
+    base = revoke_at(0)
+    calls = _at_call(monkeypatch, lambda: run(base), None, None, marker)
+    _store_equals_rebuild(spark, lake, base, specs[:2])
+    last_check = max(i for i, (kind, path) in enumerate(calls) if path.endswith(marker))
+    points = [i for i in _points(calls)[1:] if i <= last_check and calls[i][0] != "parquet"]
+    assert points
+    for i in points:
+        revoke_at(i)
+
+
+def test_claim_taken_over_after_recovery_aborts(spark, monkeypatch):
+    """Recovery revokes a live writer's claim and another writer claims
+    the same slot before the first writer's claim check. The check must
+    see that the marker is no longer this writer's and abort, instead
+    of committing its landed table over postings the recovery deleted."""
+    import multi_attribute_join_search_with_mapreduce_spark.index as idx
+    from multi_attribute_join_search_with_mapreduce_spark.index import (
+        ConcurrentAppendError,
+        claim_commit,
+        recover_floored_store,
+    )
+
+    lake, specs = _mini_lake(spark, "majs_ccr_aba_")
+    base = os.path.join(scratch_dir("majs_ccr_aba_"), "store")
+    write_floored_index(spark, lake, base, specs[:1], FLOOR)
+    before, pre = read_store_meta(spark, base), _store_rows(spark, base)
+    orig = idx._require_live_claim
+    fired = []
+
+    def take_over(*a):
+        if not fired:
+            fired.append(recover_floored_store(spark, base))
+            assert claim_commit(spark, base, 2, {"tables": [["t2", 3]]})
+        return orig(*a)
+
+    monkeypatch.setattr(idx, "_require_live_claim", take_over)
+    with pytest.raises(ConcurrentAppendError, match="revoked"):
+        append_floored_index(spark, lake, base, (specs[1],))
     assert fired == [{"action": "rolled_back", "version": 1}]
     assert read_store_meta(spark, base) == before
+    assert _store_rows(spark, base) == pre
 
 
 def test_search_never_sees_uncommitted_postings(spark):
     """A search that runs while a commit is in flight (or after it
     crashed) reads the store as of its last commit: an append that dies
-    after its index write and before ``_COMPLETE`` leaves a ``cv=``
-    directory on disk, and read_floored_index must not return its
-    postings, which the rollback then deletes."""
+    after its writes and before its commit point leaves ``cv=2``
+    directories on disk, and neither read_floored_index nor the live
+    residual returns their rows, which the rollback then deletes."""
     import multi_attribute_join_search_with_mapreduce_spark.index as idx
     from multi_attribute_join_search_with_mapreduce_spark.index import (
         recover_floored_store,
@@ -1002,22 +1041,22 @@ def test_search_never_sees_uncommitted_postings(spark):
     lake, specs = _mini_lake(spark, "majs_ccr_visible_")
     base = os.path.join(scratch_dir("majs_ccr_visible_"), "store")
     write_floored_index(spark, lake, base, specs[:1], FLOOR)
-    pre = sorted(map(tuple, read_floored_index(spark, base).collect()))
+    pre = _store_rows(spark, base)
 
     def crash(*a, **k):
-        raise RuntimeError("injected crash before stage")
+        raise RuntimeError("injected crash before the commit point")
 
-    orig = idx._stage_residual_rewrite
-    idx._stage_residual_rewrite = crash
+    orig = idx._require_live_claim
+    idx._require_live_claim = crash
     try:
         with pytest.raises(RuntimeError, match="injected crash"):
             append_floored_index(spark, lake, base, (specs[1],))
     finally:
-        idx._stage_residual_rewrite = orig
+        idx._require_live_claim = orig
     assert os.path.isdir(f"{base}/index/cv=2"), "the torn commit wrote no postings"
-    assert sorted(map(tuple, read_floored_index(spark, base).collect())) == pre
+    assert _store_rows(spark, base) == pre
     assert recover_floored_store(spark, base)["action"] == "rolled_back"
-    assert sorted(map(tuple, read_floored_index(spark, base).collect())) == pre
+    assert _store_rows(spark, base) == pre
 
 
 def test_append_never_moves_untouched_key(spark):
@@ -1033,16 +1072,14 @@ def test_append_never_moves_untouched_key(spark):
     base = os.path.join(scratch_dir("majs_untouched_"), "store")
     # one bucket: every append touches the planted key's bucket
     write_floored_index(spark, lake, base, specs[:1], FLOOR, residual_buckets=1)
-    spark.createDataFrame(
+    plant_residual_rows(spark, base, spark.createDataFrame(
         [("planted", 9, 0, 1), ("planted", 9, 0, 2)],
         "key STRING, `table` INT, `column` INT, `row` BIGINT",
-    ).withColumn("kb", F.lit(0)).write.partitionBy("kb").mode("append").parquet(
-        f"{base}/residual"
-    )
+    ))
     assert fsck_floored_store(spark, base)["overfloor_in_residual"] == 1
     append_floored_index(spark, lake, base, (specs[1],))
     assert read_floored_index(spark, base).filter(F.col("key") == "planted").count() == 0
-    residual = spark.read.parquet(f"{base}/residual")
+    residual = _residual(spark, base)
     assert residual.filter(F.col("key") == "planted").count() == 2
     assert fsck_floored_store(spark, base)["overfloor_in_residual"] == 1
     _assert_same_rows(
@@ -1076,10 +1113,11 @@ def test_one_residual_file_per_bucket(spark):
     base = os.path.join(scratch_dir("majs_one_file_"), "store")
 
     def files_per_bucket():
+        """Parquet files per bucket, over every generation on disk."""
         root = f"{base}/residual"
         return {
-            d: sum(1 for f in os.listdir(os.path.join(root, d))
-                   if f.endswith(".parquet") and not f.startswith("."))
+            d: sum(1 for _dir, _sub, names in os.walk(os.path.join(root, d))
+                   for f in names if f.endswith(".parquet") and not f.startswith("."))
             for d in os.listdir(root) if d.startswith("kb=")
         }
 
@@ -1089,14 +1127,7 @@ def test_one_residual_file_per_bucket(spark):
     assert files_per_bucket() == {f"kb={kb}": 1 for kb in range(buckets)}
     _store_equals_rebuild(spark, lake, base, (s0, s1))
     # plant a double-represented key; the repair rewrites its bucket
-    (
-        read_floored_index(spark, base)
-        .filter(F.col("key") == "x")
-        .withColumn("kb", F.pmod(F.xxhash64("key"), F.lit(buckets)))
-        .write.partitionBy("kb")
-        .mode("append")
-        .parquet(f"{base}/residual")
-    )
+    plant_residual_rows(spark, base, read_floored_index(spark, base).filter(F.col("key") == "x"))
     assert fsck_floored_store(spark, base, repair=True)["repaired_rows"] == 2
     assert files_per_bucket() == {f"kb={kb}": 1 for kb in range(buckets)}
     _store_equals_rebuild(spark, lake, base, (s0, s1))

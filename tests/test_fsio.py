@@ -120,7 +120,7 @@ def test_store_meta_rides_on_fsio_local_fallback(spark, sf_dir, monkeypatch):
 
     monkeypatch.setattr(fsio, "_gateway", lambda s: None)
     base = scratch_dir("majs_fsio_meta_")
-    meta = {"min_key_freq": 2, "version": 1, "landed_tables": []}
+    meta = {"min_key_freq": 2, "version": 1, "residual_gen": {}, "landed_tables": []}
     write_store_meta(spark, base, meta)
     assert read_store_meta(spark, base) == meta
     assert pending_commit(spark, base, meta) is None
