@@ -617,23 +617,19 @@ def _points(calls):
     return [i for i in range(len(calls)) if i == 0 or step[i] != step[i - 1]]
 
 
-@pytest.mark.parametrize("writer", ["table_append", "fsck_repair"])
-def test_commit_crash_sweep_recovers(spark, monkeypatch, writer):
-    """Crash a commit just before each of its writes in turn — every
-    fsio mutation and parquet write after its claim, consecutive calls
-    of one kind counted once — for a table append and for the residual
-    repair of ``fsck --repair``. Before the commit point, a search
-    still reads the committed index; recover_floored_store rolls the
-    commit back so that index and live residual equal the pre-commit
-    store, and a retry equals the rebuild. After it, the store already
-    equals the rebuild, recovery has nothing to do, and ``fsck
-    --repair`` deletes the superseded generations left on disk."""
+def _crash_points(spark, monkeypatch, writer):
+    """Build a small store and a commit to crash in it: a table append
+    (``writer="table_append"``) or the residual repair of ``fsck
+    --repair`` (``"fsck_repair"``). The crash points are every parquet
+    write and every fsio mutation after the commit's claim, consecutive
+    fsio calls of one kind counted once. Returns a namespace with
+    ``run(base)`` (the commit), ``crash_at(i)`` (a fresh copy of the
+    store with the commit crashed just before point ``i``), the points
+    ``before`` and ``after`` the commit point (the metadata write), and
+    the (index, live residual) rows ``pre`` and ``want`` before and
+    after the commit."""
     import shutil
-
-    from multi_attribute_join_search_with_mapreduce_spark.index import (
-        fsck_floored_store,
-        recover_floored_store,
-    )
+    from types import SimpleNamespace
 
     lake, specs = _mini_lake(spark, "majs_crash_sweep_")
     root = scratch_dir("majs_crash_sweep_")
@@ -644,6 +640,10 @@ def test_commit_crash_sweep_recovers(spark, monkeypatch, writer):
             append_floored_index(spark, lake, base, (specs[1],))
         landed = specs[:2]
     else:
+        from multi_attribute_join_search_with_mapreduce_spark.index import (
+            fsck_floored_store,
+        )
+
         plant_residual_rows(
             spark, built, read_floored_index(spark, built).filter(F.col("key") == "x")
         )
@@ -653,7 +653,6 @@ def test_commit_crash_sweep_recovers(spark, monkeypatch, writer):
         landed = specs[:1]
     floored = build_posting_index(spark, lake, landed, min_key_freq=FLOOR)
     want = _rows(floored), _rows(build_posting_index(spark, lake, landed).exceptAll(floored))
-    pre = _store_rows(spark, built)
 
     def copy(name):
         shutil.copytree(built, os.path.join(root, name))
@@ -662,33 +661,115 @@ def test_commit_crash_sweep_recovers(spark, monkeypatch, writer):
     def crash():
         raise RuntimeError("injected crash")
 
-    def crash_and_recover(i, committed):
+    def crash_at(i):
         base = copy(f"crash{i}")
         with pytest.raises(RuntimeError, match="injected crash"):
             _at_call(monkeypatch, lambda: run(base), i, crash)
-        assert _rows(read_floored_index(spark, base)) == (want if committed else pre)[0], i
-        assert recover_floored_store(spark, base)["action"] == (
-            "none" if committed else "rolled_back"
-        )
-        assert _store_rows(spark, base) == (want if committed else pre), i
         return base
 
-    # Crash before the commit's first write and retry it. Recovery
-    # leaves the same store wherever a commit crashed, so this retry
-    # stands for all, and its calls name the other crash points.
-    base = crash_and_recover(0, False)
-    calls = _at_call(monkeypatch, lambda: run(base), None, None)
-    assert _store_rows(spark, base) == want
-    commit = calls.index(("write_atomic", f"{base}/_store_meta.json"))
+    probe = copy("probe")
+    calls = _at_call(monkeypatch, lambda: run(probe), None, None)
+    assert _store_rows(spark, probe) == want
+    commit = calls.index(("write_atomic", f"{probe}/_store_meta.json"))
     points = _points(calls)
     assert {calls[i][0] for i in points} == {"delete", "parquet", "write_atomic"}
-    for i in points[1:]:
-        base = crash_and_recover(i, i > commit)
-        if i > commit:
-            assert _superseded(spark, base), i
-            fsck_floored_store(spark, base, repair=True)
-            assert not _superseded(spark, base), i
-            assert _store_rows(spark, base) == want, i
+    return SimpleNamespace(
+        run=run, crash_at=crash_at, pre=_store_rows(spark, built), want=want,
+        before=[i for i in points if i <= commit],
+        after=[i for i in points if i > commit],
+    )
+
+
+def test_crash_before_stage_complete_rolls_back(spark, monkeypatch):
+    """Crash a table append just before each of its writes up to and
+    including its commit point (the metadata write). A search still
+    reads the committed index; recover_floored_store rolls the commit
+    back so that index and live residual equal the pre-commit store and
+    no generation of the crashed commit is left on disk, so a retry
+    equals the rebuild."""
+    from multi_attribute_join_search_with_mapreduce_spark.index import (
+        recover_floored_store,
+    )
+
+    sweep = _crash_points(spark, monkeypatch, "table_append")
+    for i in sweep.before:
+        base = sweep.crash_at(i)
+        assert _rows(read_floored_index(spark, base)) == sweep.pre[0], i
+        assert recover_floored_store(spark, base)["action"] == "rolled_back", i
+        assert _store_rows(spark, base) == sweep.pre, i
+        assert not _superseded(spark, base), i
+    # Recovery leaves the same store wherever the commit crashed, so one
+    # retry (after the last crash, the one with the most debris) stands
+    # for all.
+    sweep.run(base)
+    assert _store_rows(spark, base) == sweep.want
+
+
+def test_crash_mid_swap_rolls_forward(spark, monkeypatch):
+    """Crash a table append just before each of its writes after its
+    commit point, while it deletes the superseded residual generations.
+    The commit stands: the store already equals the rebuild, recovery
+    has nothing to do, and ``fsck --repair`` deletes the superseded
+    generations left on disk."""
+    from multi_attribute_join_search_with_mapreduce_spark.index import (
+        fsck_floored_store,
+        recover_floored_store,
+    )
+
+    sweep = _crash_points(spark, monkeypatch, "table_append")
+    assert sweep.after
+    for i in sweep.after:
+        base = sweep.crash_at(i)
+        assert _rows(read_floored_index(spark, base)) == sweep.want[0], i
+        assert recover_floored_store(spark, base)["action"] == "none", i
+        assert _store_rows(spark, base) == sweep.want, i
+        assert _superseded(spark, base), i
+        fsck_floored_store(spark, base, repair=True)
+        assert not _superseded(spark, base), i
+        assert _store_rows(spark, base) == sweep.want, i
+
+
+def test_fsck_repair_crash_mid_swap_rolls_forward(spark, monkeypatch):
+    """Crash the residual repair of ``fsck --repair`` just before each of
+    its writes after its commit point. The repair stands: no posting is
+    lost, recovery has nothing to do, and a second ``fsck --repair``
+    deletes the superseded generations left on disk."""
+    from multi_attribute_join_search_with_mapreduce_spark.index import (
+        fsck_floored_store,
+        recover_floored_store,
+    )
+
+    sweep = _crash_points(spark, monkeypatch, "fsck_repair")
+    assert sweep.after
+    for i in sweep.after:
+        base = sweep.crash_at(i)
+        assert _rows(read_floored_index(spark, base)) == sweep.want[0], i
+        assert recover_floored_store(spark, base)["action"] == "none", i
+        assert _store_rows(spark, base) == sweep.want, i
+        assert _superseded(spark, base), i
+        fsck_floored_store(spark, base, repair=True)
+        assert not _superseded(spark, base), i
+        assert _store_rows(spark, base) == sweep.want, i
+
+
+def test_fsck_repair_gcs_stage_debris(spark, monkeypatch):
+    """Crash the residual repair of ``fsck --repair`` just before each of
+    its writes up to and including its commit point. A search still
+    reads the committed index. The next ``fsck --repair`` rolls the
+    crashed commit back, deletes every generation it had written, and
+    then repairs the store to equal the rebuild."""
+    from multi_attribute_join_search_with_mapreduce_spark.index import (
+        fsck_floored_store,
+    )
+
+    sweep = _crash_points(spark, monkeypatch, "fsck_repair")
+    for i in sweep.before:
+        base = sweep.crash_at(i)
+        assert _rows(read_floored_index(spark, base)) == sweep.pre[0], i
+        report = fsck_floored_store(spark, base, repair=True)
+        assert report["recovery"]["action"] == "rolled_back", i
+        assert not _superseded(spark, base), i
+        assert _store_rows(spark, base) == sweep.want, i
 
 
 def test_streaming_crash_between_append_and_marker(spark):
