@@ -130,8 +130,8 @@ def build_parser() -> argparse.ArgumentParser:
         metavar="NAMES",
         help="comma-separated wide-lake table names to land into "
         "--floored-store before searching (append_floored_index: keys "
-        "cross the floor as tables combine; only touched residual "
-        "buckets get a new generation)",
+        "cross the floor as tables combine; each append adds one "
+        "residual delta file)",
     )
     p.add_argument(
         "--fsck-store",
@@ -146,8 +146,9 @@ def build_parser() -> argparse.ArgumentParser:
         help="with --fsck-store: roll back an unresolved commit first "
         "(delete the files it added; the committed store is never "
         "touched before a commit point), delete residual generations "
-        "a later commit superseded, then drop stale residual rows of "
-        "double-represented keys (the index side is authoritative)",
+        "and deltas a compaction superseded, then tombstone the stale "
+        "residual rows of double-represented keys (the index side is "
+        "authoritative)",
     )
     p.add_argument(
         "--explain",

@@ -24,9 +24,11 @@ Scale notes (100 TB design):
 
 The append-maintained form is the floored store
 (:func:`write_floored_index`). Every mutation of it — a table append,
-a streaming trigger, the residual rewrite of ``fsck --repair`` — is a
+a streaming trigger, the residual repair of ``fsck --repair`` — is a
 commit through one function, :func:`_commit`, and a crash at any point
-of one is resolved by :func:`recover_floored_store`.
+of one is resolved by :func:`recover_floored_store`. A commit adds one
+residual delta file, and every ``residual_buckets``-th commit also
+folds the deltas into new bucket generations.
 """
 
 from __future__ import annotations
@@ -336,8 +338,9 @@ def write_store_meta(spark: SparkSession, base_dir: str, meta: dict) -> None:
     loudly rather than letting anything mutate a torn half-build. For
     every later mutation the rename is the COMMIT POINT of the protocol
     (:func:`_commit`): the version bump, the residual bucket
-    generations and the payload's log entries (landed tables, or a
-    streaming landed-batch marker) all land in one atomic replace."""
+    generations, the delta floor and the payload's log entries (landed
+    tables, or a streaming landed-batch marker) all land in one atomic
+    replace."""
     fsio.write_atomic(
         spark,
         f"{base_dir}/_store_meta.json",
@@ -432,6 +435,32 @@ def pending_commit(spark: SparkSession, base_dir: str, meta: dict) -> dict | Non
 # The posting columns both store halves hold, in file order.
 _POSTING_SCHEMA = "key STRING, `table` INT, `column` INT, `row` BIGINT"
 _POSTING_COLS = ("key", "table", "column", "row")
+# A residual delta row: a sub-floor posting (``tomb`` false) or a key's
+# tombstone (``tomb`` true, posting columns null), with its bucket.
+_DELTA_SCHEMA = _POSTING_SCHEMA + ", kb INT, tomb BOOLEAN"
+
+
+def _delta_floor(meta: dict) -> int:
+    """The last commit whose deltas are folded into the residual's
+    bucket generations. A store written before deltas existed records
+    none and is fully folded."""
+    return int(meta.get("delta_floor", meta["version"]))
+
+
+def _live_deltas(spark: SparkSession, base_dir: str, meta: dict) -> DataFrame | None:
+    """The residual deltas of the commits after the delta floor, up to
+    ``meta``'s version (``delta_floor < cv <= version``), tombstones
+    included; None when there are none. A partition filter, so it
+    prunes directories."""
+    lo, hi = _delta_floor(meta), int(meta["version"])
+    if lo >= hi:
+        return None
+    return (
+        spark.read.schema(_DELTA_SCHEMA + ", cv INT")
+        .parquet(f"{base_dir}/delta")
+        .filter((F.col("cv") > lo) & (F.col("cv") <= hi))
+        .drop("cv")
+    )
 
 
 def _read_store_half(
@@ -441,8 +470,11 @@ def _read_store_half(
     of the commit ``meta`` records, read with the schema the metadata
     fixes: the index's ``cv <= version`` directories, with ``key_h`` on
     a hashed store and ``cv`` kept; the residual's live generations
-    (``residual/kb=B/cv=residual_gen[B]``, 1 when absent), with ``kb``
-    kept. Both filters are on partition columns only, so they prune
+    (``residual/kb=B/cv=residual_gen[B]``, 1 when absent) plus the live
+    deltas (:func:`_live_deltas`), minus every row of a key a live delta
+    tombstones, with ``kb`` kept. A key in the index never returns to
+    the residual, so dropping all of a tombstoned key's rows is exact.
+    The half filters are on partition columns only, so they prune
     directories. No job infers a schema, and a half with no rows yet
     reads as empty; a corrupt file still raises when a job reads it."""
     if half == "index":
@@ -455,19 +487,21 @@ def _read_store_half(
         )
         live = F.expr(f"cv = CASE kb {gens} ELSE 1 END" if gens else "cv = 1")
     df = spark.read.schema(schema + ", cv INT").parquet(f"{base_dir}/{half}").filter(live)
-    return df if half == "index" else df.drop("cv")
+    if half == "index":
+        return df
+    df, deltas = df.drop("cv"), _live_deltas(spark, base_dir, meta)
+    if deltas is None:
+        return df
+    dead = deltas.filter("tomb").select("key")
+    return df.unionByName(deltas.filter(~F.col("tomb")).drop("tomb")).join(
+        F.broadcast(dead), "key", "left_anti"
+    )
 
 
 def _kb(buckets: int):
-    """The residual bucket of a posting's ``key``."""
-    return F.pmod(F.xxhash64("key"), F.lit(buckets))
-
-
-def _bucket_ids(keys: DataFrame, buckets: int) -> list[int]:
-    """The residual buckets ``keys`` hash to (at most ``buckets`` ids)."""
-    return [
-        int(r["kb"]) for r in keys.select(_kb(buckets).alias("kb")).distinct().collect()
-    ]
+    """The residual bucket of a posting's ``key``, as the INT the
+    store's schema reads it with."""
+    return F.pmod(F.xxhash64("key"), F.lit(buckets)).cast("int")
 
 
 def _bucketed(rows: DataFrame, buckets: int) -> DataFrame:
@@ -475,19 +509,26 @@ def _bucketed(rows: DataFrame, buckets: int) -> DataFrame:
     buckets)``, hash-partitioned by it at the session's shuffle
     parallelism. Every row of a bucket sits in one task, so a
     ``partitionBy("kb")`` write leaves exactly one file per bucket.
-    Every residual writer takes its rows through here: the build, an
-    append or streaming trigger, and ``fsck --repair``."""
+    Only the build and a compacting commit (:func:`_compact`) write
+    buckets, and both take their rows through here. Adaptive execution
+    coalesces this small shuffle into one task, which then writes every
+    bucket file in turn."""
     return rows.withColumn("kb", _kb(buckets)).repartition("kb")
 
 
-def _key_counts(rows: DataFrame, buckets: int) -> DataFrame:
-    """:func:`_bucketed` ``rows`` with ``_f``, each key's count among
-    them. The window partitions by ``(kb, key)``, which the ``kb``
-    exchange already satisfies, so bucketing and counting cost one
-    shuffle together."""
-    return _bucketed(rows, buckets).withColumn(
-        "_f", F.count(F.lit(1)).over(Window.partitionBy("kb", "key"))
+def _delta(buckets: int, dead: DataFrame, rows: DataFrame | None = None) -> DataFrame:
+    """A commit's residual delta: the sub-floor postings ``rows`` and a
+    tombstone for each key of ``dead``, with their buckets."""
+    tombs = dead.select(
+        "key",
+        F.lit(None).cast("int").alias("table"),
+        F.lit(None).cast("int").alias("column"),
+        F.lit(None).cast("bigint").alias("row"),
+        F.lit(True).alias("tomb"),
     )
+    if rows is not None:
+        tombs = rows.select(*_POSTING_COLS, F.lit(False).alias("tomb")).unionByName(tombs)
+    return tombs.withColumn("kb", _kb(buckets))
 
 
 def write_floored_index(
@@ -514,14 +555,21 @@ def write_floored_index(
       ``kb = pmod(xxhash64(key), B)``, one parquet file per bucket
       (:func:`_bucketed`) in the bucket's generation directory
       ``kb=B/cv=G`` (the build writes ``G=1``; the metadata's
-      ``residual_gen`` names each bucket's live one), so an append
-      writes new generations only of the buckets its keys hash to,
-      never the whole store.
+      ``residual_gen`` names each bucket's live one);
+    - ``<base_dir>/delta`` — one file per later commit under
+      ``delta/cv=v``: its new sub-floor postings plus a tombstone for
+      each key it moved to the index. The build writes none, and its
+      metadata records no ``delta_floor``, which reads as the version
+      (every delta folded), as in a store written before deltas
+      existed. The commit that would leave
+      ``residual_buckets`` live deltas folds them into new bucket
+      generations and raises ``delta_floor`` to its own version
+      (:func:`_commit`). An append never rewrites a bucket itself.
 
     The key count that decides each key's half runs over the bucket
-    shuffle (:func:`_key_counts`), so the build takes one exchange and
-    its parallelism is at most ``residual_buckets``: size the bucket
-    count to the cluster as well as to the data.
+    shuffle, so the build takes one exchange and its parallelism is at
+    most ``residual_buckets``: size the bucket count to the cluster as
+    well as to the data.
 
     Invariant: every key's postings live wholly in ``index`` (lake-wide
     freq >= N) or wholly in ``residual`` (freq < N); their union is the
@@ -545,8 +593,12 @@ def write_floored_index(
     # checkpoint when a checkpoint dir is set (see its docstring) — or
     # skip the floor entirely at ingest and use append_floored_index's
     # incremental path, which is the production shape anyway.
+    # The (kb, key) count window is satisfied by the kb exchange, so
+    # bucketing and counting cost one shuffle together.
     tagged = truncate_lineage(
-        _key_counts(build_posting_index(spark, sf_dir, specs), residual_buckets)
+        _bucketed(build_posting_index(spark, sf_dir, specs), residual_buckets).withColumn(
+            "_f", F.count(F.lit(1)).over(Window.partitionBy("kb", "key"))
+        )
     )
     above = tagged.filter(F.col("_f") >= min_key_freq).drop("_f", "kb")
     if hashed_keys:
@@ -609,18 +661,19 @@ def append_floored_index(
     ``mjs_index_incremental_floored`` and
     ``tests/test_floored_index.py``).
 
-    Work is bounded by O(new postings + residual postings of touched
-    buckets + one pruned probe of the index's key set), in one pass
-    (:func:`_plan_postings`): the touched buckets are scanned once and
-    shuffled once, the existing index is appended to, never rewritten,
-    and only the residual buckets the new keys hash to get a new
-    generation, one file per bucket. Cases per new key:
+    Work is bounded by O(new postings + the touched keys' residual
+    rows + one semi-join scan each of the index and the residual), in
+    one pass (:func:`_plan_postings`): only the touched keys' rows are
+    shuffled, the existing index is appended to, never rewritten, and
+    the residual gains one delta file (every ``residual_buckets``-th
+    commit also compacts, see :func:`_commit`). Cases per new key:
 
     - already in ``index`` (lake freq was >= N): its new postings
       append directly — the floor can only hold harder;
     - else, combine the new postings with the key's residual rows: at
-      >= N the key CROSSES — all its postings move to ``index`` and
-      leave ``residual``; below N it stays residual.
+      >= N the key CROSSES — all its postings move to ``index`` and a
+      tombstone in the delta drops them from ``residual``; below N its
+      new postings join the residual through the delta.
 
     Callers own spec disjointness (same contract as
     :func:`append_posting_index`) and the engine ENFORCES it: a table
@@ -705,75 +758,87 @@ def append_floored_postings(
 
 def _plan_postings(
     spark: SparkSession, new_postings: DataFrame, base_dir: str, meta: dict
-) -> tuple[DataFrame, DataFrame, list[int]]:
+) -> tuple[DataFrame, DataFrame]:
     """What landing ``new_postings`` writes, as :func:`_commit`'s plan:
-    the postings the index gains, the new generation's rows of the
-    touched residual buckets, and those buckets' ids.
+    the postings the index gains and the commit's residual delta.
 
-    One pass: a single frame holds the new postings plus every live
-    residual row of the touched buckets (read with a static
-    ``kb IN (...)`` prune), minus the keys the index already holds. It
-    is shuffled once by ``kb``, which also satisfies the ``(kb, key)``
-    frequency window and the flag marking the keys with new postings,
-    and materialized once, so both writes scan it instead of
-    recomputing it. By the store invariant a touched key's count there
-    is its lake-wide frequency.
-    A touched key at or above the floor moves to the index; every other
-    row — staying keys and the untouched keys that share a bucket — is
-    the bucket's new generation, still partitioned by ``kb``, so each
-    bucket is written as one file. Only a touched key can move: an
-    over-floor key the append did not touch (external damage fsck
-    reports) stays where it is. A key left in BOTH halves counts its
-    index rows only, and the new generation drops its stale residual
-    rows.
+    One pass over the touched keys (those with a new posting) alone.
+    They are broadcast to two semi-joins: the index, for the touched
+    keys it already holds, and the live residual, for the touched keys'
+    rows; no other residual row is shuffled. One frame holds the new
+    postings plus those residual rows, each flagged when the index holds
+    its key and counted per key, and it is materialized once, so both
+    writes scan it instead of recomputing it. By the store invariant a
+    touched key's count there is its lake-wide frequency.
+
+    A touched key ends in the index when the index already holds it or
+    its count reaches the floor. Its new postings go to the index, and
+    so do its residual rows if it crossed; if it had residual rows, the
+    delta tombstones it. Every other new posting is a sub-floor row of
+    the delta. Untouched keys are never read, so only a touched key can
+    move: an over-floor key the append did not touch (external damage
+    fsck reports) stays where it is. A touched key left in BOTH halves
+    keeps its index rows, and its stale residual rows are tombstoned.
     """
-    floor, buckets = meta["min_key_freq"], meta["residual_buckets"]
+    floor = meta["min_key_freq"]
     new_p = truncate_lineage(new_postings)
-    touched = new_p.select("key").distinct()
-    kb_list = _bucket_ids(touched, buckets)
-    # keys already at/above the floor: one broadcast-semi probe of the
-    # index's key set
-    idx_keys = truncate_lineage(
+    touched = F.broadcast(new_p.select("key").distinct())
+    in_index = (
         _read_store_half(spark, base_dir, meta, "index")
-        .join(F.broadcast(touched), "key", "left_semi")
+        .join(touched, "key", "left_semi")
         .select("key")
         .distinct()
+        .withColumn("_i", F.lit(True))
     )
-    residual = (
-        _read_store_half(spark, base_dir, meta, "residual")
-        .filter(F.col("kb").isin(kb_list))
-        .select(*_POSTING_COLS)
+    old = _read_store_half(spark, base_dir, meta, "residual").join(
+        touched, "key", "left_semi"
     )
-    # _t: the key has a new posting. It is taken over the count's
-    # (kb, key) window, so it needs no broadcast of the touched keys.
     frame = truncate_lineage(
-        _key_counts(
-            new_p.withColumn("_n", F.lit(True))
-            .unionByName(residual.withColumn("_n", F.lit(False)))
-            .join(F.broadcast(idx_keys), "key", "left_anti"),
-            buckets,
-        ).withColumn("_t", F.max("_n").over(Window.partitionBy("kb", "key")))
+        new_p.withColumn("_n", F.lit(True))
+        .unionByName(old.select(*_POSTING_COLS).withColumn("_n", F.lit(False)))
+        .join(F.broadcast(in_index), "key", "left")
+        .withColumn("_f", F.count(F.lit(1)).over(Window.partitionBy("key")))
+        .withColumn("_into", F.col("_i").isNotNull() | (F.col("_f") >= floor))
     )
-    moves = F.col("_t") & (F.col("_f") >= floor)
-    to_index = new_p.join(F.broadcast(idx_keys), "key", "left_semi").unionByName(
-        frame.filter(moves).select(*_POSTING_COLS)
-    )
-    return to_index, frame.filter(~moves).select(*_POSTING_COLS, "kb"), kb_list
+    into, new = F.col("_into"), F.col("_n")
+    to_index = frame.filter(into & (new | F.col("_i").isNull())).select(*_POSTING_COLS)
+    dead = frame.filter(into & ~new).select("key").distinct()
+    return to_index, _delta(meta["residual_buckets"], dead, frame.filter(~into & new))
 
 
 def _delete_version(spark: SparkSession, base_dir: str, version: int) -> None:
     """Delete every file a commit of ``version`` writes — the index's
-    ``cv={version}`` directory and each bucket's ``cv={version}``
-    generation — plus the aborted-job ``_temporary`` debris of both
-    halves, which a later write would otherwise merge into its own
-    output. Only ever called for a version above the committed one, so
-    nothing the metadata refers to goes."""
-    fsio.delete(spark, f"{base_dir}/index/cv={version}")
-    fsio.delete(spark, f"{base_dir}/index/_temporary")
+    and the delta's ``cv={version}`` directories and each bucket's
+    ``cv={version}`` generation — plus the aborted-job ``_temporary``
+    debris of all three, which a later write would otherwise merge into
+    its own output. Only ever called for a version above the committed
+    one, so nothing the metadata refers to goes."""
+    for half in ("index", "delta"):
+        fsio.delete(spark, f"{base_dir}/{half}/cv={version}")
+        fsio.delete(spark, f"{base_dir}/{half}/_temporary")
     for kb in fsio.listdir(spark, f"{base_dir}/residual"):
         if kb.startswith("kb="):
             fsio.delete(spark, f"{base_dir}/residual/{kb}/cv={version}")
     fsio.delete(spark, f"{base_dir}/residual/_temporary")
+
+
+def _compact(spark: SparkSession, base_dir: str, meta: dict) -> list[int]:
+    """Fold the live residual as of ``meta`` — bucket generations plus
+    live deltas, minus tombstoned keys — into generation
+    ``cv=version`` of every bucket a live delta touches, one file per
+    bucket (:func:`_bucketed`; a bucket left empty gets no directory).
+    Returns those buckets."""
+    kb_list = [
+        int(r["kb"])
+        for r in _live_deltas(spark, base_dir, meta).select("kb").distinct().collect()
+    ]
+    live = _read_store_half(spark, base_dir, meta, "residual").filter(
+        F.col("kb").isin(kb_list)
+    )
+    _bucketed(live.drop("kb"), meta["residual_buckets"]).withColumn(
+        "cv", F.lit(int(meta["version"]))
+    ).write.partitionBy("kb", "cv").mode("append").parquet(f"{base_dir}/residual")
+    return kb_list
 
 
 def _commit(spark: SparkSession, base_dir: str, meta: dict, payload: dict, plan) -> None:
@@ -781,10 +846,10 @@ def _commit(spark: SparkSession, base_dir: str, meta: dict, payload: dict, plan)
     streaming trigger and fsck's residual repair all mutate the store
     through here. ``payload`` (an append's ``tables``, a trigger's
     ``batch_id``, or nothing for a repair) rides in the claim marker.
-    ``plan()`` returns ``(to_index, rewrite, kb_list)``: the postings
-    the index gains (or None), and the new rows of the residual buckets
-    ``kb_list`` names. A commit only adds files until its commit point.
-    In order, for ``v = version + 1``:
+    ``plan()`` returns ``(to_index, delta)``: the postings the index
+    gains (or None), and the commit's residual delta (:func:`_delta`).
+    A commit only adds files until its commit point. In order, for
+    ``v = version + 1``:
 
     1. claim ``v`` (:func:`claim_commit`) with a fresh token: of any
        number of concurrent writers exactly one proceeds and the losers
@@ -793,21 +858,28 @@ def _commit(spark: SparkSession, base_dir: str, meta: dict, payload: dict, plan)
     2. delete any ``cv=v`` debris an aborted writer left
        (:func:`_delete_version`);
     3. plan;
-    4. write the index postings under ``index/cv=v`` and each touched
-       bucket's new generation under ``residual/kb=B/cv=v`` (a bucket
-       whose every key left gets generation ``v`` with no directory);
-    5. check that the claim is still this writer's
+    4. write the index postings under ``index/cv=v`` and the delta as
+       one file under ``delta/cv=v``;
+    5. compact, if this commit would otherwise leave
+       ``residual_buckets`` live deltas: fold them into new generations
+       ``residual/kb=B/cv=v`` of the buckets they touch
+       (:func:`_compact`), so every commit adds at most one bucket file
+       on average;
+    6. check that the claim is still this writer's
        (:func:`_require_live_claim`);
-    6. write the metadata — version, ``residual_gen`` and the payload's
-       log entry — in one atomic rename: the commit point;
-    7. delete the touched buckets' superseded generations.
+    7. write the metadata — version, the payload's log entry and, after
+       a compaction, ``residual_gen`` and ``delta_floor = v`` — in one
+       atomic rename: the commit point;
+    8. after a compaction, delete the superseded generations and the
+       folded deltas.
 
     No file the committed metadata refers to is deleted or renamed
     before the commit point, and readers see only committed ``cv=``
     directories, so a crash anywhere before it leaves the committed
     store intact: :func:`recover_floored_store` rolls the commit back
     by deleting ``cv=v``. A crash after it leaves only superseded
-    generations, which no reader sees and ``fsck --repair`` deletes.
+    generations and folded deltas, which no reader sees and ``fsck
+    --repair`` deletes.
     """
     version = int(meta["version"]) + 1
     token = uuid.uuid4().hex
@@ -821,23 +893,28 @@ def _commit(spark: SparkSession, base_dir: str, meta: dict, payload: dict, plan)
             "then re-read the store and retry."
         )
     _delete_version(spark, base_dir, version)
-    to_index, rewrite, kb_list = plan()
+    to_index, delta = plan()
     if to_index is not None:
         if meta["hashed_keys"]:  # hashed-layout store: keep it uniform
             to_index = to_index.withColumn("key_h", F.xxhash64("key"))
         to_index.withColumn("cv", F.lit(version)).write.partitionBy("cv").mode(
             "append"
         ).parquet(f"{base_dir}/index")
-    rewrite.withColumn("cv", F.lit(version)).write.partitionBy("kb", "cv").mode(
+    delta.coalesce(1).withColumn("cv", F.lit(version)).write.partitionBy("cv").mode(
         "append"
-    ).parquet(f"{base_dir}/residual")
-    _require_live_claim(spark, base_dir, version, token)
-    old_gen = meta["residual_gen"]
-    out = dict(
-        meta,
-        version=version,
-        residual_gen=dict(old_gen, **{str(kb): version for kb in kb_list}),
+    ).parquet(f"{base_dir}/delta")
+    out = dict(meta, version=version, delta_floor=_delta_floor(meta))
+    compacted = (
+        _compact(spark, base_dir, out)
+        if version - out["delta_floor"] >= meta["residual_buckets"]
+        else None
     )
+    if compacted is not None:
+        out["residual_gen"] = dict(
+            meta["residual_gen"], **{str(kb): version for kb in compacted}
+        )
+        out["delta_floor"] = version
+    _require_live_claim(spark, base_dir, version, token)
     if payload.get("tables"):
         out["landed_tables"] = sorted(meta["landed_tables"] + payload["tables"])
     if payload.get("batch_id") is not None:
@@ -845,8 +922,27 @@ def _commit(spark: SparkSession, base_dir: str, meta: dict, payload: dict, plan)
             set(meta.get("landed_batches", [])) | {payload["batch_id"]}
         )
     write_store_meta(spark, base_dir, out)
-    for kb in kb_list:
-        fsio.delete(spark, f"{base_dir}/residual/kb={kb}/cv={old_gen.get(str(kb), 1)}")
+    if compacted is not None:
+        _delete_folded(spark, base_dir, out)
+
+
+def _delete_folded(spark: SparkSession, base_dir: str, meta: dict) -> None:
+    """Delete what the committed ``meta`` no longer reads: residual
+    generations at or below its version that are not their bucket's
+    live one, and deltas at or below its delta floor. Files above the
+    version belong to the next commit, which deletes any debris there
+    itself."""
+    gen, version = meta["residual_gen"], int(meta["version"])
+    for kb in fsio.listdir(spark, f"{base_dir}/residual"):
+        if not kb.startswith("kb="):
+            continue
+        for cv in fsio.listdir(spark, f"{base_dir}/residual/{kb}"):
+            g = int(cv[3:]) if cv.startswith("cv=") else None
+            if g is not None and g != gen.get(kb[3:], 1) and g <= version:
+                fsio.delete(spark, f"{base_dir}/residual/{kb}/{cv}")
+    for cv in fsio.listdir(spark, f"{base_dir}/delta"):
+        if cv.startswith("cv=") and int(cv[3:]) <= _delta_floor(meta):
+            fsio.delete(spark, f"{base_dir}/delta/{cv}")
 
 
 def _require_live_claim(
@@ -882,7 +978,7 @@ def _require_live_claim(
 def recover_floored_store(spark: SparkSession, base_dir: str) -> dict:
     """Roll back an interrupted commit on a floored store (the pending
     marker :func:`pending_commit` reports): delete every ``cv={v}``
-    directory it may have written under ``index/`` and
+    directory it may have written under ``index/``, ``delta/`` and
     ``residual/kb=*/`` (:func:`_delete_version`), then release the
     claim marker so a retry can re-claim the slot. A commit adds files
     only until its metadata rename, so this restores the committed
@@ -910,17 +1006,17 @@ def fsck_floored_store(
     authoritative), and a store no code outside this module has
     touched reports all zeros. Both halves are read as of the last
     commit: the committed index directories and the live residual
-    generations.
+    (generations plus live deltas, minus tombstoned keys).
 
     Checks, each O(store) with key-level aggregates:
 
     - ``double_represented_keys`` — keys present in both halves
       (disjointness violation). With ``repair=True`` their residual
-      rows are dropped — the index side is authoritative — by writing
-      new generations of ONLY the residual buckets those keys hash to.
-      The repair is a commit like any append (:func:`_commit`, with no
-      index postings): fenced against concurrent writers and rolled
-      back by :func:`recover_floored_store` if it crashes.
+      rows are dropped — the index side is authoritative — by a delta
+      that tombstones those keys. The repair is a commit like any
+      append (:func:`_commit`, with no index postings): fenced against
+      concurrent writers and rolled back by
+      :func:`recover_floored_store` if it crashes.
     - ``subfloor_in_index`` / ``overfloor_in_residual`` — keys whose
       own-half frequency contradicts the floor. Unreachable from this
       module's code paths (reported, never auto-repaired: they imply
@@ -937,8 +1033,9 @@ def fsck_floored_store(
     - ``pending_commit`` — an unresolved claim marker (crash or
       in-flight concurrent writer). With ``repair=True`` it is rolled
       back FIRST via :func:`recover_floored_store`, superseded residual
-      generations a crash after a commit point left behind are
-      deleted, and the remaining checks run on the recovered store.
+      generations and folded deltas a crash after a compaction's commit
+      point left behind are deleted (:func:`_delete_folded`), and the
+      remaining checks run on the recovered store.
 
     Returns the counts plus ``repaired_rows`` (residual rows dropped)
     and ``recovery`` (the recovery report, when one ran).
@@ -961,19 +1058,7 @@ def fsck_floored_store(
             out["pending_commit"] = None
             meta = read_store_meta(spark, base_dir)
     if repair:
-        # Generation GC: a committed generation that is not its bucket's
-        # live one was superseded by a commit that crashed before its
-        # own cleanup. Generations above the version belong to the next
-        # commit, which deletes any debris there itself.
-        gen = meta["residual_gen"]
-        for kb in fsio.listdir(spark, f"{base_dir}/residual"):
-            if not kb.startswith("kb="):
-                continue
-            live = gen.get(kb[3:], 1)
-            for cv in fsio.listdir(spark, f"{base_dir}/residual/{kb}"):
-                g = int(cv[3:]) if cv.startswith("cv=") else None
-                if g is not None and g != live and g <= meta["version"]:
-                    fsio.delete(spark, f"{base_dir}/residual/{kb}/{cv}")
+        _delete_folded(spark, base_dir, meta)
         # Commit-marker GC: markers at or below the committed version
         # are the commit log, but pending/claim checks only ever read
         # version+1 — an unboundedly maintained store (one marker per
@@ -1016,19 +1101,13 @@ def fsck_floored_store(
     out["double_represented_keys"] = dup_keys.count()
     if not repair or out["double_represented_keys"] == 0:
         return out
-    # Drop the stale residual rows: new generations of only the buckets
-    # the double-represented keys hash to (same pruned write as an append).
-    buckets = meta["residual_buckets"]
-    bad_kb = _bucket_ids(dup_keys, buckets)
-    keep = (
-        residual.filter(F.col("kb").isin(bad_kb))
-        .join(F.broadcast(dup_keys), "key", "left_anti")
-        .drop("kb")
-    )
     out["repaired_rows"] = (
         residual.join(F.broadcast(dup_keys), "key", "left_semi").count()
     )
-    _commit(spark, base_dir, meta, {}, lambda: (None, _bucketed(keep, buckets), bad_kb))
+    # Drop the stale residual rows: tombstone their keys.
+    _commit(
+        spark, base_dir, meta, {}, lambda: (None, _delta(meta["residual_buckets"], dup_keys))
+    )
     return out
 
 

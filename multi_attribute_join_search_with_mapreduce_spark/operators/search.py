@@ -390,9 +390,19 @@ def _search_stages(
        subtree (and its shuffle) three times per query;
     7. verification rechecks the pre-join reduction at each query's own
        width (``size(_m) >= _n``) and requires every attribute among
-       the map's keys; scoring ranks column scores per ``(qid, table)``
+       the map's keys; in a batch of more than one entry, a query row
+       with a repeated value also needs ``_n`` keys of its own query's
+       key set ``_qkeys`` in the map, since ``_m`` holds every entry's
+       probed keys; scoring ranks column scores per ``(qid, table)``
        under each entry's bound ``_rank_n`` (entry ``top_n`` >
        batch-wide ``top_n`` > attribute count).
+
+    A broadcast-sized query side is planned in one partition: its
+    dedup, key distinct and rarest-key window then need no exchange,
+    the query rows stream against the broadcast key frequencies, and
+    they carry their metadata (``_attrs``, ``_rank_n``) to the probe
+    instead of joining it back on. A fact-sized query side keeps
+    AQE-chosen exchanges and joins.
     """
     _validate_top_n(top_n)
     parts = []
@@ -412,17 +422,24 @@ def _search_stages(
                 F.lit(rank_n).alias("_rank_n"),
             )
         )
+    qrows = reduce(DataFrame.unionByName, parts)
+    # A fact-sized batch degrades to AQE-chosen strategies instead of a
+    # forced broadcast.
+    hint = _hinter(qrows, broadcast_probe)
+    small = hint is F.broadcast
+    if small:
+        qrows = qrows.coalesce(1)
     # ONE dedup over the union instead of one dropDuplicates() shuffle
     # per entry. (qid, MapKey) determines every other column, so a
     # full-row dedup keeps the same rows as a (qid, MapKey) subset dedup
     # without the subset form's first() aggregates, which cost a batch
     # of one extra Spark jobs.
-    qrows = reduce(DataFrame.unionByName, parts).dropDuplicates()
-    melted = qrows.select("qid", "MapKey", "_n", F.explode("_attrs").alias("key"))
+    qrows = qrows.dropDuplicates()
+    carried = ("_n", "_attrs", "_rank_n") if small else ()
+    melted = qrows.select(
+        "qid", "MapKey", *(carried or ("_n",)), F.explode("_attrs").alias("key")
+    )
     keys = melted.select("key").distinct()
-    # A fact-sized batch degrades to AQE-chosen strategies instead of a
-    # forced broadcast.
-    hint = _hinter(qrows, broadcast_probe)
 
     probed = _probe_index(postings, keys, hint)
 
@@ -430,7 +447,9 @@ def _search_stages(
     # is persisted, so this branch is a cache scan + one small shuffle
     # on key — it shares nothing heavy with the match pipeline below.
     freq = probed.groupBy("key").agg(F.count(F.lit(1)).alias("_freq"))
-    with_freq = freq.join(hint(melted), "key")
+    with_freq = (
+        F.broadcast(freq).join(melted, "key") if small else freq.join(melted, "key")
+    )
     w_q = Window.partitionBy("qid", "MapKey")
     rarest = (
         with_freq.withColumn(
@@ -438,9 +457,21 @@ def _search_stages(
         )
         .withColumn("_n_present", F.count(F.lit(1)).over(w_q))
         .filter((F.col("_rn") == 1) & (F.col("_n_present") == F.col("_n")))
-        .select("qid", "MapKey", F.col("key").alias("probe_key"))
+        .select("qid", "MapKey", F.col("key").alias("probe_key"), *carried)
     )
-    probe = rarest.join(qrows, ["qid", "MapKey"])
+    probe = rarest if small else rarest.join(qrows, ["qid", "MapKey"])
+    own_keys = F.lit(True)
+    if len(entries) > 1:
+        # Only a row with a repeated value can pass the checks below on
+        # a batch-mate's key, so only such rows carry their key set.
+        qkeys = melted.groupBy("qid").agg(F.collect_set("key").alias("_qkeys"))
+        probe = probe.join(hint(qkeys), "qid").withColumn(
+            "_qkeys",
+            F.when(F.size(F.array_distinct("_attrs")) < F.col("_n"), F.col("_qkeys")),
+        )
+        own_keys = F.col("_qkeys").isNull() | (
+            F.size(F.array_intersect(F.map_keys("_m"), "_qkeys")) >= F.col("_n")
+        )
 
     # THE (table,row) shuffle — the only fact-sized exchange in the
     # pipeline. Dedup (min column per key) and the per-row key->column
@@ -472,6 +503,7 @@ def _search_stages(
     verified = hits.filter(
         (F.size("_m") >= F.col("_n"))
         & (F.size(F.array_except("_attrs", F.map_keys("_m"))) == 0)
+        & own_keys
     )
 
     matched = verified.select(
@@ -492,7 +524,7 @@ def _search_stages(
         .filter(F.col("_rn") <= F.col("_rank_n"))
         .drop("_rn", "_rank_n")
     )
-    return melted, deduped, matched, top_cols
+    return melted.select("qid", "MapKey", "_n", "key"), deduped, matched, top_cols
 
 
 def multi_attribute_join_search_batch(

@@ -1249,8 +1249,9 @@ def stream_floored_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``foreachBatch`` loop lands each batch's postings through
     `append_floored_postings` — keys cross the floor as batches
     accumulate (a key below the floor in every single batch still
-    surfaces once its lake-wide frequency reaches it), only the touched
-    residual buckets get a new generation per trigger, and the index is
+    surfaces once its lake-wide frequency reaches it), each trigger adds
+    one residual delta file (every ``residual_buckets``-th trigger also
+    compacts the deltas into bucket generations), and the index is
     never rebuilt or rescanned.
 
     The gate is the strongest available: the lake-wide search over the

@@ -219,10 +219,14 @@ def test_append_repairs_partial_failure_double_representation(spark, sf_dir):
     """Partial-failure repair: a key left in BOTH halves by an
     interrupted append (index append done, residual rewrite not) must
     not double-count on the next append that touches it — its index
-    rows win and the stale residual rows are dropped by the bucket
-    rewrite. Simulated by re-writing a crossing key's postings back
-    into the residual store after a successful append."""
-    from multi_attribute_join_search_with_mapreduce_spark.index import TableSpec
+    rows win and the append's delta tombstones the stale residual rows.
+    Simulated by re-writing a crossing key's postings back into the
+    residual store after a successful append; fsck reports the key
+    before the append and not after it."""
+    from multi_attribute_join_search_with_mapreduce_spark.index import (
+        TableSpec,
+        fsck_floored_store,
+    )
 
     lake = os.path.join(scratch_dir("majs_floored_repair_"), "lake")
     os.makedirs(lake)
@@ -245,16 +249,19 @@ def test_append_repairs_partial_failure_double_representation(spark, sf_dir):
     stale = index.filter(F.col("key") == "x")
     assert stale.count() > 0
     plant_residual_rows(spark, base, stale)
+    assert fsck_floored_store(spark, base)["double_represented_keys"] == 1
     append_floored_index(spark, lake, base, (s1,))
     got = read_floored_index(spark, base)
     want = build_posting_index(spark, lake, (s0, s1), min_key_freq=FLOOR)
     _assert_same_rows(got, want)
-    # the stale residual rows of touched keys were dropped, not re-filed
+    # the stale residual rows of touched keys were dropped, not re-filed:
+    # the append's delta tombstones "x", so fsck no longer reports it
     residual = _residual(spark, base)
     assert (
         got.select("key").join(residual.select("key"), "key", "left_semi").count()
         == 0
     )
+    assert fsck_floored_store(spark, base)["double_represented_keys"] == 0
 
 
 def test_append_raises_on_corrupt_index_not_empty(spark, sf_dir, tmp_path):
@@ -308,10 +315,11 @@ def test_empty_hashed_store_stays_hashed_via_meta(spark):
 
 
 def test_residual_rewrite_touches_only_new_key_buckets(spark, sf_dir):
-    """The append's residual rewrite must be partition-pruned: buckets
-    none of the new keys hash to keep their files byte-identical (same
-    names/sizes/mtimes). Appending `nation` (25 keys) against 64
-    buckets leaves most buckets untouched."""
+    """An append that does not compact writes one residual delta and no
+    bucket: buckets none of the new keys hash to keep their files
+    byte-identical (same names/sizes/mtimes), and so do the buckets they
+    do hash to. Appending `nation` (25 keys) against 64 buckets is the
+    store's first commit, far from the 64th that compacts."""
     buckets = 64
     base = os.path.join(scratch_dir("majs_floored3_"), "store")
     initial = tuple(s for s in LAKE_TABLES if s.name != "nation")
@@ -352,6 +360,7 @@ def test_residual_rewrite_touches_only_new_key_buckets(spark, sf_dir):
     assert untouched_before, "test needs untouched buckets to be meaningful"
     for d, v in untouched_before.items():
         assert after.get(d) == v, f"untouched residual bucket {d} was rewritten"
+    assert after == before, "a non-compacting append rewrote a bucket"
     # and the maintained index is still exact
     _assert_same_rows(
         read_floored_index(spark, base),
@@ -544,14 +553,20 @@ def _store_rows(spark, base):
 
 def _superseded(spark, base):
     """Residual generation directories on disk that are not their
-    bucket's live generation."""
-    gen = read_store_meta(spark, base)["residual_gen"]
-    root = f"{base}/residual"
+    bucket's live generation, and delta directories at or below the
+    delta floor (folded into the generations)."""
+    meta = read_store_meta(spark, base)
+    gen, root = meta["residual_gen"], f"{base}/residual"
+    delta = f"{base}/delta"
     return [
         f"{kb}/{cv}"
         for kb in os.listdir(root) if kb.startswith("kb=")
         for cv in os.listdir(os.path.join(root, kb))
         if cv.startswith("cv=") and int(cv[3:]) != gen.get(kb[3:], 1)
+    ] + [
+        f"delta/{cv}"
+        for cv in (os.listdir(delta) if os.path.isdir(delta) else [])
+        if cv.startswith("cv=") and int(cv[3:]) <= meta.get("delta_floor", meta["version"])
     ]
 
 
@@ -617,10 +632,14 @@ def _points(calls):
     return [i for i in range(len(calls)) if i == 0 or step[i] != step[i - 1]]
 
 
-def _crash_points(spark, monkeypatch, writer):
+def _crash_points(spark, monkeypatch, writer, buckets):
     """Build a small store and a commit to crash in it: a table append
     (``writer="table_append"``) or the residual repair of ``fsck
-    --repair`` (``"fsck_repair"``). The crash points are every parquet
+    --repair`` (``"fsck_repair"``). With ``buckets=4`` the commit only
+    writes its delta; with ``buckets=1`` it is the store's first
+    compacting commit, which also folds the delta into a new bucket
+    generation and, after its commit point, deletes the superseded
+    generation and the folded delta. The crash points are every parquet
     write and every fsio mutation after the commit's claim, consecutive
     fsio calls of one kind counted once. Returns a namespace with
     ``run(base)`` (the commit), ``crash_at(i)`` (a fresh copy of the
@@ -634,7 +653,7 @@ def _crash_points(spark, monkeypatch, writer):
     lake, specs = _mini_lake(spark, "majs_crash_sweep_")
     root = scratch_dir("majs_crash_sweep_")
     built = os.path.join(root, "built")
-    write_floored_index(spark, lake, built, specs[:1], FLOOR, residual_buckets=4)
+    write_floored_index(spark, lake, built, specs[:1], FLOOR, residual_buckets=buckets)
     if writer == "table_append":
         def run(base):
             append_floored_index(spark, lake, base, (specs[1],))
@@ -681,42 +700,46 @@ def _crash_points(spark, monkeypatch, writer):
 
 
 def test_crash_before_stage_complete_rolls_back(spark, monkeypatch):
-    """Crash a table append just before each of its writes up to and
-    including its commit point (the metadata write). A search still
-    reads the committed index; recover_floored_store rolls the commit
-    back so that index and live residual equal the pre-commit store and
-    no generation of the crashed commit is left on disk, so a retry
-    equals the rebuild."""
+    """Crash a table append — a delta commit, and a compacting one —
+    just before each of its writes up to and including its commit point
+    (the metadata write). A search still reads the committed index;
+    recover_floored_store rolls the commit back so that index and live
+    residual equal the pre-commit store and no file of the crashed
+    commit is left on disk, so a retry equals the rebuild."""
     from multi_attribute_join_search_with_mapreduce_spark.index import (
         recover_floored_store,
     )
 
-    sweep = _crash_points(spark, monkeypatch, "table_append")
-    for i in sweep.before:
-        base = sweep.crash_at(i)
-        assert _rows(read_floored_index(spark, base)) == sweep.pre[0], i
-        assert recover_floored_store(spark, base)["action"] == "rolled_back", i
-        assert _store_rows(spark, base) == sweep.pre, i
-        assert not _superseded(spark, base), i
-    # Recovery leaves the same store wherever the commit crashed, so one
-    # retry (after the last crash, the one with the most debris) stands
-    # for all.
-    sweep.run(base)
-    assert _store_rows(spark, base) == sweep.want
+    for buckets in (4, 1):
+        sweep = _crash_points(spark, monkeypatch, "table_append", buckets)
+        for i in sweep.before:
+            base = sweep.crash_at(i)
+            assert _rows(read_floored_index(spark, base)) == sweep.pre[0], (buckets, i)
+            assert recover_floored_store(spark, base)["action"] == "rolled_back", (buckets, i)
+            assert _store_rows(spark, base) == sweep.pre, (buckets, i)
+            assert not _superseded(spark, base), (buckets, i)
+            assert not [p for p in _store_files(base) if "cv=2" in p], (buckets, i)
+        # Recovery leaves the same store wherever the commit crashed, so
+        # one retry (after the last crash, the one with the most debris)
+        # stands for all.
+        sweep.run(base)
+        assert _store_rows(spark, base) == sweep.want, buckets
 
 
 def test_crash_mid_swap_rolls_forward(spark, monkeypatch):
-    """Crash a table append just before each of its writes after its
-    commit point, while it deletes the superseded residual generations.
-    The commit stands: the store already equals the rebuild, recovery
-    has nothing to do, and ``fsck --repair`` deletes the superseded
-    generations left on disk."""
+    """Crash a compacting table append just before each of its writes
+    after its commit point, while it deletes the superseded residual
+    generation and the folded delta. The commit stands: the store
+    already equals the rebuild, recovery has nothing to do, and ``fsck
+    --repair`` deletes what is left on disk. A delta commit has no write
+    after its commit point."""
     from multi_attribute_join_search_with_mapreduce_spark.index import (
         fsck_floored_store,
         recover_floored_store,
     )
 
-    sweep = _crash_points(spark, monkeypatch, "table_append")
+    assert not _crash_points(spark, monkeypatch, "table_append", 4).after
+    sweep = _crash_points(spark, monkeypatch, "table_append", 1)
     assert sweep.after
     for i in sweep.after:
         base = sweep.crash_at(i)
@@ -730,16 +753,17 @@ def test_crash_mid_swap_rolls_forward(spark, monkeypatch):
 
 
 def test_fsck_repair_crash_mid_swap_rolls_forward(spark, monkeypatch):
-    """Crash the residual repair of ``fsck --repair`` just before each of
-    its writes after its commit point. The repair stands: no posting is
-    lost, recovery has nothing to do, and a second ``fsck --repair``
-    deletes the superseded generations left on disk."""
+    """Crash the residual repair of ``fsck --repair``, as a compacting
+    commit, just before each of its writes after its commit point. The
+    repair stands: no posting is lost, recovery has nothing to do, and a
+    second ``fsck --repair`` deletes the superseded generation and the
+    folded delta left on disk."""
     from multi_attribute_join_search_with_mapreduce_spark.index import (
         fsck_floored_store,
         recover_floored_store,
     )
 
-    sweep = _crash_points(spark, monkeypatch, "fsck_repair")
+    sweep = _crash_points(spark, monkeypatch, "fsck_repair", 1)
     assert sweep.after
     for i in sweep.after:
         base = sweep.crash_at(i)
@@ -753,16 +777,17 @@ def test_fsck_repair_crash_mid_swap_rolls_forward(spark, monkeypatch):
 
 
 def test_fsck_repair_gcs_stage_debris(spark, monkeypatch):
-    """Crash the residual repair of ``fsck --repair`` just before each of
-    its writes up to and including its commit point. A search still
-    reads the committed index. The next ``fsck --repair`` rolls the
-    crashed commit back, deletes every generation it had written, and
-    then repairs the store to equal the rebuild."""
+    """Crash the residual repair of ``fsck --repair`` (a delta commit
+    that tombstones the double-represented key) just before each of its
+    writes up to and including its commit point. A search still reads
+    the committed index. The next ``fsck --repair`` rolls the crashed
+    commit back, deletes every file it had written, and then repairs
+    the store to equal the rebuild."""
     from multi_attribute_join_search_with_mapreduce_spark.index import (
         fsck_floored_store,
     )
 
-    sweep = _crash_points(spark, monkeypatch, "fsck_repair")
+    sweep = _crash_points(spark, monkeypatch, "fsck_repair", 4)
     for i in sweep.before:
         base = sweep.crash_at(i)
         assert _rows(read_floored_index(spark, base)) == sweep.pre[0], i
@@ -1142,37 +1167,43 @@ def test_search_never_sees_uncommitted_postings(spark):
 
 def test_append_never_moves_untouched_key(spark):
     """Only a key the append touches can cross the floor. An over-floor
-    key planted in a bucket the append rewrites (external damage fsck
-    reports as ``overfloor_in_residual``) stays in the residual half,
-    carried over with its bucket, and fsck still reports it."""
+    key planted in the residual (external damage fsck reports as
+    ``overfloor_in_residual``) stays in the residual half — beside the
+    append's delta, or carried over with its bucket when the append
+    compacts (one bucket: the append is the store's first compacting
+    commit) — and fsck still reports it."""
     from multi_attribute_join_search_with_mapreduce_spark.index import (
         fsck_floored_store,
     )
 
     lake, specs = _mini_lake(spark, "majs_untouched_")
-    base = os.path.join(scratch_dir("majs_untouched_"), "store")
-    # one bucket: every append touches the planted key's bucket
-    write_floored_index(spark, lake, base, specs[:1], FLOOR, residual_buckets=1)
-    plant_residual_rows(spark, base, spark.createDataFrame(
-        [("planted", 9, 0, 1), ("planted", 9, 0, 2)],
-        "key STRING, `table` INT, `column` INT, `row` BIGINT",
-    ))
-    assert fsck_floored_store(spark, base)["overfloor_in_residual"] == 1
-    append_floored_index(spark, lake, base, (specs[1],))
-    assert read_floored_index(spark, base).filter(F.col("key") == "planted").count() == 0
-    residual = _residual(spark, base)
-    assert residual.filter(F.col("key") == "planted").count() == 2
-    assert fsck_floored_store(spark, base)["overfloor_in_residual"] == 1
-    _assert_same_rows(
-        read_floored_index(spark, base),
-        build_posting_index(spark, lake, specs[:2], min_key_freq=FLOOR),
-    )
+    for buckets in (4, 1):
+        base = os.path.join(scratch_dir("majs_untouched_"), "store")
+        write_floored_index(spark, lake, base, specs[:1], FLOOR, residual_buckets=buckets)
+        plant_residual_rows(spark, base, spark.createDataFrame(
+            [("planted", 9, 0, 1), ("planted", 9, 0, 2)],
+            "key STRING, `table` INT, `column` INT, `row` BIGINT",
+        ))
+        assert fsck_floored_store(spark, base)["overfloor_in_residual"] == 1
+        append_floored_index(spark, lake, base, (specs[1],))
+        assert read_store_meta(spark, base)["delta_floor"] == (2 if buckets == 1 else 1)
+        assert read_floored_index(spark, base).filter(F.col("key") == "planted").count() == 0
+        residual = _residual(spark, base)
+        assert residual.filter(F.col("key") == "planted").count() == 2, buckets
+        assert fsck_floored_store(spark, base)["overfloor_in_residual"] == 1, buckets
+        _assert_same_rows(
+            read_floored_index(spark, base),
+            build_posting_index(spark, lake, specs[:2], min_key_freq=FLOOR),
+        )
 
 
 def test_one_residual_file_per_bucket(spark):
-    """Every residual writer leaves one parquet file per bucket: the
-    build, an append (whose rewrite unions carried-over and new rows),
-    and the ``fsck --repair`` rewrite."""
+    """Every residual writer leaves one parquet file per bucket or per
+    commit: the build writes one file per bucket; an append and the
+    ``fsck --repair`` that does not compact each add exactly one file,
+    under ``delta/cv=v``, and none under ``residual/kb=*``; the
+    ``residual_buckets``-th commit compacts, leaving one file per bucket
+    and no live delta, and the store still equals the rebuild."""
     from multi_attribute_join_search_with_mapreduce_spark.index import (
         TableSpec,
         fsck_floored_store,
@@ -1182,7 +1213,8 @@ def test_one_residual_file_per_bucket(spark):
     lake = os.path.join(scratch_dir("majs_one_file_"), "lake")
     os.makedirs(lake)
     # "x" twice (index) and singletons in every bucket (residual); t1
-    # repeats half of t0's singletons (they cross) and adds new ones
+    # repeats half of t0's singletons (they cross) and adds new ones;
+    # t2 and t3 land one new singleton each
     spark.createDataFrame(
         [(1, "x"), (2, "x")] + [(i, f"k{i}") for i in range(3, 203)], ["pk", "s0"]
     ).write.parquet(f"{lake}/t0.parquet")
@@ -1190,25 +1222,81 @@ def test_one_residual_file_per_bucket(spark):
         [(i, f"k{i}") for i in range(3, 103)] + [(i, f"n{i}") for i in range(103, 303)],
         ["pk", "s0"],
     ).write.parquet(f"{lake}/t1.parquet")
-    s0, s1 = TableSpec("t0", 1, "pk", ("s0",)), TableSpec("t1", 2, "pk", ("s0",))
+    for t in (2, 3):
+        spark.createDataFrame([(1, f"t{t}")], ["pk", "s0"]).write.parquet(
+            f"{lake}/t{t}.parquet"
+        )
+    specs = tuple(TableSpec(f"t{t}", t + 1, "pk", ("s0",)) for t in range(4))
     base = os.path.join(scratch_dir("majs_one_file_"), "store")
 
-    def files_per_bucket():
-        """Parquet files per bucket, over every generation on disk."""
-        root = f"{base}/residual"
-        return {
-            d: sum(1 for _dir, _sub, names in os.walk(os.path.join(root, d))
-                   for f in names if f.endswith(".parquet") and not f.startswith("."))
-            for d in os.listdir(root) if d.startswith("kb=")
-        }
+    def files():
+        """Parquet files per bucket, over every generation on disk, and
+        per delta directory."""
+        out = {}
+        for half in ("residual", "delta"):
+            root = f"{base}/{half}"
+            for d in (os.listdir(root) if os.path.isdir(root) else []):
+                if d.startswith(("kb=", "cv=")):
+                    out[f"{half}/{d}"] = sum(
+                        1 for _dir, _sub, names in os.walk(os.path.join(root, d))
+                        for f in names if f.endswith(".parquet") and not f.startswith(".")
+                    )
+        return out
 
-    write_floored_index(spark, lake, base, (s0,), FLOOR, residual_buckets=buckets)
-    assert files_per_bucket() == {f"kb={kb}": 1 for kb in range(buckets)}
-    append_floored_index(spark, lake, base, (s1,))
-    assert files_per_bucket() == {f"kb={kb}": 1 for kb in range(buckets)}
-    _store_equals_rebuild(spark, lake, base, (s0, s1))
-    # plant a double-represented key; the repair rewrites its bucket
+    write_floored_index(spark, lake, base, specs[:1], FLOOR, residual_buckets=buckets)
+    per_bucket = {f"residual/kb={kb}": 1 for kb in range(buckets)}
+    assert files() == per_bucket
+    append_floored_index(spark, lake, base, specs[1:2])
+    assert files() == dict(per_bucket, **{"delta/cv=2": 1})
+    _store_equals_rebuild(spark, lake, base, specs[:2])
+    # plant a double-represented key; the repair's delta tombstones it
+    # and leaves the planted files to the compaction
     plant_residual_rows(spark, base, read_floored_index(spark, base).filter(F.col("key") == "x"))
+    planted = files()
     assert fsck_floored_store(spark, base, repair=True)["repaired_rows"] == 2
-    assert files_per_bucket() == {f"kb={kb}": 1 for kb in range(buckets)}
-    _store_equals_rebuild(spark, lake, base, (s0, s1))
+    assert files() == dict(planted, **{"delta/cv=3": 1})
+    _store_equals_rebuild(spark, lake, base, specs[:2])
+    append_floored_index(spark, lake, base, specs[2:3])
+    assert len(files()) == buckets + 3
+    # v5 is the 4th commit since the build: it compacts
+    append_floored_index(spark, lake, base, specs[3:4])
+    assert read_store_meta(spark, base)["delta_floor"] == 5
+    assert files() == per_bucket
+    _store_equals_rebuild(spark, lake, base, specs)
+    assert fsck_floored_store(spark, base) == {
+        "double_represented_keys": 0, "subfloor_in_index": 0,
+        "overfloor_in_residual": 0, "duplicate_postings": 0,
+        "pending_commit": None, "recovery": None, "repaired_rows": 0,
+    }
+
+
+def test_parent_layout_store_appends_without_rebuild(spark):
+    """A store written before residual deltas existed has no ``delta/``
+    and records no ``delta_floor``: it reads as fully folded, and
+    appends land on it without a rebuild, through a delta commit and
+    then a compaction. A fresh build leaves exactly that layout; here it
+    is at version 2 with a live generation 2, as the copy-on-write
+    protocol left its stores."""
+    import shutil
+
+    from multi_attribute_join_search_with_mapreduce_spark.index import write_store_meta
+
+    lake, specs = _mini_lake(spark, "majs_parent_layout_")
+    base = os.path.join(scratch_dir("majs_parent_layout_"), "store")
+    write_floored_index(spark, lake, base, specs[:1], FLOOR, residual_buckets=2)
+    meta = read_store_meta(spark, base)
+    assert "delta_floor" not in meta and not os.path.exists(f"{base}/delta")
+    for kb in os.listdir(f"{base}/residual"):
+        if kb.startswith("kb="):
+            shutil.move(f"{base}/residual/{kb}/cv=1", f"{base}/residual/{kb}/cv=2")
+            meta["residual_gen"][kb[3:]] = 2
+    write_store_meta(spark, base, dict(meta, version=2))
+    pre = _store_rows(spark, base)
+    append_floored_index(spark, lake, base, specs[1:2])  # v3: a delta
+    assert read_store_meta(spark, base)["delta_floor"] == 2
+    assert os.listdir(f"{base}/delta") and _store_rows(spark, base) != pre
+    _store_equals_rebuild(spark, lake, base, specs[:2])
+    append_floored_index(spark, lake, base, specs[2:3])  # v4: compacts
+    assert read_store_meta(spark, base)["delta_floor"] == 4
+    assert not _superseded(spark, base)
+    _store_equals_rebuild(spark, lake, base, specs)

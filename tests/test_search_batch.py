@@ -299,6 +299,25 @@ def test_mixed_width_batch_keeps_each_querys_own_reduction(spark):
     assert got == {("one", r.table, r.join_score) for r in one.collect()} != set()
 
 
+def test_batch_mate_key_does_not_complete_repeated_value_row(spark):
+    """A (k, k) query row needs two distinct keys of its OWN query in a
+    lake row. Lake row 11 holds k and z; z is only a batch-mate's key,
+    so the 2-attribute query matches nothing in the batch, as alone."""
+    postings = spark.createDataFrame(
+        [("k", 1, 0, 10), ("k", 1, 1, 11), ("z", 1, 1, 11)],
+        "key string, table int, column int, row bigint",
+    )
+    q_kk = spark.createDataFrame([("k", "k")], "x string, y string")
+    q_z = spark.createDataFrame([("z",)], "x string")
+    single, _ = multi_attribute_join_search(postings, q_kk, ["x", "y"])
+    assert single.collect() == []
+    tables, _ = multi_attribute_join_search_batch(
+        postings, [("two", q_kk, ["x", "y"]), ("z", q_z, ["x"])]
+    )
+    got = {(r.qid, r.table, r.join_score) for r in tables.collect()}
+    assert got == {("z", 1, 1)}
+
+
 def test_verification_runs_under_whole_stage_codegen(spark, sf_dir):
     """Verification is codegen'd map-key arithmetic — no ``forall``
     higher-order function (CodegenFallback, interpreted per hit) — for

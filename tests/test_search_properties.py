@@ -13,7 +13,11 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from multi_attribute_join_search_with_mapreduce_spark.operators.search import multi_attribute_join_search
+from multi_attribute_join_search_with_mapreduce_spark.operators.search import (
+    join_search_batch_sql,
+    multi_attribute_join_search,
+    multi_attribute_join_search_batch,
+)
 
 KEYS = [f"k{i}" for i in range(8)]
 
@@ -148,3 +152,47 @@ def test_row_cell_granularity_aliases_identical(spark):
     assert base[0], "fixture produced no matches"
     for strategy, got in results.items():
         assert got == base, f"strategy {strategy} diverged"
+
+
+batch_strategy = st.lists(
+    st.integers(1, 3).flatmap(
+        lambda n: st.lists(
+            st.tuples(*[st.sampled_from(KEYS + ["zz"])] * n), min_size=1, max_size=4
+        )
+    ),
+    min_size=2,
+    max_size=4,
+)
+
+
+@settings(max_examples=3, deadline=None, suppress_health_check=list(HealthCheck))
+@given(postings=posting_strategy, queries=batch_strategy)
+def test_batch_matches_each_querys_own_oracle(spark, postings, queries):
+    """A batch of 2-4 generated queries of mixed width (1-3 attributes,
+    repeated values such as (k0, k0) included): each qid's table scores
+    equal the from-definition oracle of that query ALONE, and the batch
+    equals the DuckDB batch oracle."""
+    import duckdb
+
+    pdf = spark.createDataFrame(
+        postings, "key string, table int, column int, row bigint"
+    )
+    con = duckdb.connect()
+    con.execute('CREATE TABLE lake_postings (key VARCHAR, "table" INT, "column" INT, row BIGINT)')
+    con.executemany("INSERT INTO lake_postings VALUES (?, ?, ?, ?)", postings)
+    batch, sql_batch = [], []
+    for i, rows in enumerate(queries):
+        cols = [f"a{j}" for j in range(len(rows[0]))]
+        batch.append((f"q{i}", spark.createDataFrame(rows, ", ".join(f"{c} string" for c in cols)), cols))
+        con.execute(f"CREATE TABLE q{i} ({', '.join(f'{c} VARCHAR' for c in cols)})")
+        con.executemany(f"INSERT INTO q{i} VALUES ({', '.join('?' * len(cols))})", rows)
+        sql_batch.append((f"q{i}", f"q{i}", cols))
+    tables, _ = multi_attribute_join_search_batch(pdf, batch)
+    got = {(r.qid, r.table, r.join_score) for r in tables.collect()}
+    want = set()
+    for i, rows in enumerate(queries):
+        scores, _ = _python_oracle(postings, rows, n_attrs=len(rows[0]))
+        want |= {(f"q{i}", t, s) for t, s in scores.items() if s > 0}
+    assert got == want
+    sql = join_search_batch_sql("SELECT * FROM lake_postings", sql_batch)
+    assert got == {tuple(r) for r in con.execute(sql).fetchall()}

@@ -1,7 +1,7 @@
 """×10 floored-index maintenance probe: append vs full rebuild.
 
 The r9 floored store (`write_floored_index` + `append_floored_index`)
-claims append cost O(new postings + touched residual buckets) — i.e.
+claims append cost O(new postings + the touched keys' residual rows) — i.e.
 landing one table into an already-floored lake should cost a small
 fraction of re-flooring the whole lake. Measured here at ×10 documents
 volume (the same lake as `tools/sf1_probe_widekey.py`):
@@ -13,10 +13,12 @@ volume (the same lake as `tools/sf1_probe_widekey.py`):
    append_floored_index(documents) — the append is the number that
    matters (the initial write is paid once);
 3. equality check: maintained index == full floored rebuild (row-set);
-4. touched-bucket fraction of the residual rewrite;
+4. touched-bucket fraction: the buckets the new keys hash to (the
+   buckets the next compaction rewrites; a non-compacting append
+   rewrites none);
 5. ``residual_files``: parquet files in the maintained store's residual
-   half after the append (one per bucket when every writer partitions
-   its rows by bucket).
+   half after the append, bucket generations plus deltas (one per
+   bucket from the build, plus the append's one delta file).
 
 Working stores live under the process's scratch directory
 (``scratch.scratch_dir``, under ``$TMPDIR``) and are removed at exit.
@@ -131,7 +133,8 @@ def main() -> None:
     results["touched_bucket_fraction"] = round(touched / BUCKETS, 2)
     results["residual_files"] = sum(
         1
-        for _dirpath, _dirs, names in os.walk(f"{store}/residual")
+        for half in ("residual", "delta")
+        for _dirpath, _dirs, names in os.walk(f"{store}/{half}")
         for n in names
         if n.endswith(".parquet") and not n.startswith(".")
     )
