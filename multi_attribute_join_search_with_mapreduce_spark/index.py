@@ -762,47 +762,51 @@ def _plan_postings(
     """What landing ``new_postings`` writes, as :func:`_commit`'s plan:
     the postings the index gains and the commit's residual delta.
 
-    One pass over the touched keys (those with a new posting) alone.
-    They are broadcast to two semi-joins: the index, for the touched
-    keys it already holds, and the live residual, for the touched keys'
-    rows; no other residual row is shuffled. One frame holds the new
-    postings plus those residual rows, each flagged when the index holds
-    its key and counted per key, and it is materialized once, so both
-    writes scan it instead of recomputing it. By the store invariant a
-    touched key's count there is its lake-wide frequency.
+    One pass over the touched keys (those with a new posting) alone,
+    with one shuffle: the frame's key window. The touched keys are
+    broadcast undeduplicated, as a semi-join build side may repeat a
+    key, to two semi-joins: the index, for the touched keys it already
+    holds, and the live residual, for the touched keys' rows; no other
+    residual row is shuffled. One frame holds the new postings plus
+    those residual rows, each flagged by an existence join against the
+    index's touched keys (repeats are harmless there too) and counted
+    per key, and it is materialized once, so both writes scan it instead
+    of recomputing it. By the store invariant a touched key's count
+    there is its lake-wide frequency.
 
     A touched key ends in the index when the index already holds it or
     its count reaches the floor. Its new postings go to the index, and
     so do its residual rows if it crossed; if it had residual rows, the
-    delta tombstones it. Every other new posting is a sub-floor row of
-    the delta. Untouched keys are never read, so only a touched key can
+    delta tombstones it once, on its first row in ``_n`` order (old
+    rows sort first). Every other new posting is a sub-floor row of the
+    delta. Untouched keys are never read, so only a touched key can
     move: an over-floor key the append did not touch (external damage
     fsck reports) stays where it is. A touched key left in BOTH halves
     keeps its index rows, and its stale residual rows are tombstoned.
     """
     floor = meta["min_key_freq"]
     new_p = truncate_lineage(new_postings)
-    touched = F.broadcast(new_p.select("key").distinct())
-    in_index = (
+    touched = F.broadcast(new_p.select("key"))
+    idx_keys = F.broadcast(
         _read_store_half(spark, base_dir, meta, "index")
         .join(touched, "key", "left_semi")
         .select("key")
-        .distinct()
-        .withColumn("_i", F.lit(True))
     )
     old = _read_store_half(spark, base_dir, meta, "residual").join(
         touched, "key", "left_semi"
     )
+    per_key = Window.partitionBy("key")
     frame = truncate_lineage(
         new_p.withColumn("_n", F.lit(True))
         .unionByName(old.select(*_POSTING_COLS).withColumn("_n", F.lit(False)))
-        .join(F.broadcast(in_index), "key", "left")
-        .withColumn("_f", F.count(F.lit(1)).over(Window.partitionBy("key")))
-        .withColumn("_into", F.col("_i").isNotNull() | (F.col("_f") >= floor))
+        .withColumn("_i", F.col("key").isin(idx_keys))
+        .withColumn("_f", F.count(F.lit(1)).over(per_key))
+        .withColumn("_r", F.row_number().over(per_key.orderBy("_n")))
+        .withColumn("_into", F.col("_i") | (F.col("_f") >= floor))
     )
     into, new = F.col("_into"), F.col("_n")
-    to_index = frame.filter(into & (new | F.col("_i").isNull())).select(*_POSTING_COLS)
-    dead = frame.filter(into & ~new).select("key").distinct()
+    to_index = frame.filter(into & (new | ~F.col("_i"))).select(*_POSTING_COLS)
+    dead = frame.filter(into & ~new & (F.col("_r") == 1)).select("key")
     return to_index, _delta(meta["residual_buckets"], dead, frame.filter(~into & new))
 
 

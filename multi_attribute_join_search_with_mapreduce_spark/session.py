@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -25,6 +26,11 @@ def get_spark(
     - Arrow on (fast pandas interchange for the few Pandas-UDF paths).
     - Session timezone pinned to UTC so timestamps agree with external
       oracles (DuckDB parquet timestamps are UTC-naive).
+
+    A live session is reused, and it keeps the static confs it was
+    launched with. So an ``extra_conf`` key that is not modifiable at
+    runtime and differs from the live context's value raises
+    ``ValueError`` naming the key, instead of being dropped.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     if shuffle_partitions is None:
@@ -95,6 +101,17 @@ def get_spark(
         )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
+    live = SparkContext._active_spark_context
     spark = builder.getOrCreate()
+    if live is not None:
+        # A dropped static conf (say, the event log) would leave the
+        # caller measuring or configuring nothing without a word.
+        conf = live.getConf()
+        for k, v in (extra_conf or {}).items():
+            if not spark.conf.isModifiable(k) and conf.get(k) != str(v):
+                raise ValueError(
+                    f"get_spark: extra_conf {k}={v!r} is static and the live "
+                    f"session has {k}={conf.get(k)!r}; stop it first"
+                )
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -9,6 +9,7 @@ index == full floored rebuild after any append sequence."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -1300,3 +1301,87 @@ def test_parent_layout_store_appends_without_rebuild(spark):
     assert read_store_meta(spark, base)["delta_floor"] == 4
     assert not _superseded(spark, base)
     _store_equals_rebuild(spark, lake, base, specs)
+
+
+def test_append_plan_shuffles_only_the_key_window(spark, monkeypatch):
+    """An append's only shuffle is its frame's key window: the touched
+    keys, the index's touched keys and the tombstoned keys are never
+    deduplicated by a shuffle of their own. Pinned two ways on a hashed
+    store with a live delta: the append, run under one job group, runs
+    at most 9 Spark jobs (12 with the three dedup shuffles), and the
+    executed plan of the materialized commit frame holds exactly one
+    shuffle exchange, on ``key``."""
+    from multi_attribute_join_search_with_mapreduce_spark import index as ix
+    from tools.plan_audit import physical_node_counts
+
+    lake, specs = _mini_lake(spark, "majs_plan_jobs_")
+    base = os.path.join(scratch_dir("majs_plan_jobs_"), "store")
+    write_floored_index(spark, lake, base, specs[:1], FLOOR, residual_buckets=4, hashed_keys=True)
+    append_floored_index(spark, lake, base, specs[1:2])  # leaves a live delta
+    frames, real = [], ix.truncate_lineage
+
+    def spy(df):
+        frames.append(df)
+        return real(df)
+
+    monkeypatch.setattr(ix, "truncate_lineage", spy)
+    sc, group = spark.sparkContext, "majs_floored_append_jobs"
+    sc.setJobGroup(group, "floored append")
+    try:
+        append_floored_index(spark, lake, base, specs[2:3])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 9, sorted(jobs)
+    (frame,) = [f for f in frames if "_into" in f.columns]
+    counts = physical_node_counts(frame)
+    assert counts.get("ShuffleExchangeExec", 0) == 1, counts
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    assert set(re.findall(r"Exchange hashpartitioning\((\w+)#", plan)) == {"key"}
+    _assert_same_rows(
+        read_floored_index(spark, base).drop("key_h"),
+        build_posting_index(spark, lake, specs, min_key_freq=FLOOR),
+    )
+
+
+def test_delta_tombstones_each_dead_key_once(spark):
+    """One append in which three keys cross the floor, each with two
+    residual rows, and a key planted in both halves is touched: the
+    commit's ``delta/cv=2`` holds exactly one tombstone per dead key
+    and the one sub-floor new posting, the store equals the rebuild,
+    and fsck is clean."""
+    from multi_attribute_join_search_with_mapreduce_spark.index import (
+        TableSpec,
+        fsck_floored_store,
+    )
+
+    floor = 3
+    lake = os.path.join(scratch_dir("majs_tombs_"), "lake")
+    os.makedirs(lake)
+    spark.createDataFrame(
+        [(1, "k1"), (2, "k1"), (3, "k2"), (4, "k2"), (5, "k3"), (6, "k3"),
+         (7, "x"), (8, "x"), (9, "x")],
+        ["pk", "s0"],
+    ).write.parquet(f"{lake}/t0.parquet")
+    spark.createDataFrame(
+        [(1, "k1"), (2, "k2"), (3, "k3"), (4, "x"), (5, "solo")], ["pk", "s0"]
+    ).write.parquet(f"{lake}/t1.parquet")
+    specs = tuple(TableSpec(f"t{t}", t + 1, "pk", ("s0",)) for t in range(2))
+    base = os.path.join(scratch_dir("majs_tombs_"), "store")
+    write_floored_index(spark, lake, base, specs[:1], floor, residual_buckets=4)
+    plant_residual_rows(spark, base, read_floored_index(spark, base).filter(F.col("key") == "x"))
+    assert fsck_floored_store(spark, base)["double_represented_keys"] == 1
+    append_floored_index(spark, lake, base, specs[1:])
+    delta = spark.read.parquet(f"{base}/delta/cv=2")
+    tombs = delta.filter("tomb").groupBy("key").count()
+    assert sorted((r["key"], r["count"]) for r in tombs.collect()) == [
+        ("k1", 1), ("k2", 1), ("k3", 1), ("x", 1)
+    ]
+    assert [r["key"] for r in delta.filter(~F.col("tomb")).collect()] == ["solo"]
+    _store_equals_rebuild(spark, lake, base, specs, floor=floor)
+    assert fsck_floored_store(spark, base) == {
+        "double_represented_keys": 0, "subfloor_in_index": 0,
+        "overfloor_in_residual": 0, "duplicate_postings": 0,
+        "pending_commit": None, "recovery": None, "repaired_rows": 0,
+    }
