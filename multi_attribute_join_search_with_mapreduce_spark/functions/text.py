@@ -26,10 +26,13 @@ Deliberate divergences from the reference, documented per SURVEY.md §7:
 
 Three synchronized renderings are provided so the same spec runs as a
 Spark plan, as DuckDB oracle SQL, and as plain Python for unit tests.
-All Spark-side logic is native expressions / higher-order functions —
-JVM-side, codegen-friendly — never a row-at-a-time Python UDF (the
-reference wraps this in ``udf(...)`` at ``Par_Search.py:164-166``; that
-is its single biggest performance sink and is exactly what we avoid).
+The Spark one is Spark SQL text: ``normalize_col`` parses it into one
+expression, and the ``spark.sql`` surface registers it as a SQL
+function. All Spark-side logic is native expressions / higher-order
+functions — JVM-side, codegen-friendly — never a row-at-a-time Python
+UDF (the reference wraps this in ``udf(...)`` at
+``Par_Search.py:164-166``; that is its single biggest performance sink
+and is exactly what we avoid).
 """
 
 from __future__ import annotations
@@ -51,23 +54,20 @@ _NON_ASCII_RE = r"[^\x00-\x7F]"
 _NON_ALNUM_RE = r"[^a-z0-9]+"
 
 
-def _clean_col(col: Column) -> Column:
-    c = F.lower(col)
-    c = F.regexp_replace(c, _NON_ASCII_RE, "")
-    c = F.regexp_replace(c, _NON_ALNUM_RE, " ")
-    return F.trim(c)
+def tokenize_col(name: str) -> Column:
+    """Stopword-free token array of string column ``name``: the
+    Spark-SQL rendering (:func:`tokenize_spark_sql`) parsed once."""
+    return F.expr(tokenize_spark_sql(_quoted(name)))
 
 
-def tokenize_col(col: Column) -> Column:
-    """Stopword-free token array for a raw string column (native exprs)."""
-    toks = F.split(_clean_col(col), " ")
-    stop = F.array(*[F.lit(s) for s in STOPWORDS])
-    return F.filter(toks, lambda t: (t != "") & ~F.array_contains(stop, t))
+def normalize_col(name: str) -> Column:
+    """Normalized single-string key of string column ``name``: the
+    Spark-SQL rendering (:func:`normalize_spark_sql`) parsed once."""
+    return F.expr(normalize_spark_sql(_quoted(name)))
 
 
-def normalize_col(col: Column) -> Column:
-    """Normalized single-string key for a raw string column (native exprs)."""
-    return F.array_join(tokenize_col(col), " ")
+def _quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 def tokenize_sql(expr: str) -> str:
@@ -93,16 +93,23 @@ def normalize_sql(expr: str) -> str:
     )
 
 
-def normalize_spark_sql(expr: str) -> str:
-    """Spark-SQL-dialect rendering of :func:`normalize_col` (for the
-    ``spark.sql`` surface — same spec, third dialect)."""
+def tokenize_spark_sql(expr: str) -> str:
+    """Spark-SQL rendering of the token array over SQL expression
+    ``expr``; :func:`tokenize_col` and the ``spark.sql`` surface's
+    ``majs_normalize`` both run this text."""
     stop = ", ".join(f"'{s}'" for s in STOPWORDS)
-    toks = (
+    non_ascii = _NON_ASCII_RE.replace("\\", "\\\\")  # SQL literals unescape "\\"
+    return (
         "filter(split(trim(regexp_replace(regexp_replace("
-        f"lower({expr}), '[^\\\\x00-\\\\x7F]', ''), '[^a-z0-9]+', ' ')), ' '), "
+        f"lower({expr}), '{non_ascii}', ''), '{_NON_ALNUM_RE}', ' ')), ' '), "
         f"t -> t != '' AND NOT array_contains(array({stop}), t))"
     )
-    return f"array_join({toks}, ' ')"
+
+
+def normalize_spark_sql(expr: str) -> str:
+    """Spark-SQL rendering of the normalized key over SQL expression
+    ``expr`` (see :func:`tokenize_spark_sql`)."""
+    return f"array_join({tokenize_spark_sql(expr)}, ' ')"
 
 
 def normalize_py(s: str | None) -> str | None:

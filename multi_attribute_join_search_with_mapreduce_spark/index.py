@@ -109,7 +109,7 @@ def postings_from_df(df: DataFrame, spec: TableSpec) -> DataFrame:
     table contributes its postings incrementally."""
     raw = postings_for_table(df, spec)
     return raw.select(
-        normalize_col(F.col("value")).alias("key"), "table", "column", "row"
+        normalize_col("value").alias("key"), "table", "column", "row"
     ).filter(F.col("key") != "")
 
 
@@ -134,7 +134,7 @@ def build_posting_index(
     parts = [postings_for_table(load_table(spark, s.name, sf_dir), s) for s in specs]
     raw = reduce(DataFrame.unionByName, parts)
     idx = raw.select(
-        normalize_col(F.col("value")).alias("key"), "table", "column", "row"
+        normalize_col("value").alias("key"), "table", "column", "row"
     ).filter(F.col("key") != "")
     if min_key_freq > 1:
         idx = (
@@ -814,9 +814,11 @@ def _delete_version(spark: SparkSession, base_dir: str, version: int) -> None:
     """Delete every file a commit of ``version`` writes — the index's
     and the delta's ``cv={version}`` directories and each bucket's
     ``cv={version}`` generation — plus the aborted-job ``_temporary``
-    debris of all three, which a later write would otherwise merge into
-    its own output. Only ever called for a version above the committed
-    one, so nothing the metadata refers to goes."""
+    debris a partitioned write leaves under a half, which a later write
+    would otherwise merge into its own output (a commit's index and
+    delta writes keep theirs inside ``cv={version}``, but a store may
+    hold a partitioned writer's debris). Only ever called for a version
+    above the committed one, so nothing the metadata refers to goes."""
     for half in ("index", "delta"):
         fsio.delete(spark, f"{base_dir}/{half}/cv={version}")
         fsio.delete(spark, f"{base_dir}/{half}/_temporary")
@@ -898,15 +900,14 @@ def _commit(spark: SparkSession, base_dir: str, meta: dict, payload: dict, plan)
         )
     _delete_version(spark, base_dir, version)
     to_index, delta = plan()
+    # Both writes go straight into the version's directory, not through
+    # a partitionBy over F.lit(version): Spark inlines an int literal
+    # into generated code, so every commit would compile its own classes.
     if to_index is not None:
         if meta["hashed_keys"]:  # hashed-layout store: keep it uniform
             to_index = to_index.withColumn("key_h", F.xxhash64("key"))
-        to_index.withColumn("cv", F.lit(version)).write.partitionBy("cv").mode(
-            "append"
-        ).parquet(f"{base_dir}/index")
-    delta.coalesce(1).withColumn("cv", F.lit(version)).write.partitionBy("cv").mode(
-        "append"
-    ).parquet(f"{base_dir}/delta")
+        to_index.write.mode("error").parquet(f"{base_dir}/index/cv={version}")
+    delta.coalesce(1).write.mode("error").parquet(f"{base_dir}/delta/cv={version}")
     out = dict(meta, version=version, delta_floor=_delta_floor(meta))
     compacted = (
         _compact(spark, base_dir, out)

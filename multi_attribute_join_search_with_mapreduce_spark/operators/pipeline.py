@@ -138,7 +138,7 @@ def tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
     module docstring); the ranking is monotone-equivalent for fixed df.
     """
     d = load_table(spark, "documents", sf)
-    toks = d.select("doc_id", F.explode(tokenize_col(F.col("text"))).alias("term"))
+    toks = d.select("doc_id", F.explode(tokenize_col("text")).alias("term"))
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     per_term = tf.groupBy("term").agg(
         F.count(F.lit(1)).alias("df"),

@@ -167,7 +167,7 @@ def _query_rows(query_df: DataFrame, attrs: list[str], dedup: bool) -> DataFrame
     so the US-joined MapKey is injective over the normalized tuple."""
     cols = [f"_a{i}" for i in range(len(attrs))]
     norm = query_df.select(
-        *[normalize_col(F.col(a)).alias(c) for a, c in zip(attrs, cols)]
+        *[normalize_col(a).alias(c) for a, c in zip(attrs, cols)]
     )
     for c in cols:
         norm = norm.filter(F.col(c) != "")

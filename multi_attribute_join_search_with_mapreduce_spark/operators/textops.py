@@ -213,7 +213,7 @@ def doc_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
     punctuation and stopword noise) — the dedup-friendly identity."""
     d = load_table(spark, "documents", sf)
     return d.select(
-        "doc_id", F.md5(normalize_col(F.col("text"))).alias("fingerprint")
+        "doc_id", F.md5(normalize_col("text")).alias("fingerprint")
     )
 
 

@@ -14,6 +14,13 @@ import os
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
+# Compiled classes Spark's codegen cache keeps per JVM (Spark's default
+# is 100). One floored-store append plus its read-after-write search
+# uses just over 100 classes, so under the default every step evicted
+# and recompiled the last step's classes (about 6.5 ms of Janino each);
+# at this size a repeated call compiles only what its literals change.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(
     app_name: str = "multi_attribute_join_search_spark",
@@ -26,6 +33,7 @@ def get_spark(
     - Arrow on (fast pandas interchange for the few Pandas-UDF paths).
     - Session timezone pinned to UTC so timestamps agree with external
       oracles (DuckDB parquet timestamps are UTC-naive).
+    - A launched JVM caches ``CODEGEN_CACHE_ENTRIES`` compiled classes.
 
     A live session is reused, and it keeps the static confs it was
     launched with. So an ``extra_conf`` key that is not modifiable at
@@ -75,15 +83,20 @@ def get_spark(
         builder = builder.master(f"local[{cpus}]")
         # Driver heap for the single-JVM local harness. The PySpark
         # default (1g) is sized for a thin cluster driver, but in
-        # local mode the "driver" IS the executor fleet plus the
-        # codegen cache — long pytest sessions with literal-heavy
-        # plans (PQ codebooks, k-means centroid literals) exhaust it.
-        # Applies only when this call actually launches the JVM; a
-        # pre-existing session keeps its own setting (driver_sim 16g,
-        # scaling_curve 24g).
+        # local mode the "driver" IS the executor fleet: tasks, shuffle
+        # and broadcast blocks and the compiled classes all share this
+        # heap, and long pytest sessions with literal-heavy plans (PQ
+        # codebooks, k-means centroid literals) exhaust 1g. Applies
+        # only when this call actually launches the JVM; a pre-existing
+        # session keeps its own setting (driver_sim 16g, scaling_curve
+        # 24g).
         builder = builder.config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"),
+        )
+        # Static and JVM-wide like the heap, so it is set only here.
+        builder = builder.config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
         )
         # Per-process warehouse (VERDICT r8 task #5): the default
         # ``./spark-warehouse`` is shared by every process launched from

@@ -1385,3 +1385,48 @@ def test_delta_tombstones_each_dead_key_once(spark):
         "overfloor_in_residual": 0, "duplicate_postings": 0,
         "pending_commit": None, "recovery": None, "repaired_rows": 0,
     }
+
+
+def test_repeated_append_and_search_compile_at_most_one_class(spark):
+    """A land-and-read step of a shape the session already ran compiles
+    at most one class: the projection that inlines the new table's id
+    in its unpivot. ``get_spark`` sizes the codegen cache to hold every
+    class of the warm step (under Spark's default 100 entries each step
+    compiled about 100 again), and a commit writes straight into its
+    ``cv=v`` directories instead of inlining its version as a literal.
+    Counted with Spark's codegen metric around the second of two steps
+    with a live delta, on a small hashed store."""
+    from multi_attribute_join_search_with_mapreduce_spark.index import TableSpec
+    from multi_attribute_join_search_with_mapreduce_spark.operators.search import (
+        multi_attribute_join_search,
+    )
+
+    lake = os.path.join(scratch_dir("majs_codegen_"), "lake")
+    os.makedirs(lake)
+    for t in range(4):
+        spark.createDataFrame(
+            [(i, f"k{(i + t) % 9}", f"c{i % 3}") for i in range(12)], ["pk", "s0", "s1"]
+        ).write.parquet(f"{lake}/t{t}.parquet")
+    q = spark.createDataFrame([("k1", "c1"), ("k2", "c2"), ("k4", "c1")], ["s0", "s1"])
+    specs = tuple(TableSpec(f"t{t}", t + 1, "pk", ("s0", "s1")) for t in range(4))
+    base = os.path.join(scratch_dir("majs_codegen_"), "store")
+    write_floored_index(spark, lake, base, specs[:1], 3, residual_buckets=4, hashed_keys=True)
+    append_floored_index(spark, lake, base, specs[1:2])  # leaves a live delta
+    compiles = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def step(spec):
+        append_floored_index(spark, lake, base, (spec,))
+        tables, columns = multi_attribute_join_search(
+            read_floored_index(spark, base), q, ["s0", "s1"]
+        )
+        return tables.collect(), columns.collect()
+
+    step(specs[2])
+    before = compiles.METRIC_COMPILATION_TIME().getCount()
+    tables, _columns = step(specs[3])
+    assert compiles.METRIC_COMPILATION_TIME().getCount() - before <= 1
+    assert tables
+    _assert_same_rows(
+        read_floored_index(spark, base).drop("key_h"),
+        build_posting_index(spark, lake, specs, min_key_freq=3),
+    )

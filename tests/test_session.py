@@ -30,3 +30,17 @@ def test_get_spark_refuses_static_conf_the_live_session_lacks(spark):
     )
     assert same is spark
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+
+
+def test_get_spark_launches_with_the_sized_codegen_cache(spark):
+    """The suite's session was launched by ``get_spark``, with a codegen
+    cache larger than Spark's default 100 classes, which one append
+    plus search outgrows."""
+    from multi_attribute_join_search_with_mapreduce_spark.session import (
+        CODEGEN_CACHE_ENTRIES,
+    )
+
+    assert CODEGEN_CACHE_ENTRIES > 100
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert spark.sparkContext.getConf().get(key) == str(CODEGEN_CACHE_ENTRIES)
+    assert spark.conf.get(key) == str(CODEGEN_CACHE_ENTRIES)

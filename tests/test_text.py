@@ -46,7 +46,7 @@ def test_normalize_py_idempotent():
 
 def test_normalize_spark_matches_python(spark):
     df = spark.createDataFrame([(r,) for r, _ in CORPUS], ["raw"])
-    out = df.select("raw", normalize_col(F.col("raw")).alias("norm")).collect()
+    out = df.select("raw", normalize_col("raw").alias("norm")).collect()
     for row in out:
         assert row["norm"] == normalize_py(row["raw"]), row["raw"]
 
@@ -62,7 +62,7 @@ def test_normalize_duckdb_matches_python():
 def test_normalize_null_passthrough(spark):
     assert normalize_py(None) is None
     df = spark.createDataFrame([(None,)], "raw string")
-    assert df.select(normalize_col(F.col("raw")).alias("n")).first()["n"] is None
+    assert df.select(normalize_col("raw").alias("n")).first()["n"] is None
 
 
 def test_near_dup_delta_completes_the_full_build(spark, sf_dir):

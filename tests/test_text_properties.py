@@ -12,7 +12,6 @@ from __future__ import annotations
 import duckdb
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from multi_attribute_join_search_with_mapreduce_spark.functions.text import (
     STOPWORDS,
@@ -53,7 +52,7 @@ def test_spark_and_duckdb_agree_with_python_on_random_strings(spark):
     samples = [s.replace("\x00", "") for s in samples]  # NUL: JVM/duck disagree on storage, not spec
     df = spark.createDataFrame([(s,) for s in samples], "raw string")
     got_spark = [
-        r["n"] for r in df.select(normalize_col(F.col("raw")).alias("n")).collect()
+        r["n"] for r in df.select(normalize_col("raw").alias("n")).collect()
     ]
     # spark.sql dialect (the majs_normalize SQL UDF body)
     got_spark_sql = [
